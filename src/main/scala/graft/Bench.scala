@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
+
+import graft.streaming.{DedupStream, EventStream}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
@@ -17,6 +20,10 @@ import org.apache.spark.sql.SparkSession
   *     is re-run once and the MINIMUM is recorded (noise only ever adds
   *     time, so min-of-2 on the expensive tail — which carries almost all
   *     of the total — strips transient contention at ~20% extra runtime).
+  *
+  * A query or streaming leg that throws has no timing: it is left out of
+  * `value` and `nq`, named under `failed` on the total line and in
+  * bench_detail.json, and the run exits 1 after printing.
   */
 object Bench {
   final val GcEvery = 15
@@ -31,11 +38,13 @@ object Bench {
     * ratio). */
   final val ControlQuery = "q1_pricing_summary"
 
+  /** Wall seconds of one noop-sink run of `fn`, or None if it threw. */
   private def timeQuery(spark: SparkSession, sfDir: String, name: String,
-                        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+                        fn: (SparkSession, String) => DataFrame): Option[Double] = {
     val t0 = System.nanoTime()
-    try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
+    val ok =
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
     val dt = (System.nanoTime() - t0) / 1e9
     // queries may persist reused intermediates; drop them synchronously
     // (and let GC settle) so one query's cache/garbage never skews the
@@ -54,20 +63,12 @@ object Bench {
       try r.unpersist(blocking = true)
       catch { case _: org.apache.spark.SparkException => () })
     if (persisted.nonEmpty) System.gc()
-    dt
+    if (ok) Some(dt) else None
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.mergeSchema", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen/file-listing paths once so per-query numbers
     // measure steady-state execution, not first-touch JIT.
@@ -75,8 +76,7 @@ object Bench {
     // also touch every BENCH-dir table once (file listing + footer decode
     // + scan JIT happen per directory): without this the alphabetically
     // first query absorbs the whole first-touch cost of the sf dir.
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings"))
+    for (t <- Tables.All)
       try spark.read.parquet(s"$sfDir/$t.parquet")
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => System.err.println(s"[bench] warm $t: $e") }
@@ -97,7 +97,7 @@ object Bench {
     // is still measured inside the sweep like every other query).
     def controlTime(): Double =
       SparkEntry.queries.get(ControlQuery)
-        .map(fn => timeQuery(spark, sfDir, ControlQuery, fn)).getOrElse(0.0)
+        .flatMap(fn => timeQuery(spark, sfDir, ControlQuery, fn)).getOrElse(0.0)
     // warm the control itself once, untimed: the head sample otherwise
     // carries q1's first-touch JIT/codegen cost (~2× at small SF) and
     // reads as a phantom burst
@@ -121,14 +121,17 @@ object Bench {
     // after the whole suite has run once, when accumulated JVM garbage is
     // at its peak — collect before each re-timing so the minimum measures
     // the query, not 130 predecessors' heap debt.
+    // A query that fails on either run is failed.
     val byName = ordered.toMap
-    val results = first.map { case (name, t1) =>
-      if (t1 > RerunThresholdSec) {
+    val outcomes = first.map {
+      case (name, Some(t1)) if t1 > RerunThresholdSec =>
         System.gc()
-        name -> math.min(t1, timeQuery(spark, sfDir, name, byName(name)))
-      } else name -> t1
+        name -> timeQuery(spark, sfDir, name, byName(name)).map(math.min(t1, _))
+      case other => other
     }
-    val reran = first.count(_._2 > RerunThresholdSec)
+    val results = outcomes.collect { case (name, Some(t)) => name -> t }
+    val failedQueries = outcomes.collect { case (name, None) => name }
+    val reran = first.count(_._2.exists(_ > RerunThresholdSec))
     // tail control AFTER the rerun pass so the pair brackets every timed
     // second the artifact reports
     val ctrlTail = if (only.isEmpty) { System.gc(); controlTime() } else 0.0
@@ -163,6 +166,26 @@ object Bench {
     def warm(label: String)(body: => Unit): Unit =
       try body
       catch { case e: Throwable => System.err.println(s"[bench] warm $label: $e") }
+    // a session on the RocksDB state store, as the stateful legs run.
+    // trackTotalNumberOfRows=false is a metrics-only knob: it skips
+    // RocksDB's read-before-write row counting; measured ~10-15% off the
+    // warm stream_neardup wall (round 11 — see docs/BENCH_NOTES.md)
+    def rocksSession(): SparkSession = {
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      s2.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+      s2
+    }
+    // the documents table of `dir` as a file stream. Driver testdata ships
+    // documents.parquet as a single FILE (stream the parent dir with a
+    // glob); ScaleGen writes a directory
+    def docStream(s2: SparkSession, dir: String): DataFrame = {
+      val docPath = new java.io.File(s"$dir/documents.parquet")
+      val reader = s2.readStream.schema("doc_id LONG, text STRING")
+      if (docPath.isDirectory) reader.parquet(docPath.toString)
+      else reader.option("pathGlobFilter", "documents.parquet").parquet(dir)
+    }
     if (only.isEmpty) {
       import spark.implicits._
       val wdirPath = java.nio.file.Files.createTempDirectory("graft_stream_warm")
@@ -170,14 +193,10 @@ object Bench {
       warm("neardup") {
         (0 until 24).map(i => (i.toLong, s"warm doc $i alpha beta gamma delta " * 4))
           .toDF("doc_id", "text")
-          .coalesce(1).write.mode("overwrite").parquet(s"$wdir/docs")
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val wdocs = s2.readStream.schema("doc_id LONG, text STRING").parquet(s"$wdir/docs")
-        graft.streaming.EventStream.runToCompletionNoop(
-          graft.streaming.DedupStream.streamingNearDup(s2, wdocs),
-          org.apache.spark.sql.streaming.OutputMode.Append())
+          .coalesce(1).write.mode("overwrite").parquet(s"$wdir/documents.parquet")
+        val s2 = rocksSession()
+        EventStream.runToCompletionNoop(
+          DedupStream.streamingNearDup(s2, docStream(s2, wdir)), OutputMode.Append())
       }
       warm("windows") {
         (0 until 24).map(i => (i.toLong, (i % 5).toLong, "click", 1.0,
@@ -187,11 +206,8 @@ object Bench {
         val wev = spark.readStream
           .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP")
           .parquet(s"$wdir/events")
-        graft.streaming.EventStream.runToCompletionNoop(
-          graft.streaming.EventStream.slidingCounts(wev))
-        graft.streaming.EventStream.runToCompletionNoop(
-          graft.streaming.EventStream.streamingDedup(wev),
-          org.apache.spark.sql.streaming.OutputMode.Append())
+        EventStream.runToCompletionNoop(EventStream.slidingCounts(wev))
+        EventStream.runToCompletionNoop(EventStream.streamingDedup(wev), OutputMode.Append())
       }
       // the warm feeds are throwaway — don't leave parquet + stream
       // metadata accumulating in the system temp dir across bench runs
@@ -207,24 +223,22 @@ object Bench {
       if (only.isDefined) 0L
       else try spark.read.parquet(s"$sfDir/events.parquet").count()
       catch { case e: Throwable => System.err.println(s"[bench] stream rows: $e"); 0L }
-    def timeStream(label: String)(run: => Unit): Double =
-      if (only.isDefined) 0.0
+    // wall seconds of one streaming leg, None if it threw (0.0 when the
+    // legs are skipped under SPARK_GRAFT_ONLY)
+    def timeStream(label: String)(run: => Unit): Option[Double] =
+      if (only.isDefined) Some(0.0)
       else {
         val t0 = System.nanoTime()
-        try run
-        catch { case e: Throwable => System.err.println(s"[bench] $label failed: $e") }
-        (System.nanoTime() - t0) / 1e9
+        try { run; Some((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => System.err.println(s"[bench] $label failed: $e"); None }
       }
-    val streamTotal = timeStream("stream") {
-      val ev = graft.streaming.EventStream.readEvents(spark, sfDir)
-      graft.streaming.EventStream.runToCompletionNoop(
-        graft.streaming.EventStream.slidingCounts(ev))
+    val streamTotal = timeStream("stream_total") {
+      EventStream.runToCompletionNoop(
+        EventStream.slidingCounts(EventStream.readEvents(spark, sfDir)))
     }
     val streamDedup = timeStream("stream_dedup") {
-      val ev = graft.streaming.EventStream.readEvents(spark, sfDir)
-      graft.streaming.EventStream.runToCompletionNoop(
-        graft.streaming.EventStream.streamingDedup(ev),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+      EventStream.runToCompletionNoop(
+        EventStream.streamingDedup(EventStream.readEvents(spark, sfDir)), OutputMode.Append())
     }
     // (3) streaming MinHash-LSH near-dup over the document corpus — the
     // transformWithState bucket-registry path (RocksDB state store)
@@ -232,33 +246,19 @@ object Bench {
       if (only.isDefined) 0L
       else try spark.read.parquet(s"$sfDir/documents.parquet").count()
       catch { case e: Throwable => System.err.println(s"[bench] doc rows: $e"); 0L }
-    def docStream(run: (SparkSession, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame): Unit = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // metrics-only knob: skips RocksDB's read-before-write row counting;
-      // measured ~10-15% off the warm stream_neardup wall (StreamProbe,
-      // round 11 — see docs/BENCH_NOTES.md)
-      s2.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-      // driver testdata ships documents.parquet as a single FILE (stream
-      // the parent dir with a glob); ScaleGen writes a directory
-      val docPath = new java.io.File(s"$sfDir/documents.parquet")
-      val reader = s2.readStream.schema("doc_id LONG, text STRING")
-      val docs =
-        if (docPath.isDirectory) reader.parquet(docPath.toString)
-        else reader.option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      graft.streaming.EventStream.runToCompletionNoop(
-        run(s2, docs), org.apache.spark.sql.streaming.OutputMode.Append())
+    def runDocStream(run: (SparkSession, DataFrame) => DataFrame): Unit = {
+      val s2 = rocksSession()
+      EventStream.runToCompletionNoop(run(s2, docStream(s2, sfDir)), OutputMode.Append())
     }
     val streamNearDup = timeStream("stream_neardup") {
-      docStream(graft.streaming.DedupStream.streamingNearDup(_, _))
+      runDocStream(DedupStream.streamingNearDup(_, _))
     }
     // (4) the same LSH registry in REPS emission — one union-find linkage
     // edge per bucket visit instead of one candidate per registered match:
     // the linear-output emission the 100 TB story recommends, benched so
     // round-over-round drift is tracked automatically, not just in probes
     val streamNearDupReps = timeStream("stream_neardup_reps") {
-      docStream(graft.streaming.DedupStream.streamingNearDupReps(_, _))
+      runDocStream(DedupStream.streamingNearDupReps(_, _))
     }
     // (5) the in-stream union-find rollup consuming the reps edge
     // stream (DedupStream.repsRollupStream): an UNTIMED setup pass
@@ -268,43 +268,31 @@ object Bench {
     // serial-reducer stage is tracked round over round
     var rollupEdgeRows = 0L
     val streamRepsRollup =
-      if (only.isDefined) 0.0
+      if (only.isDefined) Some(0.0)
       else {
         val edgeDir = java.nio.file.Files.createTempDirectory("graft_bench_edges")
         try {
-          val s2 = spark.newSession()
-          s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          s2.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-          val docPath = new java.io.File(s"$sfDir/documents.parquet")
-          val reader = s2.readStream.schema("doc_id LONG, text STRING")
-          val docs =
-            if (docPath.isDirectory) reader.parquet(docPath.toString)
-            else reader.option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-          val q = graft.streaming.DedupStream.streamingNearDupReps(s2, docs)
+          val s2 = rocksSession()
+          val q = DedupStream.streamingNearDupReps(s2, docStream(s2, sfDir))
             .writeStream.format("parquet").option("path", s"$edgeDir/edges")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+            .outputMode(OutputMode.Append())
             .option("checkpointLocation", s"$edgeDir/ckpt").start()
           q.processAllAvailable(); q.stop()
           rollupEdgeRows = spark.read.parquet(s"$edgeDir/edges").count()
           timeStream("stream_reps_rollup") {
-            val s3 = spark.newSession()
-            s3.conf.set("spark.sql.streaming.stateStore.providerClass",
-              "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-            s3.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+            val s3 = rocksSession()
             // the 1-partition stateful width is repsRollupStream's own
             // contract now (it pins the session conf itself) — the bench
             // carries no rollup semantics the library doesn't
             val edges = s3.readStream
               .schema("rep LONG, member LONG, band INT, est_sim DOUBLE")
               .parquet(s"$edgeDir/edges")
-            graft.streaming.EventStream.runToCompletionNoop(
-              graft.streaming.DedupStream.repsRollupStream(s3, edges),
-              org.apache.spark.sql.streaming.OutputMode.Append())
+            EventStream.runToCompletionNoop(
+              DedupStream.repsRollupStream(s3, edges), OutputMode.Append())
           }
         } catch {
           case e: Throwable =>
-            System.err.println(s"[bench] stream_reps_rollup setup: $e"); 0.0
+            System.err.println(s"[bench] stream_reps_rollup setup failed: $e"); None
         } finally {
           import java.nio.file.{Files, Path}
           import java.util.Comparator
@@ -315,6 +303,13 @@ object Bench {
       }
 
     val total = results.map(_._2).sum
+    val legs = Seq(
+      ("stream_total", "sliding_counts", streamTotal, streamRows),
+      ("stream_dedup", "dropDuplicatesWithinWatermark", streamDedup, streamRows),
+      ("stream_neardup", "minhash_lsh_transformWithState", streamNearDup, streamDocRows),
+      ("stream_neardup_reps", "minhash_lsh_reps_emission", streamNearDupReps, streamDocRows),
+      ("stream_reps_rollup", "unionfind_rollup_transformWithState", streamRepsRollup, rollupEdgeRows))
+    val failed = failedQueries ++ legs.collect { case (metric, _, None, _) => metric }
     // The final stdout line carries the FULL per-query map. History: the
     // line was truncated to a ~750-char budget for rounds 15-18 on the
     // belief that the driver parses only the last ~2000 chars of output —
@@ -328,21 +323,19 @@ object Bench {
     // copy for humans and for the committed history.
     val detail = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
+    val streamDetail = legs.collect { case (metric, _, Some(t), _) => "\"" + metric + f"\":$t%.3f," }
+      .mkString
     val detailJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","nq":${results.size},"reran":$reran,"stream_total":$streamTotal%.3f,"stream_dedup":$streamDedup%.3f,"stream_neardup":$streamNearDup%.3f,"stream_neardup_reps":$streamNearDupReps%.3f,"stream_reps_rollup":$streamRepsRollup%.3f,"rollup_edge_rows":$rollupEdgeRows,"stream_rows":$streamRows,"stream_doc_rows":$streamDocRows$hostBand,"queries":$detail,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","nq":${results.size},"reran":$reran,$streamDetail"rollup_edge_rows":$rollupEdgeRows,"stream_rows":$streamRows,"stream_doc_rows":$streamDocRows$hostBand,"queries":$detail,${failedField(failed)},"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("bench_detail.json")
       try w.println(detailJson) finally w.close()
     } catch { case e: Throwable => System.err.println(s"[bench] detail write: $e") }
-    for ((metric, q, t, rows) <- Seq(
-      ("stream_total", "sliding_counts", streamTotal, streamRows),
-      ("stream_dedup", "dropDuplicatesWithinWatermark", streamDedup, streamRows),
-      ("stream_neardup", "minhash_lsh_transformWithState", streamNearDup, streamDocRows),
-      ("stream_neardup_reps", "minhash_lsh_reps_emission", streamNearDupReps, streamDocRows),
-      ("stream_reps_rollup", "unionfind_rollup_transformWithState", streamRepsRollup, rollupEdgeRows)))
+    for ((metric, q, Some(t), rows) <- legs)
       println(streamLine(metric, q, t, rows, sfDir))
-    println(totalLine(results, sfDir, streamTotal, hostBand))
+    println(totalLine(results, sfDir, streamTotal.getOrElse(0.0), hostBand, failed))
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 
   /** One streaming metric line: seconds plus input rows plus derived
@@ -357,12 +350,21 @@ object Bench {
     * seconds map (driver contract — metric/value/unit/queries/sf). The
     * rounds-15-18 greedy truncation to a char budget is gone (see the
     * history note in main); `other` stays in the schema for artifact
-    * continuity and is always 0.00 now that every query is named. */
+    * continuity and is always 0.00 now that every query is named.
+    * `results` holds the timed queries only; `failed` names the queries
+    * and streaming legs that threw — none of them has a timing, and a
+    * failed `stream_total` leg drops its field. */
   def totalLine(results: Seq[(String, Double)], sfDir: String,
-                streamTotal: Double = 0.0, hostBand: String = ""): String = {
+                streamTotal: Double = 0.0, hostBand: String = "",
+                failed: Seq[String] = Nil): String = {
     val total = results.map(_._2).sum
     val qs = results.sortBy(_._1)
       .map { case (k, v) => "\"" + k + f"\":$v%.2f" }.mkString("{", ",", "}")
-    f"""{"metric":"total","value":$total%.2f,"unit":"sec","nq":${results.size},"stream_total":$streamTotal%.2f$hostBand,"queries":$qs,"other":0.00,"detail":"bench_detail.json","sf":"$sfDir"}"""
+    val st = if (failed.contains("stream_total")) "" else f""","stream_total":$streamTotal%.2f"""
+    f"""{"metric":"total","value":$total%.2f,"unit":"sec","nq":${results.size}$st$hostBand,"queries":$qs,"other":0.00,${failedField(failed)},"detail":"bench_detail.json","sf":"$sfDir"}"""
   }
+
+  /** `"failed":[...]`: the names of the queries and legs that threw. */
+  private def failedField(failed: Seq[String]): String =
+    failed.map("\"" + _ + "\"").mkString("\"failed\":[", ",", "]")
 }

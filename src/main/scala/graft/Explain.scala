@@ -1,38 +1,49 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Plan-inspection utility: prints `explain("formatted")` for each query
-  * (or the subset named in args) so scan pushdown (`PushedFilters`,
-  * `ReadSchema`), join strategies, and WholeStageCodegen spans can be
-  * audited. Usage: runMain graft.Explain [sfDir] [query ...]
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.ops.Graph
+
+/** Prints `explain("formatted")` for named [[SparkEntry]] queries — the
+  * plan evidence the optimization rounds commit under plans/rNN/: scan
+  * pushdown (`PushedFilters`, `ReadSchema`), join strategies and
+  * WholeStageCodegen spans.
+  *
+  * Usage: tools/runmain.sh graft.Explain <sfDir> <q,...> [key=value ...]
+  *
+  * The session is Bench's (cores from `SPARK_GRAFT_CPUS`, default 32), so
+  * the plan is the one the bench executes at that data size; `key=value`
+  * arguments are session-conf overrides applied before planning. The
+  * query is not run, but size-gated operators run their small count jobs
+  * while the plan is built.
   */
 object Explain {
+  /** Inner plans that the declared query hides behind an eager truncate
+    * (which explains as a bare ExistingRDD leaf), dumped under
+    * pseudo-names. */
+  private val inner: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // the un-truncated triangle plan the truncate runs
+    "graph_triangles!plan" -> ((s, d) => Graph.trianglePlanOriented(
+      Graph.orientedEdges(Graph.edges(s, d), Graph.degrees(s, d)))._1),
+    // the nbr_jaccard wedge count crosses into RDD space (run-length pass
+    // over a sorted shuffle): its tagged+sorted wedge∪edge subplan
+    "graph_nbr_jaccard!wedges" -> ((s, d) => Graph.nbrTaggedSortedParts(
+      Graph.cappedAdjacency(s, d), Graph.edges(s, d))))
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSet else SparkEntry.queries.keySet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    require(args.length >= 2, "usage: graft.Explain <sfDir> <q,...> [key=value ...]")
+    val sfDir = args(0)
+    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val overrides = Session.confOverrides(args.drop(2).toSeq)
+    val fns = names.map(n => n -> inner.getOrElse(n,
+      SparkEntry.queries.getOrElse(n, sys.error(s"unknown query $n"))))
+    val spark = Session.local(Session.cpus(32)).appName("graft-explain").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1).filter(q => names(q._1)).foreach {
-      case (name, fn) =>
-        println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"explain failed: $e") }
-        // the nbr_jaccard wedge count crosses into RDD space (run-length
-        // pass over a sorted shuffle), so the outer plan shows only an
-        // ExistingRDD leaf — dump the inner subplan too for audit
-        if (name == "graph_nbr_jaccard") {
-          println(s"\n---------- $name (inner tagged+sorted wedge∪edge subplan) ----------")
-          try graft.ops.Graph.nbrTaggedSortedParts(
-            graft.ops.Graph.cappedAdjacency(spark, sfDir),
-            graft.ops.Graph.edges(spark, sfDir)).explain("formatted")
-          catch { case e: Throwable => println(s"explain failed: $e") }
-        }
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    for ((n, fn) <- fns) {
+      println(s"=== $n @ $sfDir ===")
+      println(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
     }
     spark.stop()
   }

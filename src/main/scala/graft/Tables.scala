@@ -20,7 +20,7 @@ object Tables {
     * ~40 ms of scheduling gap each, serialized before the query's first
     * real job). A 6-table TPC-H query paid ~450 ms of pure footer reads
     * per execution — the single largest slice of the sf0.1 bench's
-    * fixed-cost floor (JobAnatomy: jobs named `parquet at Tables.scala`).
+    * fixed-cost floor (jobs named `parquet at Tables.scala`).
     * The schema of a given table directory never changes within a process
     * lifetime here, so it is read ONCE and passed to `.schema(...)`,
     * which skips inference entirely. This is the same class of win as
@@ -31,6 +31,10 @@ object Tables {
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, String),
       org.apache.spark.sql.types.StructType]
+
+  /** Every table of the star schema, by directory name. */
+  val All: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"

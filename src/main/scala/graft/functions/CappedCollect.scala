@@ -35,7 +35,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * It is a Long-specialized Catalyst [[TypedImperativeAggregate]], not
   * an `Aggregator`+`udaf` wrapper: the wrapper pays an encoder
   * round-trip per input row and a product-encoder buffer serde, which a
-  * micro A/B (tools/CappedAggProbe, sf0.1 MinHash band build) measured
+  * micro A/B (round 14, sf0.1 MinHash band build, docs/BENCH_NOTES) measured
   * at ~1.35× `collect_set`; this form reads the id straight off the
   * InternalRow into a growth-doubled primitive array and serializes
   * buffers as (n, len, ids) bytes.

@@ -417,7 +417,7 @@ object Dedup {
       // size(array_union) (four hash-set builds + two materialized result
       // arrays per pair in expression form — the measured sf10 wall of
       // this stage); the >= 0.2 gate below is load-bearing for the
-      // empty/empty edge (kernel NaN ≡ Divide's null — both drop)
+      // empty/empty edge (the kernel's 0.0 fails it as Divide's null did)
       .select(col("doc_a"), col("doc_b"), col("est_sim"),
         graft.functions.GraftFunctions.jaccardLongSetsKernel(
           col("sh_a"), col("sh_b")).as("jaccard"))
@@ -1336,13 +1336,8 @@ object Dedup {
     truncate(hashed.groupBy("doc_id").agg(sigCols.head, sigCols.drop(1): _*))
   }
 
-  /** The (doc_id, band, key) band table of the SQL-parity pipeline —
-    * shared by [[minhashSqlPairs]] and tools/MinhashSqlProbe's
-    * output-identical plan variants. */
-  private[graft] def minhashSqlBands(spark: SparkSession, dir: String): DataFrame =
-    minhashSqlBandsOf(minhashSqlSigs(spark, dir))
-
-  private[graft] def minhashSqlBandsOf(sigs: DataFrame): DataFrame = {
+  /** The (doc_id, band, key) band table of [[minhashSqlPairs]]. */
+  private def minhashSqlBands(sigs: DataFrame): DataFrame = {
     val bandCols = (0 until Bands).map { bd =>
       struct(lit(bd).as("band"),
         concat_ws("_", col(s"m${Rows * bd}"), col(s"m${Rows * bd + 1}")).as("key"))
@@ -1365,10 +1360,10 @@ object Dedup {
     * cap-less band self-join is deliberate at scale too: it streams
     * C(k,2) pairs through a spillable sort without materializing any
     * bucket's membership — the robust shape for cap-less semantics
-    * (tools/MinhashSqlProbe A/B, docs/BENCH_NOTES round 14). */
+    * (round-14 A/B, docs/BENCH_NOTES). */
   def minhashSqlPairs(spark: SparkSession, dir: String): DataFrame = {
     val sigs = minhashSqlSigs(spark, dir)
-    val bands = minhashSqlBandsOf(sigs)
+    val bands = minhashSqlBands(sigs)
     val joined = bands.as("x").join(bands.as("y"),
       col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
         col("x.doc_id") < col("y.doc_id"))

@@ -196,12 +196,6 @@ object Graph {
         .repartition(n, col("src"))
     }
 
-  /** Drop all memoized adjacencies (long-lived sessions / tests). */
-  def clearAdjacencyMemo(): Unit = PlanMemo.clear()
-
-  /** Block-storage ids of the live memo entries — see [[PlanMemo.rddIds]]. */
-  def memoizedRddIds: Set[Int] = PlanMemo.rddIds
-
   /** Degree ceiling for PageRank's full-list adjacency
     * ([[pagerankTop]]'s gate). Below it (default 10⁷ — a 10⁷-long list
     * is an 80 MB buffer, the documented edge of sane) the memoized
@@ -622,10 +616,6 @@ object Graph {
       .select(explode(col("ids")).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("sz"))
 
-  /** [[nbrSizesKept]] over a full adjacency (probe/back-compat form). */
-  private[graft] def nbrSizes(adj: DataFrame, maxDeg: Int): DataFrame =
-    nbrSizesKept(adj.filter(size(col("ids")) <= maxDeg))
-
   /** NOTE on eagerness: plan CONSTRUCTION runs small eager jobs — the
     * |V| gate's count, the sizes collect+broadcast (dictionary path),
     * the kept-adjacency row/degree stats, and the edge total (an O(|V|)
@@ -884,11 +874,6 @@ object Graph {
         StructField("nbr_jaccard", DoubleType, nullable = false))))
   }
 
-  /** Probe alias for [[GraphProbe]] — keeps [[rleWedgeCount]] itself
-    * private while the profiler measures its output cardinality. */
-  private[graft] def rleWedgeCountPublicForProbe(taggedSorted: DataFrame): DataFrame =
-    rleWedgeCount(taggedSorted)
-
   private def rleWedgeCount(taggedSorted: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
@@ -1047,7 +1032,7 @@ object Graph {
 
   /** The un-truncated plan behind [[triangleCountsOriented]], plus the
     * persisted adjacency handle the caller must unpersist after
-    * materializing — split out so plan evidence (ExplainDump) can show
+    * materializing — split out so plan evidence (graft.Explain) can show
     * the join/kernel shape that the eager truncate otherwise collapses
     * into an ExistingRDD leaf. */
   private[graft] def trianglePlanOriented(oriented: DataFrame): (DataFrame, DataFrame) = {

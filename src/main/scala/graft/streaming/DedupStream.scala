@@ -436,7 +436,7 @@ object DedupStream {
     * reduction is EXACT — the emitted delta sequence is identical with
     * it on or off (see localForest's doc for the argument; StreamingSpec
     * pins it on a redundancy-heavy corpus) — so it is on by default;
-    * `prereduce = false` exists for A/B probes.
+    * `prereduce = false` is the reference path that spec compares against.
     *
     * Operational note: with `ttl` set the query runs in processing-time
     * mode and the TTL'd state schedules maintenance work, so replay

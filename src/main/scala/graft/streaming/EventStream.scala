@@ -337,7 +337,7 @@ object EventStream {
   }
 
   /** Drive a streaming query to completion through the `noop` sink — the
-    * measurement harness (Bench/StreamProbe) variant of
+    * measurement harness (Bench) variant of
     * [[runToCompletion]]: every micro-batch fully executes (same contract
     * as the batch bench's noop writes) but rows are dropped at the sink
     * instead of being collected into driver memory. The memory sink

@@ -101,8 +101,7 @@ trait TripleKV {
   * and only the final value needs to reach RocksDB), and the three
   * fields share that single read/write instead of paying one each —
   * ≤ 1 get + ≤ 1 put/remove per touched doc per batch, down from ≤ 3
-  * of each with per-field maps (round 18; the A/B lives in
-  * StreamProbe's rollup pipeline).
+  * of each with per-field maps (round 18 A/B, OPTIMIZATION_r18.md).
   *
   * Semantics are identical to direct per-field ops: the overlay serves
   * its own pending writes, `flush()` runs before the processor returns

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-level agreement check for the cluster-representative ops
@@ -20,19 +19,14 @@ import org.apache.spark.sql.functions._
   * (rep_id, n_members, id_sum, max_id).
   *
   * Usage: tools/runmain.sh graft.tools.RepsParity <sfDir> [minhash|simhash]
+  * (cores from `SPARK_GRAFT_CPUS`, default 32, as in Bench).
   */
 object RepsParity {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val family = if (args.length > 1) args(1) else "minhash"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-reps-parity")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cpus(32))
+      .appName("graft-reps-parity").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     // warm scan/codegen/kernel JIT once so the first timed pipeline (the

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-evidence data generator: replicates the driver's sf0.1 star
@@ -23,6 +23,9 @@ import org.apache.spark.sql.functions._
   *     scale-invariant, so a multiplicative jitter would be invisible);
   *   - event timestamps keep their nanos-long encoding (Tables.events
   *     converts either encoding).
+  *
+  * Usage: tools/runmain.sh graft.tools.ScaleGen [srcDir] [outDir] [reps]
+  * (cores from `SPARK_GRAFT_CPUS`, default 32, as in Bench).
   */
 object ScaleGen {
   final val KeyStride = 10000000L
@@ -31,13 +34,7 @@ object ScaleGen {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("data/sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

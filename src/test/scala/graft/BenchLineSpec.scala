@@ -65,4 +65,20 @@ class BenchLineSpec extends AnyFunSuite {
     // every query is named on the line, so "other" is identically zero
     assert(line.contains("\"other\":0.00"))
   }
+
+  test("a failed entry is not summed and is named under failed") {
+    val results = Seq("q_a" -> 1.0, "q_b" -> 2.5)
+    val line = Bench.totalLine(results, "sf", 4.0, "",
+      failed = Seq("q_boom", "stream_total"))
+    val total = "\"value\":([0-9.]+)".r.findFirstMatchIn(line).get.group(1).toDouble
+    assert(math.abs(total - 3.5) < 0.01)
+    assert(line.contains("\"nq\":2"))
+    assert(line.contains("\"failed\":[\"q_boom\",\"stream_total\"]"))
+    // a failed entry carries no timing anywhere on the line
+    assert(!line.contains("\"q_boom\":"))
+    assert(!line.contains("\"stream_total\":"))
+    assert(line.count(_ == '{') == line.count(_ == '}'))
+    // a clean run still carries the key, empty
+    assert(Bench.totalLine(results, "sf").contains("\"failed\":[]"))
+  }
 }

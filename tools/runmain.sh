@@ -2,6 +2,7 @@
 # Run a graft main class outside sbt (same JVM flags as build.sbt's
 # forked run). Usage: tools/runmain.sh <MainClass> [args...]
 set -e
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 CLS="$1"; shift
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -14,5 +15,5 @@ done
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" -XX:ReservedCodeCacheSize=512m \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:/opt/spark/jars/*" \
   "$CLS" "$@"

@@ -159,63 +159,6 @@ object GraftFunctions {
       inputTypes = Seq(ArrayType(LongType), ArrayType(LongType), LongType),
       returnNullable = false))
 
-  /** First-surviving-collision test for banded-LSH all-pairs emission
-    * ([[graft.ops.Dedup.minbandPairs]]): true iff no band BELOW `band`
-    * both (a) collides on the two signature components shared by the
-    * docs and (b) escaped the bucket cap — i.e. `band` is where this
-    * pair surfaces for the FIRST time among surviving buckets, so each
-    * pair is emitted exactly once with NO distinct exchange. `rows` =
-    * signature components per band; `hot` = per-band sorted arrays of
-    * capped-away bucket keys packed as k0·prime + k1 (components are CW
-    * residues in [0, prime), prime = 2³¹−1, so the pack is an injective
-    * long — unconditionally, since [[graft.ops.Dedup.minhashBandRows]]
-    * excludes all-sentinel (Long.MaxValue) signatures from banding; a
-    * sentinel component would wrap the pack and could alias a real hot
-    * key, falsely suppressing a surviving lower band). A tight ≤(band·rows)-long-comparison loop per call — lives
-    * here as a StaticInvoke kernel because the equivalent 16-branch
-    * Catalyst predicate tree over constant-indexed array reads measured
-    * 2.7× SLOWER end-to-end at sf1 (codegen bloat), vs ~free in this
-    * form. */
-  def minBandEmit(sigA: ArrayData, sigB: ArrayData, band: Int, rows: Int,
-                  hot: ArrayData): Boolean = {
-    val prime = 2147483647L // TextKernels.SqlPrime — the family's CW modulus
-    var j = 0
-    while (j < band) {
-      val k0 = sigA.getLong(j * rows)
-      val k1 = sigA.getLong(j * rows + 1)
-      if (k0 == sigB.getLong(j * rows) && k1 == sigB.getLong(j * rows + 1)) {
-        // lower band collides: emission there happened unless capped away
-        val hotJ = hot.getArray(j)
-        val key = k0 * prime + k1
-        var lo = 0
-        var hi = (if (hotJ == null) 0 else hotJ.numElements()) - 1
-        var found = false
-        while (lo <= hi && !found) {
-          val mid = (lo + hi) >>> 1
-          val k = hotJ.getLong(mid)
-          if (k == key) found = true
-          else if (k < key) lo = mid + 1
-          else hi = mid - 1
-        }
-        if (!found) return false
-      }
-      j += 1
-    }
-    true
-  }
-
-  def minBandEmitKernel(sigA: Column, sigB: Column, band: Column, rows: Column,
-                        hot: Column): Column =
-    bridge.column(StaticInvoke(
-      GraftFunctions.getClass,
-      BooleanType,
-      "minBandEmit",
-      Seq(bridge.expression(sigA), bridge.expression(sigB),
-        bridge.expression(band), bridge.expression(rows), bridge.expression(hot)),
-      inputTypes = Seq(ArrayType(LongType), ArrayType(LongType), IntegerType,
-        IntegerType, ArrayType(ArrayType(LongType))),
-      returnNullable = false))
-
   /** Number of positions where the two signature arrays carry the SAME
     * value — exactly `size(filter(zip_with(sigA, sigB, _ === _), x => x))`,
     * the numerator of the MinHash est_sim gate, as one tight loop instead
@@ -341,20 +284,35 @@ object GraftFunctions {
       inputTypes = Seq(ArrayType(LongType), ArrayType(LongType)),
       returnNullable = false))
 
-  /** CAP-LESS sibling of [[minBandEmit]] fused with the shared-band count,
-    * for [[graft.ops.Dedup.minhashSqlPairs]]' map-side emission: returns
-    * the pair's total number of colliding bands (all `rows` signature
-    * components equal) iff `band` is the pair's FIRST colliding band, else
-    * 0 — so a `> 0` filter keeps exactly one row per candidate pair AND
-    * that row already carries `n_shared_bands`, replacing the
-    * groupBy(doc_a, doc_b).count() exchange over the banded-duplicate
-    * candidate stream with a ≤(Bands·rows)-long-comparison loop per row
-    * (early exit at the first lower-band collision, the common duplicate
-    * case). No bucket-cap wrinkle here: the SQL-parity pipeline is
-    * cap-less, so every colliding band yields a join row and "first
-    * collision" needs no hot-key rescue. */
+  /** First-surviving-collision kernel for banded-LSH pair emission — the
+    * one map-side rule behind [[graft.ops.Dedup.minbandPairs]] and
+    * [[graft.ops.Dedup.minhashSqlPairs]]. A candidate row surfaces once
+    * per band whose bucket holds both docs, but which bands collide is
+    * fully determined by the two signatures, so each row can decide on
+    * its own whether `band` is the pair's FIRST SURVIVING collision.
+    * Returns the number of colliding bands (all `rows` components equal)
+    * at or after `band` iff no lower band both collides and escaped the
+    * bucket cap, else 0 — so a `> 0` filter keeps exactly one row per
+    * pair with NO distinct exchange, and for cap-less callers the value
+    * is the pair's total shared-band count.
+    *
+    * `hot` = per-band sorted arrays of capped-away bucket keys: a lower
+    * band colliding in a capped-away bucket never emitted the pair, so it
+    * must not suppress this one. Keys pack the band's first two
+    * components as k0·prime + k1 (components are CW residues in
+    * [0, prime), prime = 2³¹−1, so the pack is an injective long —
+    * unconditionally, since [[graft.ops.Dedup.minhashBandRows]] excludes
+    * all-sentinel (Long.MaxValue) signatures from banding; a sentinel
+    * component would wrap the pack and could alias a real hot key,
+    * falsely suppressing a surviving lower band). Cap-less callers pass
+    * empty arrays. A ≤(bands·rows)-long-comparison loop per call, early
+    * exit at the first surviving lower-band collision (the common
+    * duplicate case) — a StaticInvoke kernel because the equivalent
+    * 16-branch Catalyst predicate tree over constant-indexed array reads
+    * measured 2.7× SLOWER end-to-end at sf1 (codegen bloat). */
   def sharedBandsIfFirst(sigA: ArrayData, sigB: ArrayData, band: Int,
-                         rows: Int): Long = {
+                         rows: Int, hot: ArrayData): Long = {
+    val prime = 2147483647L // TextKernels.SqlPrime — the family's CW modulus
     def collides(j: Int): Boolean = {
       var r = 0
       while (r < rows) {
@@ -363,9 +321,24 @@ object GraftFunctions {
       }
       true
     }
+    def cappedAway(j: Int): Boolean = {
+      val hotJ = hot.getArray(j)
+      val key = sigA.getLong(j * rows) * prime + sigA.getLong(j * rows + 1)
+      var lo = 0
+      var hi = hotJ.numElements() - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val k = hotJ.getLong(mid)
+        if (k == key) return true
+        else if (k < key) lo = mid + 1
+        else hi = mid - 1
+      }
+      false
+    }
     var j = 0
     while (j < band) {
-      if (collides(j)) return 0L // a lower band already emitted this pair
+      // a lower surviving band already emitted this pair
+      if (collides(j) && !cappedAway(j)) return 0L
       j += 1
     }
     val bands = sigA.numElements() / rows
@@ -378,15 +351,15 @@ object GraftFunctions {
   }
 
   def sharedBandsIfFirstKernel(sigA: Column, sigB: Column, band: Column,
-                               rows: Column): Column =
+                               rows: Column, hot: Column): Column =
     bridge.column(StaticInvoke(
       GraftFunctions.getClass,
       LongType,
       "sharedBandsIfFirst",
       Seq(bridge.expression(sigA), bridge.expression(sigB),
-        bridge.expression(band), bridge.expression(rows)),
+        bridge.expression(band), bridge.expression(rows), bridge.expression(hot)),
       inputTypes = Seq(ArrayType(LongType), ArrayType(LongType), IntegerType,
-        IntegerType),
+        IntegerType, ArrayType(ArrayType(LongType))),
       returnNullable = false))
 
   /** Spark's `round(_, 4)` double semantics replayed in plain JVM code —

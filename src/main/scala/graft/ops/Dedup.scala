@@ -37,22 +37,6 @@ object Dedup {
         i => array_join(slice(toks, i, lit(k)), " ")))
   }
 
-  /** MinHash signature, HOF form — SAME hash as the kernel (md5-top-32
-    * base + Carter-Wegman (a·h + b) mod p): sig[i] = min over shingles.
-    * numPerms array traversals per row — reference implementation for the
-    * kernel-equivalence spec only; hot paths use
-    * [[graft.functions.TextKernels.minhashSigKernel]] (one digest per
-    * shingle, constants folded). */
-  def minhashSigCol(shingles: Column, numPerms: Int): Column = {
-    import graft.functions.TextKernels.{permA, permB}
-    val hashed = transform(shingles,
-      s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
-    array((0 until numPerms).map { i =>
-      array_min(transform(hashed,
-        h => (lit(permA(i)) * h + lit(permB(i))) % graft.functions.TextKernels.SqlPrime))
-    }: _*)
-  }
-
   val NumPerms = 32
   val Bands = 16   // 16 bands x 2 rows: candidate threshold ~ (1/16)^(1/2) = 0.25 Jaccard
   val Rows = NumPerms / Bands
@@ -101,43 +85,17 @@ object Dedup {
     * the identical pipeline on synthetic corpora with planted near-dups
     * (driver data has none). */
   def minhashPairsDf(documents: DataFrame): DataFrame = {
-    import graft.functions.GraftFunctions.sortedLongPairsKernel
     val (docs, sigs) = minhashDocsSigs(documents)
-    val n = cachedCount(docs)
-    val bcast = n <= bcastAttachMaxDocs(docs.sparkSession)
+    val gate = minhashGate(docs)
     // all-pairs emission: every C(k,2) pair of each capped bucket. In the
-    // min-band window the map-side first-surviving-collision rule
-    // ([[minbandPairs]]) emits each pair exactly once — no distinct
-    // exchange. Below [[MinbandMinDocsKey]] the candidate distinct is
-    // small and min-band's extra capped-away-key job is pure fixed cost
-    // (sf0.1 measured: +0.7 s on a 1.5 s line); past the broadcast gate
-    // signatures are not map-side available. Both ends keep the
-    // explode + distinct() shape.
+    // map-side window the first-surviving-collision rule ([[minbandPairs]])
+    // emits each pair exactly once, already carrying est_sim — no distinct
+    // exchange and no sig re-attach joins; elsewhere explode + distinct()
+    // (see the gate keys for why both ends keep that shape).
     val verified =
-      if (bcast && n >= minbandMinDocs(docs.sparkSession))
-        // min-band emission already carries est_sim (computed in-kernel
-        // from the signatures attached for the first-band test) — skip
-        // the verify stage's sig re-attach joins
-        minhashVerifiedPreEst(minbandPairs(sigs), docs, bcastAttach = bcast)
-      else {
-        // candidate distinct: pack the sorted pair into one long when the
-        // id space allows (8-byte exchange keys instead of 16-byte
-        // structs — this is the ABOVE-GATE scale path, where the distinct
-        // is the family's largest remaining shuffle); unpack after.
-        val cands =
-          if (packableIds(docs))
-            minhashBuckets(sigs)
-              .select(explode(graft.functions.GraftFunctions
-                .sortedLongPairsPackedKernel(col("ids"))).as("uv"))
-              .distinct()
-              .select(shiftrightunsigned(col("uv"), 32).as("doc_a"),
-                col("uv").bitwiseAND(lit(4294967295L)).as("doc_b"))
-          else minhashBuckets(sigs)
-            .select(explode(sortedLongPairsKernel(col("ids"))).as("p"))
-            .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-            .distinct()
-        minhashVerified(cands, docs, sigs, bcastAttach = bcast)
-      }
+      if (gate.mapSide) minhashVerifiedPreEst(minbandPairs(sigs), docs, bcastAttach = true)
+      else minhashVerified(distinctCandidates(docs, sigs, chain = false), docs, sigs,
+        bcastAttach = gate.bcastAttach)
     verified
       .select(col("doc_a"), col("doc_b"),
         round(col("est_sim"), 4).as("est_sim"), round(col("jaccard"), 4).as("jaccard"))
@@ -161,7 +119,9 @@ object Dedup {
 
   /** Session conf key: corpus-size FLOOR (in documents) above which the
     * broadcast-gated all-pairs emission switches from explode+distinct to
-    * the map-side min-band rule ([[minbandPairs]]). Min-band pays one
+    * the map-side min-band rule ([[minbandPairs]]), and
+    * [[minhashSqlPairs]]' pair-count aggregate to the same map-side
+    * emission. Min-band pays one
     * extra small job (the capped-away-key aggregate + collect) per query
     * — pure fixed cost while the candidate distinct is small (sf0.1,
     * 5k docs: +0.7 s on a 1.5 s line), the whole win once it is the wall
@@ -170,17 +130,27 @@ object Dedup {
     * 5·10⁵ (clear win). */
   val MinbandMinDocsKey = "spark.graft.dedup.minbandMinDocs"
 
-  private def minbandMinDocs(spark: SparkSession): Long =
-    spark.conf.getOption(MinbandMinDocsKey).map(_.toLong).getOrElse(100000L)
+  /** The MinHash family's one size-gate decision: `bcastAttach` iff the
+    * corpus is within [[BcastAttachMaxDocsKey]] (sig/shingle attaches
+    * broadcast); `mapSide` iff it is also at or above
+    * [[MinbandMinDocsKey]] (candidates emitted once map-side by the
+    * first-surviving-collision kernel instead of aggregated). */
+  private final case class MinhashGate(bcastAttach: Boolean, mapSide: Boolean)
 
-  private def bcastAttachMaxDocs(spark: SparkSession): Long =
-    spark.conf.getOption(BcastAttachMaxDocsKey).map(_.toLong).getOrElse(2000000L)
+  /** [[MinhashGate]] for `docs` (any frame with a doc_id column; one
+    * memoized [[gateStats]] job). Used by all three MinHash queries. */
+  private def minhashGate(docs: DataFrame): MinhashGate = {
+    val n = gateStats(docs)._1
+    val conf = docs.sparkSession.conf
+    val bcast = n <= conf.getOption(BcastAttachMaxDocsKey).map(_.toLong).getOrElse(2000000L)
+    MinhashGate(bcast, bcast && n >= conf.getOption(MinbandMinDocsKey).map(_.toLong).getOrElse(100000L))
+  }
 
   /** Weakly-memoized (count, min doc_id, max doc_id) per materialized
-    * docs/sigs instance — ONE flat-scan aggregate job feeds the
-    * broadcast-attach gate, the min-band floor AND the packed-pair
-    * id-range gate ([[packableIds]]); adding min/max to what used to be
-    * a bare count() costs no extra job. */
+    * docs/sigs instance — ONE flat-scan aggregate job feeds
+    * [[minhashGate]] AND the packed-pair id-range gate ([[packableIds]]);
+    * adding min/max to what used to be a bare count() costs no extra
+    * job. */
   private def gateStats(docs: DataFrame): (Long, Long, Long) =
     Option(dedupGateStats.get(docs)).getOrElse {
       val r = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).first()
@@ -197,8 +167,6 @@ object Dedup {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[DataFrame, (Long, Long, Long)])
 
-  private def cachedCount(docs: DataFrame): Long = gateStats(docs)._1
-
   /** True iff every doc id fits unsigned 32 bits, so a sorted candidate
     * pair (a < b) packs injectively into ONE long (a·2³² | b) and the
     * candidate distinct shuffles 8-byte keys instead of 16-byte structs
@@ -209,11 +177,6 @@ object Dedup {
     val (_, lo, hi) = gateStats(docs)
     lo >= 0L && hi <= 4294967295L
   }
-
-  /** True iff `docs` is small enough to take the broadcast-attach fast
-    * path ([[BcastAttachMaxDocsKey]]). */
-  private def attachByBroadcast(docs: DataFrame): Boolean =
-    cachedCount(docs) <= bcastAttachMaxDocs(docs.sparkSession)
 
   // ---- shared MinHash pipeline stages -----------------------------------
   // minhashPairsDf and minhashClusterRepsDf differ ONLY in how a bucket's
@@ -286,7 +249,7 @@ object Dedup {
     * family's largest remaining shuffle after the attach joins went
     * broadcast); but which bands collide is fully determined by the two
     * SIGNATURES, so with sigs broadcastable (the caller's
-    * [[attachByBroadcast]] gate) each candidate can decide MAP-SIDE
+    * [[minhashGate]]) each candidate can decide MAP-SIDE
     * whether its own band is the pair's FIRST surviving collision and
     * drop itself otherwise — no exchange, no aggregate.
     *
@@ -321,26 +284,68 @@ object Dedup {
         lo = BucketLo, hi = BucketCap)
       .select(col("band"), explode(sortedLongPairsKernel(col("ids"))).as("p"))
       .select(col("band"), col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-    val withSigs = cands
-      .join(broadcast(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))), Seq("doc_a"))
-      .join(broadcast(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))), Seq("doc_b"))
-    // first-surviving-collision test as a tight JVM kernel (a 16-branch
-    // Catalyst predicate tree measured 2.7× slower end-to-end at sf1 —
-    // codegen bloat); rows failing it are dropped before any projection
-    // materializes the 256 B signature arrays
+    firstCollisionPairs(cands, sigs, hotByBand)
+      .select(col("doc_a"), col("doc_b"), col("est_sim"))
+  }
+
+  /** The one map-side emitter of the MinHash family ([[minbandPairs]] and
+    * [[minhashSqlPairs]]): broadcast-attaches `sig_a`/`sig_b` (from a
+    * (doc_id, sig) frame) to a (band, doc_a, doc_b) candidate stream and
+    * keeps the rows where `band` is the pair's first surviving collision
+    * ([[graft.functions.GraftFunctions.sharedBandsIfFirst]]; `hotByBand`
+    * = per-band sorted capped-away keys, empty for cap-less callers).
+    * Emits (doc_a, doc_b, n_shared_bands, est_sim): survivors still hold
+    * both signatures, so est_sim is a 32-compare kernel loop away and the
+    * verify stage skips its sig re-attach joins
+    * ([[minhashVerifiedPreEst]]). Column pruning drops whichever score a
+    * caller does not select. */
+  private def firstCollisionPairs(cands: DataFrame, sigs: DataFrame,
+                                  hotByBand: Map[Int, Array[Long]]): DataFrame = {
+    import graft.functions.GraftFunctions.{sharedBandsIfFirstKernel, sigMatchCountKernel}
     val hotCol = array((0 until Bands).map(b =>
       lit(hotByBand.getOrElse(b, Array.empty[Long]))): _*)
-    withSigs
-      .filter(graft.functions.GraftFunctions.minBandEmitKernel(
-        col("sig_a"), col("sig_b"), col("band"), lit(Rows), hotCol))
-      // survivors still hold both signatures, so est_sim is a 32-compare
-      // kernel loop away — emitting it here lets the caller's verify
-      // stage skip its two sig re-attach broadcast joins and the
-      // per-element interpreted zip_with/filter HOF over the emitted
-      // stream ([[minhashVerifiedPreEst]])
+    cands
+      .join(broadcast(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))), Seq("doc_a"))
+      .join(broadcast(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        (graft.functions.GraftFunctions.sigMatchCountKernel(
-          col("sig_a"), col("sig_b")).cast("double") / NumPerms).as("est_sim"))
+        sharedBandsIfFirstKernel(col("sig_a"), col("sig_b"), col("band"), lit(Rows), hotCol)
+          .as("n_shared_bands"),
+        (sigMatchCountKernel(col("sig_a"), col("sig_b")).cast("double") / NumPerms).as("est_sim"))
+      .filter(col("n_shared_bands") > 0)
+  }
+
+  /** Distinct (doc_a < doc_b) candidates from the capped buckets: every
+    * C(k,2) pair of a bucket, or with `chain` only the k−1 consecutive
+    * pairs of its sorted member list ([[minhashClusterReps]]). When
+    * [[packableIds]] holds, each pair packs into one long (a·2³² | b,
+    * injective since a < b < 2³²) so the distinct exchange carries 8-byte
+    * keys instead of 16-byte structs — on the above-gate scale path the
+    * distinct is the family's largest remaining shuffle — and unpacks
+    * after; past the unsigned-32 id range the struct form is kept. */
+  private def distinctCandidates(docs: DataFrame, sigs: DataFrame,
+                                 chain: Boolean): DataFrame = {
+    import graft.functions.GraftFunctions.{sortedLongPairsKernel, sortedLongPairsPackedKernel}
+    val packed = packableIds(docs)
+    // `pair` over consecutive members i, i+1 of the sorted list
+    def chainOf(pair: String): Column =
+      expr(s"transform(sequence(1, size(ids) - 1), i -> $pair)")
+    val pairs = (chain, packed) match {
+      case (false, true)  => sortedLongPairsPackedKernel(col("ids"))
+      case (false, false) => sortedLongPairsKernel(col("ids"))
+      case (true, true)   => chainOf("shiftleft(element_at(ids, i), 32) | element_at(ids, i + 1)")
+      case (true, false)  => chainOf("named_struct('a', element_at(ids, i), 'b', element_at(ids, i + 1))")
+    }
+    val buckets = minhashBuckets(sigs)
+    val lists = if (chain) buckets.select(sort_array(col("ids")).as("ids")) else buckets
+    if (packed)
+      lists.select(explode(pairs).as("uv"))
+        .distinct()
+        .select(shiftrightunsigned(col("uv"), 32).as("doc_a"),
+          col("uv").bitwiseAND(lit(4294967295L)).as("doc_b"))
+    else
+      lists.select(explode(pairs).as("p"))
+        .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+        .distinct()
   }
 
   /** Shared capped bucket-membership builder for every LSH family
@@ -384,7 +389,7 @@ object Dedup {
     // family's dominant volume — at sf10 the shuffle-join form exchanges
     // and SORTS the pair stream four times (3 SortMergeJoins), with the
     // ~0.5 KB sh_a arrays riding the doc_b exchange. Callers gate on
-    // corpus size ([[attachByBroadcast]]); past the ceiling the
+    // corpus size ([[minhashGate]]); past the ceiling the
     // sort-merge shape below is the correct scale plan and stays as-is.
     def attach(df: DataFrame): DataFrame = if (bcastAttach) broadcast(df) else df
     val withEst = pairs
@@ -466,39 +471,22 @@ object Dedup {
     // chain candidates: consecutive pairs of the bucket's SORTED member
     // list (k−1 rows, not C(k,2)); bucketing + caps + gates are the
     // SHARED stages (see minhashBuckets/minhashVerified)
-    // chain distinct: pack consecutive sorted members into one long when
-    // the id space allows (sorted ⇒ a < b, so a·2³² | b is injective and
-    // the distinct exchange carries 8-byte keys); struct fallback past
-    // the unsigned-32 id range.
-    val chains =
-      if (packableIds(docs))
-        minhashBuckets(sigs)
-          .select(sort_array(col("ids")).as("ids"))
-          .select(explode(expr(
-            "transform(sequence(1, size(ids) - 1), " +
-              "i -> shiftleft(element_at(ids, i), 32) | element_at(ids, i + 1))"))
-            .as("uv"))
-          .distinct()
-          .select(shiftrightunsigned(col("uv"), 32).as("doc_a"),
-            col("uv").bitwiseAND(lit(4294967295L)).as("doc_b"))
-      else minhashBuckets(sigs)
-        .select(sort_array(col("ids")).as("ids"))
-        .select(explode(expr(
-          "transform(sequence(1, size(ids) - 1), " +
-            "i -> named_struct('a', element_at(ids, i), 'b', element_at(ids, i + 1)))"))
-          .as("p"))
-        .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-        .distinct()
+    val chains = distinctCandidates(docs, sigs, chain = true)
     val verified = minhashVerified(chains, docs, sigs,
-        bcastAttach = attachByBroadcast(docs))
+        bcastAttach = minhashGate(docs).bcastAttach)
       .select(col("doc_a"), col("doc_b"))
-    connectedComponents(verified, "doc_a", "doc_b")
-      .groupBy(col("label").as("rep_id"))
+    clusterReps(connectedComponents(verified, "doc_a", "doc_b"))
+  }
+
+  /** One row per cluster of an (id, label) assignment — rep = the label
+    * (min id), member count, id sum/max for audit — ordered by rep: the
+    * shared rollup of the three reps queries and [[graft.tools.RepsParity]]. */
+  private[graft] def clusterReps(labels: DataFrame): DataFrame =
+    labels.groupBy(col("label").as("rep_id"))
       .agg(count(lit(1)).as("n_members"),
         sum(col("id")).as("id_sum"),
         max(col("id")).as("max_id"))
       .orderBy("rep_id")
-  }
 
   /** DuckDB oracle for [[minhashClusterReps]] — the [[minhashOracle]]
     * pipeline with chain-emission candidates and a recursive-CTE
@@ -739,39 +727,14 @@ object Dedup {
     // the distinct's full candidate shuffle
     val verified = simhashVerifiedPairs(documents, dictAttach, uniquePairs = false)
       .select(col("doc_a"), col("doc_b"))
-    connectedComponents(verified, "doc_a", "doc_b")
-      .groupBy(col("label").as("rep_id"))
-      .agg(count(lit(1)).as("n_members"),
-        sum(col("id")).as("id_sum"),
-        max(col("id")).as("max_id"))
-      .orderBy("rep_id")
+    clusterReps(connectedComponents(verified, "doc_a", "doc_b"))
   }
 
-  /** Exact n-gram Jaccard via shingle inverted index — the scalable exact
-    * algorithm: explode distinct shingles to postings, cap posting-list
-    * length (shingles shared by >MaxDf docs carry no dedup signal and would
-    * blow the self-join up quadratically), self-join postings on the shingle
-    * to count common shingles per pair, then Jaccard from
-    * |A∩B| / (|A|+|B|-|A∩B|). Only pairs sharing ≥1 rare shingle are ever
-    * materialized — no all-pairs stage anywhere.
-    */
+  /** Posting-list cap of the n-gram inverted index
+    * ([[ngramJaccardPairs]]): a shingle shared by more than MaxDf docs is
+    * boilerplate and is dropped from the candidate self-join. */
   val MaxDf = 100
 
-  /** Connected components over a near-duplicate pair graph by min-label
-    * propagation with POINTER JUMPING: every doc starts labeled with its
-    * own id; each round a doc adopts the smallest label among itself and
-    * its neighbors, then additionally its current label's label
-    * (label(u) ← label(label(u))). The jump doubles the hop distance a
-    * label travels per round, so convergence is O(log diameter) instead
-    * of O(diameter) — a pathological chain-shaped cluster of length 1000
-    * converges in ~10 rounds, not 1000 (PropertySpec proves a 60-chain in
-    * ≤12). Fixpoint correctness is unchanged: at convergence the label
-    * function is stable under neighbor-min, hence equal across every
-    * edge, hence constant (= minimum id) per component.
-    *
-    * This is the operator that turns pairwise dedup output into "keep one
-    * representative per duplicate cluster".
-    */
   /** Session conf key: when set to a durable directory (HDFS / object
     * store), iterative operators use RELIABLE `checkpoint()` instead of
     * `localCheckpoint()`. localCheckpoint stores blocks in executor
@@ -846,7 +809,9 @@ object Dedup {
   }
 
   /** Connected components; output = one (id, label) row per node in the
-    * edge list, label = MIN id in the component.
+    * edge list, label = MIN id in the component — the operator that turns
+    * pairwise dedup output into "keep one representative per duplicate
+    * cluster".
     *
     * `dense` (default) takes [[connectedComponentsDense]] when both key
     * columns are LongType — one pass over the edges (per-partition
@@ -869,7 +834,17 @@ object Dedup {
     * outright. Callers that KNOW they're over the ceiling pass
     * `dense = false` and skip the probe. Beyond the ceiling, or for non-long keys (string doc
     * ids), the fallback is the declarative min-label pointer-jumping
-    * loop below, which scales with partitions, not memory. PropertySpec
+    * loop below, which scales with partitions, not memory: every doc
+    * starts labeled with its own id; each round a doc adopts the smallest
+    * label among itself and its neighbors, then additionally its current
+    * label's label (label(u) ← label(label(u))). The jump doubles the hop
+    * distance a label travels per round, so convergence is O(log
+    * diameter) instead of O(diameter) — a pathological chain-shaped
+    * cluster of length 1000 converges in ~10 rounds, not 1000
+    * (PropertySpec proves a 60-chain in ≤12). Fixpoint correctness is
+    * unchanged: at convergence the label function is stable under
+    * neighbor-min, hence equal across every edge, hence constant
+    * (= minimum id) per component. PropertySpec
     * pins the two paths label-identical (the labels are an exact integer
     * fixpoint, so equality is bitwise, not approximate), including on
     * null-bearing edge lists: an edge with ONE null endpoint registers
@@ -1117,12 +1092,7 @@ object Dedup {
     * with dedup_clusters / keep-best — the rollup itself is one bounded
     * aggregate. */
   def ngramClusterReps(spark: SparkSession, dir: String): DataFrame =
-    clusterLabels(spark, dir)
-      .groupBy(col("label").as("rep_id"))
-      .agg(count(lit(1)).as("n_members"),
-        sum(col("id")).as("id_sum"),
-        max(col("id")).as("max_id"))
-      .orderBy("rep_id")
+    clusterReps(clusterLabels(spark, dir))
 
   /** Memoized (id, label) near-dup cluster assignment: the pair graph
     * derives from the MEMOIZED [[pairStats]] (so the ngram pipeline runs
@@ -1167,6 +1137,13 @@ object Dedup {
       .orderBy("cluster_id")
   }
 
+  /** Exact n-gram Jaccard via shingle inverted index — the scalable exact
+    * algorithm: explode distinct shingles to postings, cap posting-list
+    * length (shingles shared by >[[MaxDf]] docs carry no dedup signal and
+    * would blow the self-join up quadratically), self-join postings on the
+    * shingle to count common shingles per pair, then Jaccard from
+    * |A∩B| / (|A|+|B|-|A∩B|). Only pairs sharing ≥1 rare shingle are ever
+    * materialized — no all-pairs stage anywhere. */
   def ngramJaccardPairs(spark: SparkSession, dir: String): DataFrame =
     jaccardFromStats(pairStats(spark, dir)).orderBy("doc_a", "doc_b")
 
@@ -1372,34 +1349,24 @@ object Dedup {
     // over that stream was the family's measured spill (~35 GB at sf10 —
     // r14 A/B, docs/minhash_sql_ab_sf10.jsonl). But n_shared_bands is
     // fully determined by the two SIGNATURES (band keys are injective
-    // renderings of the signature component pairs), so under the corpus
-    // broadcast gate each join row can decide MAP-SIDE whether its own
-    // band is the pair's FIRST collision — keeping exactly one row per
-    // pair with the count already attached ([[sharedBandsIfFirstKernel]]):
-    // no exchange, no aggregate, output row-for-row identical (the DuckDB
-    // oracle replays the join+groupBy shape unchanged). Past the gate the
-    // signatures are not map-side available and the aggregate form is the
-    // correct scale shape. Below [[MinbandMinDocsKey]] the pair-count
-    // aggregate is tiny and the kernel path's two broadcast builds +
-    // per-row signature test are pure fixed cost (the same floor the
-    // sibling minbandPairs gate applies — its absence here cost −11% at
-    // sf0.1 in r18 while the sf10 win was unchanged). The gate count scans
-    // the already-truncated sigs (one row per ≥3-token doc, flat
-    // checkpoint-block scan) instead of re-scanning the raw documents
-    // table with its text column.
-    val nDocs = cachedCount(sigs)
-    if (nDocs <= bcastAttachMaxDocs(spark) && nDocs >= minbandMinDocs(spark)) {
+    // renderings of the signature component pairs), so in the
+    // [[minhashGate]] map-side window each join row decides whether its
+    // own band is the pair's FIRST collision — keeping exactly one row per
+    // pair with the count already attached ([[firstCollisionPairs]] with
+    // no hot keys: this pipeline is cap-less): no exchange, no aggregate,
+    // output row-for-row identical (the DuckDB oracle replays the
+    // join+groupBy shape unchanged). Outside the window the aggregate form
+    // runs (the floor cost −11% at sf0.1 in r18 when this query lacked
+    // it). The gate counts the already-truncated sigs (one row per
+    // ≥3-token doc, flat checkpoint-block scan) instead of re-scanning the
+    // raw documents table with its text column.
+    if (minhashGate(sigs).mapSide) {
       val sigArr = sigs.select(col("doc_id"),
         array((0 until NumPerms).map(i => col(s"m$i")): _*).as("sig"))
-      joined
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          col("x.band").as("band"))
-        .join(broadcast(sigArr.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))), Seq("doc_a"))
-        .join(broadcast(sigArr.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          graft.functions.GraftFunctions.sharedBandsIfFirstKernel(
-            col("sig_a"), col("sig_b"), col("band"), lit(Rows)).as("n_shared_bands"))
-        .filter(col("n_shared_bands") > 0)
+      val cands = joined.select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        col("x.band").as("band"))
+      firstCollisionPairs(cands, sigArr, Map.empty)
+        .select(col("doc_a"), col("doc_b"), col("n_shared_bands"))
         .orderBy("doc_a", "doc_b")
     } else {
       joined

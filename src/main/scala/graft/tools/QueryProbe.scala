@@ -65,7 +65,7 @@ object QueryProbe {
       val s = (System.nanoTime() - t0) / 1e9
       // listener events drain async; give the bus a beat before reading
       Thread.sleep(300)
-      println(f"[queryprobe] $n%-28s rep$rep $s%7.2f s  jobs=$jobs%-3d stages=$stages%-3d shufR=${shufR / 1048576}%5d MB shufW=${shufW / 1048576}%5d MB")
+      println(f"[queryprobe] $n%-28s rep$rep $s%7.2f s  jobs=$jobs%-3d stages=$stages%-3d shufR=${shufR / 1048576.0}%8.3f MB shufW=${shufW / 1048576.0}%8.3f MB")
     }
     spark.stop()
   }

@@ -46,18 +46,15 @@ object RepsParity {
       case "minhash" => graft.ops.Dedup.minhashPairsDf(d)
     }
     repsDf(docs.limit(64)).collect()
-    val t0 = System.nanoTime()
-    val reps = repsDf(docs).collect()
+    def rowsOf(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getAs[Long]("rep_id"), r.getAs[Long]("n_members"),
         r.getAs[Long]("id_sum"), r.getAs[Long]("max_id"))).toSet
+    val t0 = System.nanoTime()
+    val reps = rowsOf(repsDf(docs))
     val t1 = System.nanoTime()
     val pairs = pairsDf(docs).select(col("doc_a"), col("doc_b"))
-    val full = graft.ops.Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-      .groupBy(col("label"))
-      .agg(count(lit(1)).as("n"), sum(col("id")).as("s"), max(col("id")).as("m"))
-      .collect()
-      .map(r => (r.getAs[Long]("label"), r.getAs[Long]("n"),
-        r.getAs[Long]("s"), r.getAs[Long]("m"))).toSet
+    val full = rowsOf(graft.ops.Dedup.clusterReps(
+      graft.ops.Dedup.connectedComponents(pairs, "doc_a", "doc_b")))
     val t2 = System.nanoTime()
     val only1 = reps -- full
     val only2 = full -- reps

@@ -225,15 +225,21 @@ class CappedBucketsSpec extends SparkSpec {
     // The broadcast-gated form (first-colliding-band filter + shared-band
     // count from the signatures) must be row-for-row identical to the
     // cap-less join + groupBy(doc_a, doc_b).count() shape it replaces —
-    // pinned on the real sf0.001 corpus by flipping the gate: 0 forces
-    // the aggregate fallback, the default takes the map-side path.
-    def run(): Seq[(Long, Long, Long)] =
-      Dedup.minhashSqlPairs(spark, sfDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val viaMapSide = run()
-    spark.conf.set(Dedup.BcastAttachMaxDocsKey, "0")
-    val viaAggregate = try run()
-    finally spark.conf.unset(Dedup.BcastAttachMaxDocsKey)
+    // pinned on the real sf0.001 corpus by flipping the gates: a zero
+    // floor forces the map-side kernel path (the 500-doc corpus sits
+    // below the default floor), a zero ceiling the aggregate fallback.
+    def run(key: String, value: String): (Seq[(Long, Long, Long)], String) = {
+      spark.conf.set(key, value)
+      try {
+        val df = Dedup.minhashSqlPairs(spark, sfDir)
+        (df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq,
+          df.queryExecution.sparkPlan.toString)
+      } finally spark.conf.unset(key)
+    }
+    val (viaMapSide, mapSidePlan) = run(Dedup.MinbandMinDocsKey, "0")
+    val (viaAggregate, aggregatePlan) = run(Dedup.BcastAttachMaxDocsKey, "0")
+    assert(mapSidePlan.contains("sharedBandsIfFirst"), "zero floor must take the map-side kernel")
+    assert(!aggregatePlan.contains("sharedBandsIfFirst"), "zero ceiling must take the aggregate")
     assert(viaMapSide.nonEmpty, "sf0.001 sql-parity pair set unexpectedly empty")
     assert(viaMapSide == viaAggregate,
       s"map-side ${viaMapSide.take(3)} (${viaMapSide.length}) != " +

@@ -53,12 +53,12 @@ class GateShapeSpec extends SparkSpec {
     withConfs(noAuto, Dedup.BcastAttachMaxDocsKey -> huge,
       Dedup.MinbandMinDocsKey -> huge) {
       val p = planOf(Dedup.minhashPairsDf(docs))
-      assert(!p.contains("minBandEmit"), "below-floor plan must use the candidate distinct, not the kernel")
+      assert(!p.contains("sharedBandsIfFirst"), "below-floor plan must use the candidate distinct, not the kernel")
     }
     withConfs(noAuto, Dedup.BcastAttachMaxDocsKey -> huge,
       Dedup.MinbandMinDocsKey -> "0") {
       val p = planOf(Dedup.minhashPairsDf(docs))
-      assert(p.contains("minBandEmit"), "above-floor plan must emit map-side via minBandEmit")
+      assert(p.contains("sharedBandsIfFirst"), "above-floor plan must emit map-side via sharedBandsIfFirst")
     }
   }
 

@@ -63,6 +63,31 @@ class PackedPairsSpec extends SparkSpec {
     assert(pairsOf(df) == base.map { case (a, b, e, j) => (a + shift, b + shift, e, j) })
   }
 
+  test("min-band map-side emission ≡ default distinct path end to end (upper half + fallback)") {
+    // The fixture sits below the default min-band floor, so the default
+    // run takes the candidate distinct; a zero floor (broadcast ceiling
+    // at its default) forces the first-surviving-collision kernel. The
+    // full minhashPairsDf output — est_sim and jaccard included, in
+    // order, so a duplicated pair would show — must not move.
+    def rowsOf(out: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Double)] =
+      out.collect()
+        .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+          r.getAs[Double]("est_sim"), r.getAs[Double]("jaccard"))).toSeq
+    for (shift <- Seq(1L << 31, 1L << 33)) {
+      val df = shifted(shift)
+      val default = rowsOf(Dedup.minhashPairsDf(df))
+      spark.conf.set(Dedup.MinbandMinDocsKey, "0")
+      val (minband, plan) =
+        try {
+          val out = Dedup.minhashPairsDf(df)
+          (rowsOf(out), out.queryExecution.sparkPlan.toString)
+        } finally spark.conf.unset(Dedup.MinbandMinDocsKey)
+      assert(plan.contains("sharedBandsIfFirst"), s"shift=$shift: zero floor must take the kernel")
+      assert(default.nonEmpty, s"shift=$shift: fixture must produce pairs")
+      assert(minband == default, s"shift=$shift")
+    }
+  }
+
   test("packed chain distinct ≡ struct form for cluster reps (upper half + fallback)") {
     def repsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long)] =
       Dedup.minhashClusterRepsDf(df).collect()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
-import graft.ops.Graph
+import graft.ops.{Dedup, Graph}
 
 /** Prints `explain("formatted")` for named [[SparkEntry]] queries — the
   * plan evidence the optimization rounds commit under plans/rNN/: scan
@@ -29,7 +29,11 @@ object Explain {
     // the nbr_jaccard wedge count crosses into RDD space (run-length pass
     // over a sorted shuffle): its tagged+sorted wedge∪edge subplan
     "graph_nbr_jaccard!wedges" -> ((s, d) => Graph.nbrTaggedSortedParts(
-      Graph.cappedAdjacency(s, d), Graph.edges(s, d))))
+      Graph.cappedAdjacency(s, d), Graph.edges(s, d))),
+    // connected components materializes the reps' chain-candidate →
+    // verify plan eagerly: the verified chain graph it consumes
+    "dedup_minhash_reps!verified" -> ((s, d) =>
+      Dedup.minhashChainVerified(Tables.documents(s, d))))
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Explain <sfDir> <q,...> [key=value ...]")

@@ -284,17 +284,28 @@ object GraftFunctions {
       inputTypes = Seq(ArrayType(LongType), ArrayType(LongType)),
       returnNullable = false))
 
-  /** First-surviving-collision kernel for banded-LSH pair emission — the
+  /** First-surviving-collision gate for banded-LSH pair emission — the
     * one map-side rule behind [[graft.ops.Dedup.minbandPairs]] and
     * [[graft.ops.Dedup.minhashSqlPairs]]. A candidate row surfaces once
     * per band whose bucket holds both docs, but which bands collide is
     * fully determined by the two signatures, so each row can decide on
     * its own whether `band` is the pair's FIRST SURVIVING collision.
-    * Returns the number of colliding bands (all `rows` components equal)
-    * at or after `band` iff no lower band both collides and escaped the
-    * bucket cap, else 0 — so a `> 0` filter keeps exactly one row per
-    * pair with NO distinct exchange, and for cap-less callers the value
-    * is the pair's total shared-band count.
+    * True iff no lower band both collides (all `rows` components equal)
+    * and escaped the bucket cap, and some band at or after `band`
+    * collides (a candidate collides at its own `band`, so that check is
+    * one band's compares) — so filtering on it keeps exactly one row per
+    * pair with NO distinct exchange. [[sharedBandsFrom]] is the count
+    * half: the gate scans the bands below `band`, the count the bands
+    * from `band` on, so a plan that filters on the gate (Catalyst puts it
+    * in the attach join's condition) and projects the count scans each
+    * band once per row.
+    *
+    * `minMatches` > 0 also requires that many equal signature components
+    * (est_sim = matches / perms, so est_sim ≥ 0.25 ⇔ matches ≥ perms/4),
+    * stopping at the `minMatches`-th match. Carrying the est gate here
+    * leaves Catalyst no est_sim predicate to push into the join condition
+    * beside the projected [[sigMatchCount]], which would call that kernel
+    * a second time per surviving row.
     *
     * `hot` = per-band sorted arrays of capped-away bucket keys: a lower
     * band colliding in a capped-away bucket never emitted the pair, so it
@@ -311,16 +322,8 @@ object GraftFunctions {
     * 16-branch Catalyst predicate tree over constant-indexed array reads
     * measured 2.7× SLOWER end-to-end at sf1 (codegen bloat). */
   def sharedBandsIfFirst(sigA: ArrayData, sigB: ArrayData, band: Int,
-                         rows: Int, hot: ArrayData): Long = {
+                         rows: Int, hot: ArrayData, minMatches: Int): Boolean = {
     val prime = 2147483647L // TextKernels.SqlPrime — the family's CW modulus
-    def collides(j: Int): Boolean = {
-      var r = 0
-      while (r < rows) {
-        if (sigA.getLong(j * rows + r) != sigB.getLong(j * rows + r)) return false
-        r += 1
-      }
-      true
-    }
     def cappedAway(j: Int): Boolean = {
       val hotJ = hot.getArray(j)
       val key = sigA.getLong(j * rows) * prime + sigA.getLong(j * rows + 1)
@@ -338,28 +341,65 @@ object GraftFunctions {
     var j = 0
     while (j < band) {
       // a lower surviving band already emitted this pair
-      if (collides(j) && !cappedAway(j)) return 0L
+      if (bandCollides(sigA, sigB, j, rows) && !cappedAway(j)) return false
       j += 1
     }
     val bands = sigA.numElements() / rows
+    while (j < bands && !bandCollides(sigA, sigB, j, rows)) j += 1
+    if (j == bands) return false
+    var seen = 0
+    var i = 0
+    while (seen < minMatches && i < sigA.numElements()) {
+      if (sigA.getLong(i) == sigB.getLong(i)) seen += 1
+      i += 1
+    }
+    seen >= minMatches
+  }
+
+  /** Number of bands at or after `band` whose `rows` components all agree
+    * — the count half of [[sharedBandsIfFirst]]: for a row that passes
+    * the gate of a cap-less caller, the pair's total shared-band count. */
+  def sharedBandsFrom(sigA: ArrayData, sigB: ArrayData, band: Int, rows: Int): Long = {
+    val bands = sigA.numElements() / rows
+    var j = band
     var count = 0L
     while (j < bands) {
-      if (collides(j)) count += 1
+      if (bandCollides(sigA, sigB, j, rows)) count += 1
       j += 1
     }
     count
   }
 
+  private def bandCollides(sigA: ArrayData, sigB: ArrayData, j: Int, rows: Int): Boolean = {
+    var r = 0
+    while (r < rows) {
+      if (sigA.getLong(j * rows + r) != sigB.getLong(j * rows + r)) return false
+      r += 1
+    }
+    true
+  }
+
   def sharedBandsIfFirstKernel(sigA: Column, sigB: Column, band: Column,
-                               rows: Column, hot: Column): Column =
+                               rows: Column, hot: Column, minMatches: Column): Column =
+    bridge.column(StaticInvoke(
+      GraftFunctions.getClass,
+      BooleanType,
+      "sharedBandsIfFirst",
+      Seq(bridge.expression(sigA), bridge.expression(sigB),
+        bridge.expression(band), bridge.expression(rows), bridge.expression(hot),
+        bridge.expression(minMatches)),
+      inputTypes = Seq(ArrayType(LongType), ArrayType(LongType), IntegerType,
+        IntegerType, ArrayType(ArrayType(LongType)), IntegerType),
+      returnNullable = false))
+
+  def sharedBandsFromKernel(sigA: Column, sigB: Column, band: Column, rows: Column): Column =
     bridge.column(StaticInvoke(
       GraftFunctions.getClass,
       LongType,
-      "sharedBandsIfFirst",
+      "sharedBandsFrom",
       Seq(bridge.expression(sigA), bridge.expression(sigB),
-        bridge.expression(band), bridge.expression(rows), bridge.expression(hot)),
-      inputTypes = Seq(ArrayType(LongType), ArrayType(LongType), IntegerType,
-        IntegerType, ArrayType(ArrayType(LongType))),
+        bridge.expression(band), bridge.expression(rows)),
+      inputTypes = Seq(ArrayType(LongType), ArrayType(LongType), IntegerType, IntegerType),
       returnNullable = false))
 
   /** Spark's `round(_, 4)` double semantics replayed in plain JVM code —

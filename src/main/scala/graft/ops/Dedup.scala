@@ -40,6 +40,10 @@ object Dedup {
   val NumPerms = 32
   val Bands = 16   // 16 bands x 2 rows: candidate threshold ~ (1/16)^(1/2) = 0.25 Jaccard
   val Rows = NumPerms / Bands
+  /** The est_sim ≥ 0.25 gate counted in equal signature components
+    * (est_sim = matches / NumPerms), as the map-side emission's kernel
+    * takes it. */
+  private val EstMinMatches = NumPerms / 4
 
   /** Shared MinHash bucket-size gates: a bucket is a candidate source only
     * when its membership lands in [BucketLo, BucketCap]. ONE definition —
@@ -93,7 +97,8 @@ object Dedup {
     // exchange and no sig re-attach joins; elsewhere explode + distinct()
     // (see the gate keys for why both ends keep that shape).
     val verified =
-      if (gate.mapSide) minhashVerifiedPreEst(minbandPairs(sigs), docs, bcastAttach = true)
+      if (gate.mapSide)
+        minhashVerifiedPreEst(minbandPairs(sigs, EstMinMatches), docs, bcastAttach = true)
       else minhashVerified(distinctCandidates(docs, sigs, chain = false), docs, sigs,
         bcastAttach = gate.bcastAttach)
     verified
@@ -267,8 +272,12 @@ object Dedup {
     * count+checksum parity also probe-pinned at sf1/sf10).
     *
     * Packing: components are CW residues in [0, 2³¹−1), so
-    * k0·SqlPrime + k1 < 2⁶² is an injective long key. */
-  private[graft] def minbandPairs(sigs: DataFrame): DataFrame = {
+    * k0·SqlPrime + k1 < 2⁶² is an injective long key.
+    *
+    * `minMatches` > 0 also drops pairs whose signatures agree in fewer
+    * components ([[firstCollisionPairs]]); [[minhashPairsDf]] passes
+    * [[EstMinMatches]], its est_sim gate. */
+  private[graft] def minbandPairs(sigs: DataFrame, minMatches: Int = 0): DataFrame = {
     import graft.functions.GraftFunctions.sortedLongPairsKernel
     val bandRows = minhashBandRows(sigs)
     val hotByBand: Map[Int, Array[Long]] = bandRows
@@ -284,7 +293,7 @@ object Dedup {
         lo = BucketLo, hi = BucketCap)
       .select(col("band"), explode(sortedLongPairsKernel(col("ids"))).as("p"))
       .select(col("band"), col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-    firstCollisionPairs(cands, sigs, hotByBand)
+    firstCollisionPairs(cands, sigs, hotByBand, minMatches)
       .select(col("doc_a"), col("doc_b"), col("est_sim"))
   }
 
@@ -293,25 +302,35 @@ object Dedup {
     * (doc_id, sig) frame) to a (band, doc_a, doc_b) candidate stream and
     * keeps the rows where `band` is the pair's first surviving collision
     * ([[graft.functions.GraftFunctions.sharedBandsIfFirst]]; `hotByBand`
-    * = per-band sorted capped-away keys, empty for cap-less callers).
-    * Emits (doc_a, doc_b, n_shared_bands, est_sim): survivors still hold
-    * both signatures, so est_sim is a 32-compare kernel loop away and the
-    * verify stage skips its sig re-attach joins
+    * = per-band sorted capped-away keys, empty for cap-less callers;
+    * `minMatches` = the est_sim gate in equal signature components, 0
+    * for none). Emits (doc_a, doc_b, n_shared_bands, est_sim): survivors
+    * still hold both signatures, so est_sim is a 32-compare kernel loop
+    * away and the verify stage skips its sig re-attach joins
     * ([[minhashVerifiedPreEst]]). Column pruning drops whichever score a
-    * caller does not select. */
+    * caller does not select.
+    *
+    * The filter is the gate kernel alone and the projection holds only
+    * the count half and [[graft.functions.GraftFunctions.sigMatchCount]]:
+    * Catalyst pushes the filter into the sig_b join's condition, and a
+    * filter on a projected column would be pushed there as a second
+    * copy of that column's kernel call. */
   private def firstCollisionPairs(cands: DataFrame, sigs: DataFrame,
-                                  hotByBand: Map[Int, Array[Long]]): DataFrame = {
-    import graft.functions.GraftFunctions.{sharedBandsIfFirstKernel, sigMatchCountKernel}
+                                  hotByBand: Map[Int, Array[Long]],
+                                  minMatches: Int): DataFrame = {
+    import graft.functions.GraftFunctions.{sharedBandsFromKernel, sharedBandsIfFirstKernel,
+      sigMatchCountKernel}
     val hotCol = array((0 until Bands).map(b =>
       lit(hotByBand.getOrElse(b, Array.empty[Long]))): _*)
     cands
       .join(broadcast(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))), Seq("doc_a"))
       .join(broadcast(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))), Seq("doc_b"))
+      .filter(sharedBandsIfFirstKernel(col("sig_a"), col("sig_b"), col("band"), lit(Rows),
+        hotCol, lit(minMatches)))
       .select(col("doc_a"), col("doc_b"),
-        sharedBandsIfFirstKernel(col("sig_a"), col("sig_b"), col("band"), lit(Rows), hotCol)
+        sharedBandsFromKernel(col("sig_a"), col("sig_b"), col("band"), lit(Rows))
           .as("n_shared_bands"),
         (sigMatchCountKernel(col("sig_a"), col("sig_b")).cast("double") / NumPerms).as("est_sim"))
-      .filter(col("n_shared_bands") > 0)
   }
 
   /** Distinct (doc_a < doc_b) candidates from the capped buckets: every
@@ -401,21 +420,22 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         (graft.functions.GraftFunctions.sigMatchCountKernel(
           col("sig_a"), col("sig_b")).cast("double") / NumPerms).as("est_sim"))
+      .filter(col("est_sim") >= 0.25)
     minhashVerifiedPreEst(withEst, docs, bcastAttach)
   }
 
-  /** The est-gate + exact-Jaccard tail of [[minhashVerified]], for callers
-    * whose candidate stream ALREADY carries est_sim (the min-band emission
-    * computes it from the signatures it attached for the first-band test),
-    * so the two sig re-attach joins and the interpreted zip_with HOF never
-    * run over the pair stream. */
+  /** The exact-Jaccard tail of [[minhashVerified]], for callers whose
+    * candidate stream ALREADY carries est_sim and has passed the
+    * est ≥ 0.25 gate (the min-band emission computes both from the
+    * signatures it attached for the first-band test), so the two sig
+    * re-attach joins and the interpreted zip_with HOF never run over the
+    * pair stream. */
   private[graft] def minhashVerifiedPreEst(pairsEst: DataFrame, docs: DataFrame,
                                            bcastAttach: Boolean): DataFrame = {
     val hashed = docs.select(col("doc_id"),
       transform(col("shingles"), s => xxhash64(s)).as("sh"))
     def attach(df: DataFrame): DataFrame = if (bcastAttach) broadcast(df) else df
     pairsEst
-      .filter(col("est_sim") >= 0.25)
       .join(attach(hashed.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))), Seq("doc_a"))
       .join(attach(hashed.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))), Seq("doc_b"))
       // one-pass set-space Jaccard kernel == size(array_intersect)/
@@ -466,16 +486,21 @@ object Dedup {
     minhashClusterRepsDf(Tables.documents(spark, dir))
 
   /** Core over any (doc_id, text) DataFrame (spec entry point). */
-  def minhashClusterRepsDf(documents: DataFrame): DataFrame = {
+  def minhashClusterRepsDf(documents: DataFrame): DataFrame =
+    clusterReps(connectedComponents(minhashChainVerified(documents), "doc_a", "doc_b"))
+
+  /** The verified chain graph (doc_a, doc_b) that [[minhashClusterRepsDf]]
+    * hands to [[connectedComponents]] — whose eager materialization hides
+    * this plan from the query's explain, so `graft.Explain` dumps it as
+    * `dedup_minhash_reps!verified`. */
+  private[graft] def minhashChainVerified(documents: DataFrame): DataFrame = {
     val (docs, sigs) = minhashDocsSigs(documents)
     // chain candidates: consecutive pairs of the bucket's SORTED member
     // list (k−1 rows, not C(k,2)); bucketing + caps + gates are the
     // SHARED stages (see minhashBuckets/minhashVerified)
     val chains = distinctCandidates(docs, sigs, chain = true)
-    val verified = minhashVerified(chains, docs, sigs,
-        bcastAttach = minhashGate(docs).bcastAttach)
+    minhashVerified(chains, docs, sigs, bcastAttach = minhashGate(docs).bcastAttach)
       .select(col("doc_a"), col("doc_b"))
-    clusterReps(connectedComponents(verified, "doc_a", "doc_b"))
   }
 
   /** One row per cluster of an (id, label) assignment — rep = the label
@@ -601,9 +626,8 @@ object Dedup {
   def simhashNearPairs(spark: SparkSession, dir: String): DataFrame =
     simhashNearPairsDf(Tables.documents(spark, dir))
 
-  def simhashNearPairsDf(documents: DataFrame,
-                         dictAttach: Boolean = true): DataFrame =
-    simhashVerifiedPairs(documents, dictAttach, uniquePairs = true)
+  def simhashNearPairsDf(documents: DataFrame): DataFrame =
+    simhashVerifiedPairs(documents, uniquePairs = true)
       .orderBy("doc_a", "doc_b")
 
   // ---- shared SimHash-banding stages -------------------------------------
@@ -622,7 +646,7 @@ object Dedup {
     * edges are harmless to union-find, and re-verifying a duplicate costs
     * two binary-search probes + one XOR — cheaper than a full distinct
     * shuffle over the candidate set). */
-  private[graft] def simhashVerifiedPairs(documents: DataFrame, dictAttach: Boolean,
+  private[graft] def simhashVerifiedPairs(documents: DataFrame,
                                           uniquePairs: Boolean): DataFrame = {
     import graft.functions.GraftFunctions.sortedLongPairsKernel
     // fingerprints feed the banding explode AND the scoring dictionary —
@@ -645,7 +669,7 @@ object Dedup {
     // duplicate candidates only re-pay two O(log n) dictionary probes +
     // one XOR each). RecallSpec's banded-vs-brute-force set-equality pin
     // covers the swap (planted near-dup pairs collide in 3-4 chunks).
-    val verified = simhashHamming(exploded, fp, dictAttach)
+    val verified = simhashHamming(exploded, fp)
       .filter(col("hamming") <= 3)
     if (uniquePairs) verified.distinct() else verified
   }
@@ -665,33 +689,23 @@ object Dedup {
         .select(col("doc_id"), col("ck.c").as("c"), col("ck.key").as("key")),
       Seq("c", "key"), "doc_id", lo = 2, hi = 1000)
 
-  /** Hamming distance attach for candidate pairs. Default = the broadcast-
+  /** Hamming distance attach for candidate pairs: the broadcast-
     * dictionary idiom (one row of parallel sorted arrays, two O(log n)
     * binary-search kernel probes per pair, map-side) — two whole
-    * shuffle-join stages disappear vs the equi-join form. 16 B/doc keeps
-    * the dictionary broadcastable to ~10⁸ docs; past that ceiling flip
-    * `dictAttach` off for the two-join fallback (same output —
-    * spec-pinned), exactly like [[Graph.neighborJaccardAdj]]. */
-  private[graft] def simhashHamming(cands: DataFrame, fp: DataFrame,
-                                    dictAttach: Boolean): DataFrame = {
+    * shuffle-join stages disappear vs an equi-join attach. 16 B/doc keeps
+    * the dictionary broadcastable to ~10⁸ docs. TextDedupSpec checks every
+    * output hamming against the driver-side XOR of the two fingerprints. */
+  private[graft] def simhashHamming(cands: DataFrame, fp: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions.sortedLongLookupKernel
-    if (dictAttach) {
-      val fpRow = fp
-        .agg(array_sort(collect_list(struct(col("doc_id"), col("fp")))).as("kv"))
-        .select(transform(col("kv"), x => x.getField("doc_id")).as("ks"),
-          transform(col("kv"), x => x.getField("fp")).as("vs"))
-      cands.crossJoin(broadcast(fpRow))
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(sortedLongLookupKernel(col("ks"), col("vs"), col("doc_a"))
-            .bitwiseXOR(sortedLongLookupKernel(col("ks"), col("vs"), col("doc_b"))))
-            .as("hamming"))
-    } else {
-      cands
-        .join(fp.select(col("doc_id").as("doc_a"), col("fp").as("fp_a")), Seq("doc_a"))
-        .join(fp.select(col("doc_id").as("doc_b"), col("fp").as("fp_b")), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
-    }
+    val fpRow = fp
+      .agg(array_sort(collect_list(struct(col("doc_id"), col("fp")))).as("kv"))
+      .select(transform(col("kv"), x => x.getField("doc_id")).as("ks"),
+        transform(col("kv"), x => x.getField("fp")).as("vs"))
+    cands.crossJoin(broadcast(fpRow))
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(sortedLongLookupKernel(col("ks"), col("vs"), col("doc_a"))
+          .bitwiseXOR(sortedLongLookupKernel(col("ks"), col("vs"), col("doc_b"))))
+          .as("hamming"))
   }
 
   /** SimHash near-dup CLUSTER REPRESENTATIVES — the simhash sibling of
@@ -720,12 +734,11 @@ object Dedup {
     simhashClusterRepsDf(Tables.documents(spark, dir))
 
   /** Core over any (doc_id, text) DataFrame (spec entry point). */
-  def simhashClusterRepsDf(documents: DataFrame,
-                           dictAttach: Boolean = true): DataFrame = {
+  def simhashClusterRepsDf(documents: DataFrame): DataFrame = {
     // uniquePairs = false: duplicate edges (a pair co-occurring in up to
     // 4 chunk buckets) are harmless to union-find, so the reps path skips
     // the distinct's full candidate shuffle
-    val verified = simhashVerifiedPairs(documents, dictAttach, uniquePairs = false)
+    val verified = simhashVerifiedPairs(documents, uniquePairs = false)
       .select(col("doc_a"), col("doc_b"))
     clusterReps(connectedComponents(verified, "doc_a", "doc_b"))
   }
@@ -774,8 +787,8 @@ object Dedup {
   }
 
   /** Weak identity cache for [[withinDenseCeiling]]'s row counts — keys
-    * are the DataFrame instances themselves (the PlanMemo adjacency is a
-    * stable instance), so entries vanish with the plans they describe. */
+    * are the DataFrame instances themselves (the PlanMemo degree table is
+    * a stable instance), so entries vanish with the plans they describe. */
   private val gateCounts =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[DataFrame, java.lang.Long])
@@ -813,8 +826,8 @@ object Dedup {
     * pairwise dedup output into "keep one representative per duplicate
     * cluster".
     *
-    * `dense` (default) takes [[connectedComponentsDense]] when both key
-    * columns are LongType — one pass over the edges (per-partition
+    * Takes [[connectedComponentsDense]] when both key columns are
+    * LongType — one pass over the edges (per-partition
     * union-find → 2·|V|-long star forests → treeAggregate merge), no
     * iteration, no checkpoints. Right while |V| fits driver memory
     * (16 B/node — gated by [[DenseMaxNodesKey]], the same ceiling class
@@ -829,12 +842,10 @@ object Dedup {
     * mode; on a cluster the scheduler retries a failed task
     * `spark.task.maxFailures` times (default 4) before aborting the
     * stage, so the wasted work is multiplied by the retry count — a
-    * deployment that expects to trip the ceiling should either lower
-    * `spark.task.maxFailures` for the job or pass `dense = false`
-    * outright. Callers that KNOW they're over the ceiling pass
-    * `dense = false` and skip the probe. Beyond the ceiling, or for non-long keys (string doc
-    * ids), the fallback is the declarative min-label pointer-jumping
-    * loop below, which scales with partitions, not memory: every doc
+    * deployment that expects to trip the ceiling should lower
+    * `spark.task.maxFailures` for the job. Beyond the ceiling, or for
+    * non-long keys (string doc ids), the fallback is the declarative
+    * min-label pointer-jumping loop [[connectedComponentsLoop]], which scales with partitions, not memory: every doc
     * starts labeled with its own id; each round a doc adopts the smallest
     * label among itself and its neighbors, then additionally its current
     * label's label (label(u) ← label(label(u))). The jump doubles the hop
@@ -851,11 +862,11 @@ object Dedup {
     * its non-null side as a node (a singleton unless connected
     * elsewhere); null itself is never a node. */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20, dense: Boolean = true): DataFrame = {
+                          maxIter: Int = 20): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val longKeys = edges.schema(aCol).dataType == LongType &&
       edges.schema(bCol).dataType == LongType
-    if (dense && longKeys) {
+    if (longKeys) {
       try connectedComponentsDense(edges, aCol, bCol)
       catch {
         case t: Throwable if hasDenseCeiling(t) =>
@@ -958,8 +969,8 @@ object Dedup {
       .toDF("id", "label")
   }
 
-  private def connectedComponentsLoop(edges: DataFrame, aCol: String,
-                                      bCol: String, maxIter: Int): DataFrame = {
+  private[graft] def connectedComponentsLoop(edges: DataFrame, aCol: String,
+                                             bCol: String, maxIter: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = edges.sparkSession
     val reliableDir = spark.conf.getOption(CheckpointDirKey)
@@ -1365,7 +1376,7 @@ object Dedup {
         array((0 until NumPerms).map(i => col(s"m$i")): _*).as("sig"))
       val cands = joined.select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         col("x.band").as("band"))
-      firstCollisionPairs(cands, sigArr, Map.empty)
+      firstCollisionPairs(cands, sigArr, Map.empty, minMatches = 0)
         .select(col("doc_a"), col("doc_b"), col("n_shared_bands"))
         .orderBy("doc_a", "doc_b")
     } else {

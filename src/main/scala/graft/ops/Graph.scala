@@ -15,11 +15,9 @@ import org.apache.spark.sql.functions._
   *     plus a count-aggregate degree table ([[degrees]], constant-size
   *     buffers) and a degree-CAPPED adjacency ([[cappedAdjacency]],
   *     bounded buffers via [[graft.functions.CappedCollect]]);
-  *   - the only full-neighbor-list aggregate left ([[adjacency]]) is
-  *     PageRank's, which semantically requires every hub's complete
-  *     list — and it sits behind a max-degree gate ([[MaxListDegreeKey]]):
-  *     past the ceiling, [[pagerankTop]] switches to an edge-native
-  *     power iteration that never builds a list;
+  *   - no driver path aggregates a full neighbor list: PageRank iterates
+  *     the edge list itself ([[pageRankDenseEdges]] under the |V|
+  *     ceiling, the declarative [[pageRank]] loop above it);
   *   - each PageRank iteration is one equi-join + one aggregation —
   *     contributions partial-aggregate map-side, so the per-iteration
   *     shuffle carries one (dst, partial sum) row per partition, not one
@@ -92,8 +90,8 @@ object Graph {
     * base artifact, and the scale-safest shape a graph can take: the
     * dedup is ROW-level (no per-key membership buffer of any kind), so no
     * input skew, hub, or mega-degree node can concentrate state anywhere.
-    * Every other family artifact ([[degrees]], [[cappedAdjacency]], the
-    * PageRank-only [[adjacency]]) derives from this flat scan.
+    * Every other family artifact ([[degrees]], [[cappedAdjacency]])
+    * derives from this flat scan.
     *
     * Shape: ONE hash exchange on src (an explicit numPartitions
     * repartition AQE cannot coalesce — same block-count reasoning as the
@@ -132,7 +130,8 @@ object Graph {
     * aggregate, so the per-group state is one counter regardless of
     * degree (contrast a list aggregate, whose buffer grows with the hub).
     * Feeds [[degreeDistribution]], the orientation joins of
-    * [[triangleCounts]], and [[pagerankTop]]'s max-degree gate. */
+    * [[triangleCounts]], and [[pagerankTop]]'s |V| gate and degree
+    * dictionary. */
   def degrees(spark: SparkSession, dir: String): DataFrame =
     PlanMemo.getOrBuild(spark, dir, "graph.degrees") {
       edges(spark, dir).groupBy(col("src"))
@@ -176,36 +175,6 @@ object Graph {
   private def aggAdjacency(directed: DataFrame): DataFrame =
     directed.groupBy(col("src")).agg(collect_set(col("dst")).as("ids"))
 
-  /** Memoized FULL co-purchase adjacency (src, ids) — [[pageRankAdj]]'s
-    * input, and deliberately the engine's one uncapped list aggregate:
-    * PageRank semantically requires every hub's complete neighbor list
-    * (capping would change rank mass), so the buffer is bounded by TRUE
-    * graph degree, not by input skew. The quadratic consumers no longer
-    * read it (they read [[cappedAdjacency]] / [[degrees]]), and
-    * [[pagerankTop]] gates it behind [[MaxListDegreeKey]] — past the
-    * ceiling the full list never materializes anywhere and PageRank runs
-    * edge-native. Built over the [[edges]] memo (input pre-deduped, so
-    * collect_list ≡ collect_set — no per-buffer membership probing). */
-  def adjacency(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.getOrBuild(spark, dir, "graph.adjacency") {
-      // block count pinned for the dense PageRank's per-partition pass
-      // (same AQE-coalesce reasoning as [[cappedAdjacency]])
-      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      edges(spark, dir).groupBy(col("src"))
-        .agg(collect_list(col("dst")).as("ids"))
-        .repartition(n, col("src"))
-    }
-
-  /** Degree ceiling for PageRank's full-list adjacency
-    * ([[pagerankTop]]'s gate). Below it (default 10⁷ — a 10⁷-long list
-    * is an 80 MB buffer, the documented edge of sane) the memoized
-    * [[adjacency]] path runs; above it PageRank goes edge-native and no
-    * full neighbor list ever materializes. */
-  val MaxListDegreeKey = "spark.graft.graph.maxListDegree"
-
-  private def maxListDegree(spark: SparkSession): Long =
-    spark.conf.getOption(MaxListDegreeKey).map(_.toLong).getOrElse(10000000L)
-
   /** Simplified PageRank (uniform teleport, unnormalized: r' = (1−d) +
     * d·Σ_in r/outdeg — the textbook power-iteration form) over the nodes
     * that carry at least one out-edge. Fixed `iters` rounds keeps the
@@ -220,76 +189,6 @@ object Graph {
     powerIterate(e, ranks0, iters, d, checkpointEvery, Seq(e))
   }
 
-  /** [[pageRank]] over the ADJACENCY-aggregate form (src, ids): the
-    * initial rank table is a pure projection (outdeg = list size, no
-    * degree aggregation), and each round joins the rank table onto the
-    * |V|-row ADJACENCY — not the |E|-row edge list — so the per-round
-    * join probes 200k rows instead of 13M at sf1; contributions explode
-    * AFTER the rank attach, map-side, straight into the partial
-    * aggregate. Same update rule and the same per-node contribution
-    * multiset as the edge-list path (summation order differs — absorbed
-    * by the 4-decimal rounding of [[pagerankTop]], exactly like the
-    * engine's own partition-order variation).
-    *
-    * `dense` (default) takes [[pageRankDense]] — the broadcast-rank
-    * dense-vector fast path, one job per round instead of the loop's
-    * explode + hash aggregate + two joins + periodic checkpoint. Right
-    * while the rank vector is broadcastable (8 B/node), which is gated
-    * AUTOMATICALLY on |V| = the adjacency's row count against
-    * [[Dedup.DenseMaxNodesKey]] (default 5·10⁷) — above the ceiling the
-    * declarative shuffle-based loop (scales with partitions, not driver
-    * memory) engages by data, with no flag to flip; `dense = false`
-    * forces it. The gate's count is one cheap flat-scan job: driver
-    * queries pass the memoized checkpoint-materialized adjacency.
-    * GraphSpec pins the two paths within 1e-9 relative on real data. */
-  def pageRankAdj(adj: DataFrame, iters: Int = 6, d: Double = 0.85,
-                  checkpointEvery: Int = 3, dense: Boolean = true): DataFrame =
-    if (dense && Dedup.withinDenseCeiling(adj)) pageRankDense(adj, iters, d)
-    else pageRankAdjLoop(adj, iters, d, checkpointEvery)
-
-  private def pageRankAdjLoop(adj: DataFrame, iters: Int, d: Double,
-                              checkpointEvery: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val adjP = adj.persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = adjP.select(col("src").as("node"),
-      size(col("ids")).cast("long").as("outdeg"), lit(1.0).as("rank"))
-    var i = 0
-    while (i < iters) {
-      val contribs = ranks.select(col("node").as("src"),
-        (col("rank") / col("outdeg")).as("contrib"))
-      val summed = adjP.join(contribs, Seq("src"))
-        .select(explode(col("ids")).as("node"), col("contrib"))
-        .groupBy(col("node")).agg(sum(col("contrib")).as("msum"))
-      ranks = ranks.select(col("node"), col("outdeg"))
-        .join(summed, Seq("node"), "left")
-        .select(col("node"), col("outdeg"),
-          (lit(1.0 - d) + lit(d) * coalesce(col("msum"), lit(0.0))).as("rank"))
-      i += 1
-      if (i % checkpointEvery == 0 || i == iters) ranks = Dedup.truncate(ranks)
-    }
-    adjP.unpersist(blocking = false)
-    ranks.select(col("node"), col("rank"))
-  }
-
-  /** Power iteration with the rank vector as a BROADCAST dense array:
-    * each round is one job — a per-partition dense accumulation over the
-    * memoized adjacency (for each (src, ids) row: c = rank(src)/|ids|,
-    * acc(dst) += c for every retained dst, via binary search on the
-    * sorted node dictionary) and a treeReduce of the ≤ nPart partial
-    * vectors. Removes the per-round explode(Σd rows) + hash aggregate +
-    * two |V|-row join shuffles + lineage-checkpoint of the declarative
-    * loop; the driver holds 2-3 rank vectors (8 B/node) and each round
-    * re-broadcasts one.
-    *
-    * Update-rule equivalence with [[pageRankAdjLoop]]: ranks are kept
-    * for src nodes only; contributions to sink nodes (dst never a src)
-    * are dropped by the binary-search miss exactly where the loop's
-    * left-join drops them; nodes receiving no contribution get the
-    * (1-d) teleport floor from the zero-initialized accumulator. Same
-    * per-node contribution multiset — summation ORDER differs (partition
-    * accumulation + tree merge vs hash-aggregate order), absorbed by
-    * [[pagerankTop]]'s 4-decimal rounding like every other order
-    * variation across this family's paths and engines. */
   /** treeReduce depth for the dense power-iteration partials: the tree
     * level exists only to bound DRIVER ingress (nPart × nV × 8 B of
     * partial vectors arrive at once under a flat reduce). Below a 256 MB
@@ -305,80 +204,40 @@ object Graph {
   private def reduceDepth(nPart: Int, nV: Int): Int =
     if (nPart.toLong * nV * 8 <= (256L << 20)) 1 else 2
 
-  private def pageRankDense(adj: DataFrame, iters: Int, d: Double): DataFrame = {
-    val spark = adj.sparkSession
-    val sc = spark.sparkContext
-    // sorted node dictionary — the same driver-side materialization class
-    // as neighborJaccard's degree dictionary (BroadcastExchange collects
-    // to the driver identically); reached only under the |V| gate in
-    // [[pageRankAdj]], so the collect is pre-bounded by denseMaxNodes
-    val nodes = adj.select(col("src")).collect().map(_.getLong(0))
-    java.util.Arrays.sort(nodes)
-    val nV = nodes.length
-    val nodesB = sc.broadcast(nodes)
-    val base = org.apache.spark.sql.graft.bridge.toInternalRdd(
-      adj.select(col("src"), col("ids")))
-    var ranks = Array.fill(nV)(1.0)
-    var i = 0
-    while (i < iters) {
-      val ranksB = sc.broadcast(ranks)
-      val msum = base.mapPartitions { it =>
-        val ns = nodesB.value
-        val rk = ranksB.value
-        val acc = new Array[Double](ns.length)
-        while (it.hasNext) {
-          val r = it.next()
-          val ids = r.getArray(1)
-          val m = ids.numElements()
-          val c = rk(java.util.Arrays.binarySearch(ns, r.getLong(0))) / m
-          var j = 0
-          while (j < m) {
-            val t = java.util.Arrays.binarySearch(ns, ids.getLong(j))
-            if (t >= 0) acc(t) += c
-            j += 1
-          }
-        }
-        Iterator.single(acc)
-      }.treeReduce({ (a, b) =>
-        var j = 0; while (j < a.length) { a(j) += b(j); j += 1 }; a
-      }, depth = reduceDepth(base.getNumPartitions, nV))
-      ranksB.unpersist(blocking = false)
-      val next = new Array[Double](nV)
-      var j = 0
-      while (j < nV) { next(j) = (1.0 - d) + d * msum(j); j += 1 }
-      ranks = next
-      i += 1
-    }
-    // final ranks go out as a broadcast (mirroring the idsB/labelsB shape
-    // of the dense CC) — capturing the array in the task closure would
-    // serialize 8 B/node into EVERY task binary instead of once per
-    // executor over the torrent
-    val finalB = sc.broadcast(ranks)
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    spark.createDataFrame(
-      sc.parallelize(nodes.indices, math.min(n, math.max(1, nV)))
-        .map(j => (nodesB.value(j), finalB.value(j))))
-      .toDF("node", "rank")
-  }
-
-  /** [[pageRankDense]] re-expressed over the DISTINCT EDGE LIST — the
-    * escape hatch [[pagerankTop]] takes when a degree exceeds
-    * [[MaxListDegreeKey]]: identical update rule, identical per-node
-    * contribution multiset (each (src, dst) row adds rank(src)/deg(src)
-    * to dst — exactly the rows the adjacency form expands to), but NO
-    * neighbor list is ever aggregated anywhere; per-partition state is
-    * the fixed dense accumulator. deg comes from the broadcast degree
-    * dictionary instead of a list size. The [[edges]] memo is clustered
-    * and sorted by src, so the per-src (rank/deg) lookup run-caches to
-    * ~one binary search per distinct src per partition — the same search
-    * count as the adjacency form. Summation order differs; absorbed by
-    * the caller's rounding (GraphSpec pins 1e-9 relative parity). */
+  /** [[pageRank]]'s power iteration with the contribution vector
+    * (rank/deg per node) as a BROADCAST dense array, over the DISTINCT
+    * EDGE LIST: each round is one job — a per-partition dense
+    * accumulation (each edge adds contrib(src) to dst's slot) and a
+    * treeReduce of the ≤ nPart partial vectors. Removes the loop's
+    * per-round hash aggregate, two |V|-row join shuffles and lineage
+    * checkpoint; the driver holds 2-3 vectors (8 B/node) and each round
+    * re-broadcasts one. No neighbor list is aggregated anywhere.
+    *
+    * The edges are resolved against the sorted node dictionary ONCE, into
+    * per-partition primitive (src, dst) index arrays persisted for the
+    * rounds (8 B/edge; the [[edges]] memo is sorted by src, so the src
+    * search run-caches to one per distinct src). Rounds then read ints
+    * with no search and no row decoding — decoding the edge memo's rows
+    * every round dominates once its blocks spill to disk (sf10, 4 cores,
+    * 8 GB driver: 188 s per query against 135 s with the index).
+    *
+    * Update-rule equivalence with [[pageRank]]: ranks are kept for src
+    * nodes only; contributions to sink nodes (dst never a src) are
+    * dropped by the binary-search miss exactly where the loop's left-join
+    * drops them; nodes receiving no contribution get the (1-d) teleport
+    * floor from the zero-initialized accumulator. Same per-node
+    * contribution multiset — summation ORDER differs (partition
+    * accumulation + tree merge vs hash-aggregate order), absorbed by
+    * [[pagerankTop]]'s 4-decimal rounding (GraphSpec pins 1e-9 relative
+    * parity with the loop). */
   private[graft] def pageRankDenseEdges(edges: DataFrame, degrees: DataFrame,
                                         iters: Int = 6, d: Double = 0.85): DataFrame = {
     val spark = edges.sparkSession
     val sc = spark.sparkContext
-    // sorted (node, deg) dictionary — reached only under the |V| dense
-    // ceiling gate, so the collect is pre-bounded like pageRankDense's
+    // sorted (node, deg) dictionary — the same driver-side
+    // materialization class as neighborJaccard's degree dictionary;
+    // reached only under [[pagerankTop]]'s |V| gate, so the collect is
+    // pre-bounded by denseMaxNodes
     val dict = degrees.select(col("node"), col("deg")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val nV = dict.length
@@ -387,44 +246,57 @@ object Graph {
     var k = 0
     while (k < nV) { nodes(k) = dict(k)._1; degs(k) = dict(k)._2; k += 1 }
     val nodesB = sc.broadcast(nodes)
-    val degsB = sc.broadcast(degs)
     val base = org.apache.spark.sql.graft.bridge.toInternalRdd(
       edges.select(col("src"), col("dst")))
+    // sinks (dst never a src) miss the dictionary and are dropped here
+    val index = base.mapPartitions { it =>
+      val ns = nodesB.value
+      val srcs = scala.collection.mutable.ArrayBuilder.make[Int]
+      val dsts = scala.collection.mutable.ArrayBuilder.make[Int]
+      var lastSrc = 0L
+      var lastSi = 0
+      var cached = false
+      while (it.hasNext) {
+        val r = it.next()
+        val s = r.getLong(0)
+        if (!cached || s != lastSrc) {
+          lastSi = java.util.Arrays.binarySearch(ns, s)
+          lastSrc = s
+          cached = true
+        }
+        val t = java.util.Arrays.binarySearch(ns, r.getLong(1))
+        if (t >= 0) { srcs += lastSi; dsts += t }
+      }
+      Iterator.single((srcs.result(), dsts.result()))
+    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var ranks = Array.fill(nV)(1.0)
     var i = 0
     while (i < iters) {
-      val ranksB = sc.broadcast(ranks)
-      val msum = base.mapPartitions { it =>
-        val ns = nodesB.value
-        val dg = degsB.value
-        val rk = ranksB.value
-        val acc = new Array[Double](ns.length)
-        var lastSrc = 0L
-        var lastC = 0.0
-        var cached = false
-        while (it.hasNext) {
-          val r = it.next()
-          val s = r.getLong(0)
-          if (!cached || s != lastSrc) {
-            val si = java.util.Arrays.binarySearch(ns, s)
-            lastC = rk(si) / dg(si)
-            lastSrc = s
-            cached = true
-          }
-          val t = java.util.Arrays.binarySearch(ns, r.getLong(1))
-          if (t >= 0) acc(t) += lastC
-        }
-        Iterator.single(acc)
+      val contrib = new Array[Double](nV)
+      var j = 0
+      while (j < nV) { contrib(j) = ranks(j) / degs(j); j += 1 }
+      val contribB = sc.broadcast(contrib)
+      val msum = index.map { case (srcs, dsts) =>
+        val c = contribB.value
+        val acc = new Array[Double](c.length)
+        var e = 0
+        while (e < srcs.length) { acc(dsts(e)) += c(srcs(e)); e += 1 }
+        acc
       }.treeReduce({ (a, b) =>
         var j = 0; while (j < a.length) { a(j) += b(j); j += 1 }; a
-      }, depth = reduceDepth(base.getNumPartitions, nV))
-      ranksB.unpersist(blocking = false)
+      }, depth = reduceDepth(index.getNumPartitions, nV))
+      contribB.unpersist(blocking = false)
       val next = new Array[Double](nV)
-      var j = 0
+      j = 0
       while (j < nV) { next(j) = (1.0 - d) + d * msum(j); j += 1 }
       ranks = next
       i += 1
     }
+    index.unpersist(blocking = false)
+    // final ranks go out as a broadcast (mirroring the idsB/labelsB shape
+    // of the dense CC) — capturing the array in the task closure would
+    // serialize 8 B/node into EVERY task binary instead of once per
+    // executor over the torrent
     val finalB = sc.broadcast(ranks)
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     spark.createDataFrame(
@@ -492,23 +364,17 @@ object Graph {
     * ROUNDED rank (ties broken by part id) so the top-k cut line never
     * depends on a last-ulp summation difference between engines.
     *
-    * Path choice (all three produce the same contribution multiset —
-    * GraphSpec pins rounded-output identity):
-    *   1. max degree ≤ [[MaxListDegreeKey]] (the structural norm): the
-    *      memoized full [[adjacency]] through [[pageRankAdj]] — its own
-    *      |V| gate picks dense vs declarative-loop;
-    *   2. past the degree ceiling but |V| within the dense ceiling:
-    *      [[pageRankDenseEdges]] — no neighbor list ever aggregates;
-    *   3. past both: the declarative edge-list [[pageRank]] loop, which
-    *      scales with partitions and holds no per-node list either.
-    * The gate costs one max() over the memoized [[degrees]] flat scan. */
+    * Path choice, by |V| alone (both paths produce the same contribution
+    * multiset — GraphSpec pins them within 1e-9 relative): within the
+    * [[Dedup.DenseMaxNodesKey]] ceiling the broadcast-vector
+    * [[pageRankDenseEdges]], past it the declarative edge-list
+    * [[pageRank]] loop, which scales with partitions, not driver memory.
+    * Both read the [[edges]] / [[degrees]] memos; no neighbor list is
+    * ever aggregated. */
   def pagerankTop(spark: SparkSession, dir: String): DataFrame = {
     val degs = degrees(spark, dir)
-    val row = degs.agg(max(col("deg"))).first()
-    val dmax = if (row.isNullAt(0)) 0L else row.getLong(0)
     val ranks =
-      if (dmax <= maxListDegree(spark)) pageRankAdj(adjacency(spark, dir))
-      else if (Dedup.withinDenseCeiling(degs)) pageRankDenseEdges(edges(spark, dir), degs)
+      if (Dedup.withinDenseCeiling(degs)) pageRankDenseEdges(edges(spark, dir), degs)
       else pageRank(edges(spark, dir))
     ranks
       .select(col("node").as("part_id"), round(col("rank"), 4).as("rank"))
@@ -570,38 +436,20 @@ object Graph {
   /** [[neighborJaccard]] over a MATERIALIZED FULL (src, ids) adjacency —
     * the wrapper form for Df-level callers and parity specs: the kept
     * lists, the tag edges and the gate all derive from `adj`. Driver
-    * queries use the parts form directly with the capped memo.
-    *
-    * `dictAttach` picks how restricted degrees re-attach to the scored
-    * pair table:
-    *   - true (default): the ~|V|-row sizes table becomes two sorted
-    *     primitive arrays broadcast into the run-length pass itself
-    *     ([[rleWedgeTopK]]): each surviving run is scored in place (two
-    *     O(log n) binary searches) and offered to a per-partition top-50
-    *     under the exact output order — the pair stream never leaves the
-    *     kernel, so the former second full-stream stage (dictionary
-    *     crossJoin + TakeOrdered over every pair) disappears. Right while
-    *     the retained-vertex dictionary is broadcastable (16 B/node —
-    *     ~10⁸ nodes ≈ 1.6 GB ceiling).
-    *   - false: the two-equi-join form (each a ~|V|-row broadcast onto
-    *     the full pair table) — the fallback when the vertex dictionary
-    *     outgrows broadcastability at extreme graph sizes.
-    * Both paths produce identical output (GraphSpec pins it). */
-  def neighborJaccardAdj(adj: DataFrame, maxDeg: Int = 256,
-                         dictAttach: Boolean = true): DataFrame =
-    Dedup.truncate(neighborJaccardPlan(adj, maxDeg, dictAttach))
+    * queries use the parts form directly with the capped memo. */
+  def neighborJaccardAdj(adj: DataFrame, maxDeg: Int = 256): DataFrame =
+    Dedup.truncate(neighborJaccardPlan(adj, maxDeg))
     // ^ EAGER: materializes at construction so downstream consumers plan
     //   against a flat scan (PlanShapeSpec pins the pre-truncate shape)
 
   /** The un-truncated [[neighborJaccardAdj]] plan over a FULL adjacency —
     * for plan-shape assertions and the Df-level wrapper; derives the
     * three parts (kept lists, tag edges, gate) and delegates. */
-  private[graft] def neighborJaccardPlan(adj: DataFrame, maxDeg: Int = 256,
-                                         dictAttach: Boolean = true): DataFrame =
+  private[graft] def neighborJaccardPlan(adj: DataFrame, maxDeg: Int = 256): DataFrame =
     neighborJaccardPartsPlan(
       adj.filter(size(col("ids")) <= maxDeg),
       adj.select(col("src"), explode(col("ids")).as("dst")),
-      adj, dictAttach,
+      adj,
       // Σ size(ids) over the set-valued adjacency = the distinct edge
       // count, without re-executing the explode the `edges` arg carries
       edgeTotal = Some(adjDegreeSum(adj)))
@@ -633,14 +481,20 @@ object Graph {
     * hub-adjacent candidate pair is still suppressed correctly); `gate`
     * = a ~|V|-row table whose count gates the broadcast-dictionary path
     * (the memoized [[degrees]] for driver calls — a stable instance, so
-    * the gate count caches; the full adjacency for wrapper calls). */
+    * the gate count caches; the full adjacency for wrapper calls).
+    *
+    * The gate picks how restricted degrees re-attach to the scored
+    * pairs: within [[Dedup.DenseMaxNodesKey]] the dictionary fold into
+    * [[rleWedgeTopK]] below; past it the two-equi-join form (each a
+    * ~|V|-row broadcast onto the full pair table), for vertex
+    * dictionaries that outgrow broadcastability at extreme graph sizes.
+    * Both produce identical output (GraphSpec pins it). */
   private[graft] def neighborJaccardPartsPlan(keptAdj: DataFrame, edges: DataFrame,
                                               gate: DataFrame,
-                                              dictAttach: Boolean = true,
                                               edgeTotal: Option[Long] = None): DataFrame = {
     val sizes = nbrSizesKept(keptAdj)
-    if (dictAttach && Dedup.withinDenseCeiling(gate)) {
-      // Dictionary path (default): the ~|V|-row sizes table becomes two
+    if (Dedup.withinDenseCeiling(gate)) {
+      // Dictionary path: the ~|V|-row sizes table becomes two
       // sorted primitive arrays broadcast into the run-length pass, which
       // scores each surviving run IN PLACE and keeps a per-partition
       // top-50 under the exact output order (rounded score desc, ids) —

@@ -57,8 +57,8 @@ private[graft] final class LongUnionFind(initialCap: Int = 16) {
         require(n < LongUnionFind.MaxNodes,
           s"LongUnionFind supports at most ${LongUnionFind.MaxNodes} distinct " +
             "keys (2^29, the 50%-load bound of the largest power-of-two table); " +
-            "this input exceeds the dense path's capacity — run the " +
-            "partition-scaling fallback (dense = false) instead")
+            "this input exceeds the dense path's capacity — the " +
+            "partition-scaling loop must take it instead")
         if (n == nodes.length) growNodes()
         nodes(n) = k; parent(n) = n; csize(n) = 1
         tab(i) = n + 1

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 import graft.{Session, SparkEntry, Tables}
+import graft.ops.PlanMemo
 
 /** Generic per-query cost profiler: runs named [[graft.SparkEntry]]
   * queries with a job/stage listener and prints, per rep, wall seconds
@@ -18,6 +19,11 @@ import graft.{Session, SparkEntry, Tables}
   * sort-merge triangle orientation or `spark.graft.dedup.bcastAttachMaxDocs=0`
   * for the shuffle-join MinHash attach. Compare session minima: the first
   * rep of a query pays its codegen warm-up.
+  *
+  * `PlanMemo` is cleared before each rep, as perfbench clears it before
+  * each pass, so every rep pays the memo builds (graph edges/degrees,
+  * dedup pair stats) its queries own; queries named in one rep share
+  * them, like the queries of one bench pass.
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
@@ -55,17 +61,20 @@ object QueryProbe {
         .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
 
-    for (rep <- 1 to reps; (n, fn) <- fns) {
-      spark.catalog.clearCache()
-      System.gc()
-      jobs = 0; stages = 0; shufR = 0L; shufW = 0L
-      spark.sparkContext.setJobDescription(s"queryprobe $n rep$rep")
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      // listener events drain async; give the bus a beat before reading
-      Thread.sleep(300)
-      println(f"[queryprobe] $n%-28s rep$rep $s%7.2f s  jobs=$jobs%-3d stages=$stages%-3d shufR=${shufR / 1048576.0}%8.3f MB shufW=${shufW / 1048576.0}%8.3f MB")
+    for (rep <- 1 to reps) {
+      PlanMemo.clear()
+      for ((n, fn) <- fns) {
+        spark.catalog.clearCache()
+        System.gc()
+        jobs = 0; stages = 0; shufR = 0L; shufW = 0L
+        spark.sparkContext.setJobDescription(s"queryprobe $n rep$rep")
+        val t0 = System.nanoTime()
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        val s = (System.nanoTime() - t0) / 1e9
+        // listener events drain async; give the bus a beat before reading
+        Thread.sleep(300)
+        println(f"[queryprobe] $n%-28s rep$rep $s%7.2f s  jobs=$jobs%-3d stages=$stages%-3d shufR=${shufR / 1048576.0}%8.3f MB shufW=${shufW / 1048576.0}%8.3f MB")
+      }
     }
     spark.stop()
   }

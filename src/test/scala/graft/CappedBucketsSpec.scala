@@ -197,6 +197,32 @@ class CappedBucketsSpec extends SparkSpec {
       "capped-away bucket members leaked")
   }
 
+  test("minbandPairs' folded est gate ≡ est_sim >= 0.25 on its ungated pairs (7 vs 8 matches)") {
+    // The map-side dedup_minhash path decides the est_sim gate inside the
+    // first-collision kernel (minMatches) instead of a filter on est_sim.
+    // Three planted pairs, each colliding in band 0 only or in bands 0-3:
+    // 2 matches (est 0.0625), 8 matches (est 0.25, kept at the boundary)
+    // and 7 matches (one full band plus five lone positions, dropped).
+    val spark2 = spark
+    import spark2.implicits._
+    def sig(d: Long, shared: Seq[Int], tag: Long): Array[Long] =
+      Array.tabulate(32)(i => if (shared.contains(i)) tag * 1000 + i else d * 100 + i + 2000000L)
+    val planted = Seq(
+      (1L, 2L, 0 until 2),
+      (3L, 4L, 0 until 8),
+      (5L, 6L, (0 until 2) ++ Seq(2, 4, 6, 8, 10)))
+    val sigs = Dedup.truncate(planted.flatMap { case (a, b, shared) =>
+      Seq(a -> sig(a, shared, a), b -> sig(b, shared, a))
+    }.toDF("doc_id", "sig"))
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    val ungated = rowsOf(Dedup.minbandPairs(sigs))
+    val gated = rowsOf(Dedup.minbandPairs(sigs, minMatches = Dedup.NumPerms / 4))
+    assert(ungated.map(p => (p._1, p._2)) == Seq((1L, 2L), (3L, 4L), (5L, 6L)), s"ungated $ungated")
+    assert(gated == ungated.filter(_._3 >= 0.25), s"gated $gated vs ungated $ungated")
+    assert(gated.map(p => (p._1, p._2)) == Seq((3L, 4L)), s"gated $gated")
+  }
+
   test("all-sentinel signatures are excluded from banding and change no pair output") {
     // Empty-shingle docs keep minhashSig's Long.MaxValue fill in every
     // component; their packed band key would WRAP k0·prime+k1 and could

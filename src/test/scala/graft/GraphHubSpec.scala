@@ -28,7 +28,7 @@ class GraphHubSpec extends SparkSpec {
       (B, B + 1), (B, B + 2), (B + 1, B + 2)).toDF("src", "dst")
     val once = star.union(extra)
     // truncated like the driver's memoized [[Graph.edges]]: one flat,
-    // reusable scan for the five tests
+    // reusable scan for the four tests
     graft.ops.Dedup.truncate(
       once.union(once.select(col("dst").as("src"), col("src").as("dst"))))
   }
@@ -101,7 +101,7 @@ class GraphHubSpec extends SparkSpec {
   }
 
   test("pagerank: edge-native dense path conserves rank mass on the star " +
-    "and matches the adjacency path") {
+    "and matches the declarative loop") {
     val degs = hubDegrees(hubEdges)
     val pr = Graph.pageRankDenseEdges(hubEdges, degs, iters = 3).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -111,25 +111,13 @@ class GraphHubSpec extends SparkSpec {
     assert(math.abs(mass - nV) / nV < 1e-9, s"rank mass $mass vs $nV")
     // the hub accumulates rank from every leaf; any leaf is near the floor
     assert(pr(0L) > 1000 * pr(3L), s"hub=${pr(0L)} leaf=${pr(3L)}")
-    // parity with the full-adjacency dense path on the same graph
-    val adj = graft.ops.Dedup.truncate(
-      hubEdges.groupBy(col("src")).agg(collect_list(col("dst")).as("ids")))
-    val prAdj = Graph.pageRankAdj(adj, iters = 3).collect()
+    // parity with the declarative edge-list loop on the same graph
+    val prLoop = Graph.pageRank(hubEdges, iters = 3).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(prAdj.keySet == pr.keySet)
+    assert(prLoop.keySet == pr.keySet)
     pr.foreach { case (n, r) =>
-      assert(math.abs(r - prAdj(n)) <= 1e-9 * math.max(1.0, math.abs(r)),
-        s"node $n edges=$r adj=${prAdj(n)}")
+      assert(math.abs(r - prLoop(n)) <= 1e-9 * math.max(1.0, math.abs(r)),
+        s"node $n dense=$r loop=${prLoop(n)}")
     }
-  }
-
-  test("pagerank degree gate: lowering maxListDegree flips pagerankTop to " +
-    "the edge-native path with IDENTICAL rounded output on real data") {
-    val default = Graph.pagerankTop(spark, sfDir).collect().map(_.toSeq).toSeq
-    spark.conf.set(Graph.MaxListDegreeKey, "1")
-    try {
-      val native = Graph.pagerankTop(spark, sfDir).collect().map(_.toSeq).toSeq
-      assert(native == default, s"native=${native.take(3)} default=${default.take(3)}")
-    } finally spark.conf.unset(Graph.MaxListDegreeKey)
   }
 }

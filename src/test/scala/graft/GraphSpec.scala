@@ -5,6 +5,11 @@ import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
 
+  /** Full (src, ids) adjacency over the [[Graph.edges]] memo, materialized
+    * so consumers plan against a flat scan. */
+  private def fullAdjacency = graft.ops.Dedup.truncate(
+    Graph.edges(spark, sfDir).groupBy(col("src")).agg(collect_list(col("dst")).as("ids")))
+
   test("pagerank conserves total rank mass (Σ rank = |V|)") {
     // every node in the undirected co-purchase graph has outdeg >= 1 and
     // every dst is also a src, so the update r' = 0.15 + 0.85·Σ r/outdeg
@@ -68,23 +73,27 @@ class GraphSpec extends SparkSpec {
 
   test("neighbor jaccard: dictionary attach ≡ two-join attach on real data") {
     // the broadcast-dictionary kernel path (default) and the equi-join
-    // fallback must be row-identical — same pairs, same scores, same cut
-    val adj = Graph.adjacency(spark, sfDir)
+    // fallback (past the denseMaxNodes ceiling) must be row-identical —
+    // same pairs, same scores, same cut
+    val adj = fullAdjacency
     val dict = Graph.neighborJaccardAdj(adj).collect().toSeq
-    val joins = Graph.neighborJaccardAdj(adj, dictAttach = false).collect().toSeq
+    spark.conf.set(graft.ops.Dedup.DenseMaxNodesKey, "2")
+    val joins =
+      try Graph.neighborJaccardAdj(adj).collect().toSeq
+      finally spark.conf.unset(graft.ops.Dedup.DenseMaxNodesKey)
     assert(dict.nonEmpty)
     assert(dict.map(_.toSeq) == joins.map(_.toSeq))
   }
 
   test("pagerank: dense broadcast-vector path ≡ declarative loop on real data") {
-    // the dense fast path (default) and the shuffle-based fallback share
-    // the exact per-node contribution multiset — only summation order
-    // differs, so per-node ranks must agree to ~1e-9 relative and the
-    // rounded top-25 contract output must be row-identical
-    val adj = Graph.adjacency(spark, sfDir)
-    val dense = Graph.pageRankAdj(adj).collect()
+    // the dense fast path (pagerankTop's default) and the shuffle-based
+    // fallback share the exact per-node contribution multiset — only
+    // summation order differs, so per-node ranks must agree to ~1e-9
+    // relative and the rounded top-25 contract output must be row-identical
+    val edges = Graph.edges(spark, sfDir)
+    val dense = Graph.pageRankDenseEdges(edges, Graph.degrees(spark, sfDir)).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val loop = Graph.pageRankAdj(adj, dense = false).collect()
+    val loop = Graph.pageRank(edges).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(dense.nonEmpty && dense.keySet == loop.keySet)
     dense.foreach { case (n, r) =>
@@ -100,12 +109,12 @@ class GraphSpec extends SparkSpec {
 
   test("auto-gate: above denseMaxNodes, pagerank and nbr-jaccard take the " +
     "partition-scaling paths — no flag") {
-    val adj = Graph.adjacency(spark, sfDir) // |V| ≫ 2 at any sf
+    val adj = fullAdjacency // |V| ≫ 2 at any sf
     spark.conf.set(graft.ops.Dedup.DenseMaxNodesKey, "2")
     try {
       // pagerank: the loop's final ranks come off a checkpointed table
       // (ExistingRDD leaf), never the dense rollup's object scan
-      val pr = Graph.pageRankAdj(adj, iters = 2)
+      val pr = Graph.pagerankTop(spark, sfDir)
       val prPlan = pr.queryExecution.executedPlan.toString
       assert(prPlan.contains("ExistingRDD"), prPlan.take(2000))
       assert(!prPlan.contains("SerializeFromObject"), prPlan.take(2000))
@@ -117,7 +126,7 @@ class GraphSpec extends SparkSpec {
       assert(njPlan.contains("Join"), njPlan.take(2000))
     } finally spark.conf.unset(graft.ops.Dedup.DenseMaxNodesKey)
     // defaults restored: the dense/dictionary fast paths re-engage
-    val prPlan = Graph.pageRankAdj(adj, iters = 2)
+    val prPlan = Graph.pagerankTop(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(prPlan.contains("SerializeFromObject"), prPlan.take(2000))
     val njPlan = Graph.neighborJaccardPlan(adj)

@@ -18,6 +18,14 @@ class PlanShapeSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Full (src, ids) adjacency over the [[Graph.edges]] memo, materialized
+    * so consumers plan against a flat scan. */
+  private def fullAdjacency: org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, collect_list}
+    Dedup.truncate(
+      Graph.edges(spark, sfDir).groupBy(col("src")).agg(collect_list(col("dst")).as("ids")))
+  }
+
   test("j1_join_inner: AQE selects broadcast join with no hint in the code") {
     val plan = executedPlan(Relational.joinInner(spark, sfDir))
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
@@ -139,7 +147,7 @@ class PlanShapeSpec extends SparkSpec {
     // the window-lag dedup must reuse the repartition's partitioning and
     // the sortWithinPartitions' ordering — a second exchange or sort here
     // means Catalyst stopped recognizing them and the memo build doubled
-    val directed = Graph.adjacency(spark, sfDir)
+    val directed = fullAdjacency
       .select(org.apache.spark.sql.functions.col("src"),
         org.apache.spark.sql.functions.explode(
           org.apache.spark.sql.functions.col("ids")).as("dst"))
@@ -168,7 +176,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("graph_nbr_jaccard: cap before pair kernel, one-shuffle RLE top-k, no joins at all") {
-    val adj = Graph.adjacency(spark, sfDir)
+    val adj = fullAdjacency
     val df = Graph.neighborJaccardPlan(adj)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
@@ -470,11 +478,11 @@ class PlanShapeSpec extends SparkSpec {
 
   test("cc loop path: checkpoint-truncated labels, equi-joins only") {
     import spark.implicits._
-    // the partition-scaling fallback (dense=false) must still end on a
-    // materialized (checkpointed) label table — the final select scans
-    // an RDD, not the re-derived per-round lineage
+    // the partition-scaling fallback must still end on a materialized
+    // (checkpointed) label table — the final select scans an RDD, not the
+    // re-derived per-round lineage
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-    val df = Dedup.connectedComponents(edges, "a", "b", dense = false)
+    val df = Dedup.connectedComponentsLoop(edges, "a", "b")
     val plan = executedPlan(df)
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"), plan.take(2000))

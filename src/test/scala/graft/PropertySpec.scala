@@ -90,15 +90,15 @@ class PropertySpec extends SparkSpec {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L))
       .toDF("a", "b")
-    // dense = false: this test proves the reliable-checkpoint GATE of the
-    // iterative loop (the dense one-pass path never checkpoints — nothing
-    // to gate), so both sides must take the loop
-    val local = Dedup.connectedComponents(edges, "a", "b", dense = false)
+    // the loop by name: this test proves the reliable-checkpoint GATE of
+    // the iterative loop (the dense one-pass path never checkpoints —
+    // nothing to gate), so both sides must take the loop
+    val local = Dedup.connectedComponentsLoop(edges, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.conf.set(Dedup.CheckpointDirKey, dir)
     try {
-      val reliable = Dedup.connectedComponents(edges, "a", "b", dense = false)
+      val reliable = Dedup.connectedComponentsLoop(edges, "a", "b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(reliable == local)
       // the durable dir must actually have been written (proof the gated
@@ -188,8 +188,7 @@ class PropertySpec extends SparkSpec {
       }
       // the dense default and the pointer-jumping loop are the same exact
       // integer fixpoint — bitwise-identical labels, no tolerance
-      val loop = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b",
-          dense = false)
+      val loop = Dedup.connectedComponentsLoop(edges.toDF("a", "b"), "a", "b")
         .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
       assert(labels == loop, s"seed $seed dense vs loop labels differ")
     }
@@ -207,7 +206,7 @@ class PropertySpec extends SparkSpec {
     ).toDF("a", "b")
     val dense = Dedup.connectedComponents(edges, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val loop = Dedup.connectedComponents(edges, "a", "b", dense = false)
+    val loop = Dedup.connectedComponentsLoop(edges, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 8L, 9L -> 8L)
     assert(dense == want, s"dense: $dense")

@@ -76,13 +76,22 @@ class TextDedupSpec extends SparkSpec {
     assert(hashes(1L) != hashes(3L))
   }
 
-  test("simhash near-dup: dictionary attach ≡ two-join attach on real data") {
-    // the broadcast fp-dictionary path (default) and the equi-join
-    // fallback must be row-identical — same pairs, same hamming
+  test("simhash near-dup: every hamming is the XOR popcount of the two fingerprints") {
+    // driver-side reference for the broadcast fp-dictionary attach: each
+    // output row's hamming must equal bitCount(fp_a ^ fp_b) over the
+    // fingerprints the same kernel computes, and pass the ≤ 3 gate
     val docs = Tables.documents(spark, sfDir)
-    val dict = Dedup.simhashNearPairsDf(docs).collect().toSeq
-    val joins = Dedup.simhashNearPairsDf(docs, dictAttach = false).collect().toSeq
-    assert(dict.map(_.toSeq) == joins.map(_.toSeq))
+    val fp = docs.select(col("doc_id"),
+        graft.functions.TextKernels.simhashKernel(col("text")).as("fp"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rows = Dedup.simhashNearPairsDf(docs).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val (a, b) = (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))
+      val h = r.getAs[Number]("hamming").intValue
+      assert(h == java.lang.Long.bitCount(fp(a) ^ fp(b)), s"($a, $b): hamming $h")
+      assert(h <= 3, s"($a, $b): hamming $h")
+    }
   }
 
   test("ngram jaccard pairs are symmetric-deduped and above threshold") {

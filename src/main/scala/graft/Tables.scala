@@ -87,15 +87,33 @@ object Tables {
     * derived computation (shingling, MinHash, LSH codes) onto one core.
     * Spread them across the session's parallelism BEFORE the heavy columns
     * are computed — the shuffle moves only the raw rows (KBs here; at real
-    * scale inputs come in many splits and this guard makes it a no-op). */
-  private def spread(df: DataFrame): DataFrame = {
+    * scale inputs come in many splits and this guard makes it a no-op).
+    *
+    * The spread is round-robin unless `byRange` names a key; then it is
+    * by RANGE on that key ([[documentsByDocId]]). A range partitioning on
+    * the key a consumer's output is ordered by already satisfies that
+    * ORDER BY, so the final sort stays local instead of adding a second
+    * exchange whose range-sampling job would evaluate the per-row
+    * projection (regex/kernel columns) a second time. The range spread
+    * pays one sampling job over the raw rows instead, so it is not the
+    * default: at sf0.1 it saved one job on each doc_id-ordered map-side
+    * query but cost one on every other consumer, and the sum across the
+    * documents queries rose. */
+  private def spread(df: DataFrame, byRange: Option[String] = None): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     // inputFiles is file-listing metadata — unlike df.rdd.getNumPartitions
     // it does NOT instantiate the RDD lineage (an extra planning pass) on
     // every load. One file < parallelism ⇒ spread; many-split real-scale
     // inputs make this a no-op.
-    if (df.inputFiles.length < target) df.repartition(target) else df
+    if (df.inputFiles.length >= target) df
+    else byRange.fold(df.repartition(target))(k =>
+      df.repartitionByRange(target, org.apache.spark.sql.functions.col(k)))
   }
   def documents(spark: SparkSession, dir: String): DataFrame  = spread(load(spark, dir, "documents"))
+  /** [[documents]] spread by range on doc_id: for a consumer that does
+    * per-row work and orders its output by doc_id ([[graft.ops.Text
+    * .tokenCounts]]), whose ORDER BY then needs no exchange of its own. */
+  def documentsByDocId(spark: SparkSession, dir: String): DataFrame =
+    spread(load(spark, dir, "documents"), Some("doc_id"))
   def embeddings(spark: SparkSession, dir: String): DataFrame = spread(load(spark, dir, "embeddings"))
 }

@@ -187,6 +187,27 @@ object GraftFunctions {
       inputTypes = Seq(ArrayType(LongType), ArrayType(LongType)),
       returnNullable = false))
 
+  /** [[sigMatchCount]] and its gate in one call: a one-element array
+    * holding the count when it is at least `minMatches`, else an empty
+    * array. Exploded, it filters and projects with ONE evaluation per
+    * pair: a Filter on a projected kernel column is pushed into the
+    * attach join's condition (and the Project evaluates the kernel
+    * again), while a Generate's output cannot be pushed below it. */
+  def sigMatchCountAtLeast(sigA: ArrayData, sigB: ArrayData, minMatches: Int): ArrayData = {
+    val m = sigMatchCount(sigA, sigB)
+    new GenericArrayData(if (m >= minMatches) Array[Int](m) else Array.emptyIntArray)
+  }
+
+  def sigMatchCountAtLeastKernel(sigA: Column, sigB: Column, minMatches: Int): Column =
+    bridge.column(StaticInvoke(
+      GraftFunctions.getClass,
+      ArrayType(IntegerType, containsNull = false),
+      "sigMatchCountAtLeast",
+      Seq(bridge.expression(sigA), bridge.expression(sigB),
+        org.apache.spark.sql.catalyst.expressions.Literal(minMatches)),
+      inputTypes = Seq(ArrayType(LongType), ArrayType(LongType), IntegerType),
+      returnNullable = false))
+
   /** Set-space Jaccard of two int64 arrays in ONE pass —
     * `size(array_intersect(a, b)) / size(array_union(a, b))` exactly
     * (both Catalyst operands dedup their inputs; this computes the same
@@ -242,13 +263,23 @@ object GraftFunctions {
     if (u == 0) 0.0 else c.toDouble / u
   }
 
-  def jaccardLongSetsKernel(a: Column, b: Column): Column =
+  /** [[jaccardLongSets]] and its `>= min` gate in one call: a one-element
+    * array when it passes, else empty — exploded, one evaluation per
+    * pair (see [[sigMatchCountAtLeast]]). empty∕empty yields 0.0 and so
+    * fails every positive gate, as the plain kernel under a filter does. */
+  def jaccardLongSetsAtLeast(a: ArrayData, b: ArrayData, min: Double): ArrayData = {
+    val j = jaccardLongSets(a, b)
+    new GenericArrayData(if (j >= min) Array[Double](j) else Array.emptyDoubleArray)
+  }
+
+  def jaccardLongSetsAtLeastKernel(a: Column, b: Column, min: Double): Column =
     bridge.column(StaticInvoke(
       GraftFunctions.getClass,
-      DoubleType,
-      "jaccardLongSets",
-      Seq(bridge.expression(a), bridge.expression(b)),
-      inputTypes = Seq(ArrayType(LongType), ArrayType(LongType)),
+      ArrayType(DoubleType, containsNull = false),
+      "jaccardLongSetsAtLeast",
+      Seq(bridge.expression(a), bridge.expression(b),
+        org.apache.spark.sql.catalyst.expressions.Literal(min)),
+      inputTypes = Seq(ArrayType(LongType), ArrayType(LongType), DoubleType),
       returnNullable = false))
 
   /** Intersection of two SORTED, duplicate-free int64 arrays by two-pointer

@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
@@ -274,6 +276,95 @@ object TextKernels {
       topBigram, if (n >= 2) (n - 1).toLong else 0L))
   }
 
+  /** One-pass token statistics: (n_tokens, n_unique_tokens, n_subwords),
+    * exactly `size(split(trim(t), "\\s+"))`, `size(array_distinct(...))`
+    * of the same split, and `size(filter(split(regexp_replace(t,
+    * "([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]+)", "$1 "), "\\s+"), _ != ""))`
+    * ([[graft.ops.Text.tokensCol]] / [[graft.ops.Text.subwordsCol]]),
+    * without the regex engine or the token arrays:
+    *  - tokens: `trim` strips spaces (0x20) only; Java `\s` is the six
+    *    ASCII bytes space, \t, \n, \x0B, \f, \r, none of which occurs
+    *    inside a multi-byte UTF-8 sequence, so the split runs on bytes.
+    *    A limit −1 split keeps empty pieces: n_tokens = whitespace runs
+    *    + 1 (a leading tab after the trim, or an all-whitespace text,
+    *    yields empty tokens, and "" is one empty token), and an empty
+    *    piece counts once among the distinct tokens.
+    *  - subwords: one per maximal run of ASCII letters, of ASCII digits,
+    *    or of any other non-`\s` characters (every non-ASCII byte is in
+    *    that class, so a surrogate pair or a non-ASCII letter never
+    *    splits a run); `\s` ends a run.
+    *
+    * Invalid UTF-8 is first re-encoded the way the expression forms see
+    * it (`toString` substitutes U+FFFD), so distinct counts compare the
+    * same token bytes. NULL text yields NULL (StaticInvoke propagateNull). */
+  def tokenStats(text: UTF8String): InternalRow = {
+    val s = if (text.isValid) text else UTF8String.fromString(text.toString)
+    val b = s.getBytes
+    var lo = 0
+    var hi = b.length
+    while (lo < hi && b(lo) == ' ') lo += 1
+    while (hi > lo && b(hi - 1) == ' ') hi -= 1
+    // distinct tokens: open addressing over (start, end) byte ranges
+    // (at most (hi - lo + 1) / 2 + 1 distinct tokens: the table stays
+    // under ~half full)
+    var bits = 3
+    while ((1 << bits) < hi - lo + 1) bits += 1
+    val mask = (1 << bits) - 1
+    val starts = new Array[Int](mask + 1)
+    val ends = new Array[Int](mask + 1)
+    val used = new Array[Boolean](mask + 1)
+    var nUnique = 0
+    def addToken(st: Int, en: Int): Unit = {
+      var h = 1
+      var i = st
+      while (i < en) { h = 31 * h + b(i); i += 1 }
+      var slot = ((h ^ (h >>> 16)) * 0x9E3779B9) >>> (32 - bits)
+      var found = false
+      while (used(slot) && !found) {
+        if (java.util.Arrays.equals(b, starts(slot), ends(slot), b, st, en)) found = true
+        else slot = (slot + 1) & mask
+      }
+      if (!found) { used(slot) = true; starts(slot) = st; ends(slot) = en; nUnique += 1 }
+    }
+    var nTokens = 1
+    var start = lo
+    var i = lo
+    while (i < hi) {
+      if (isJavaSpace(b(i))) {
+        addToken(start, i)
+        while (i < hi && isJavaSpace(b(i))) i += 1
+        start = i
+        nTokens += 1
+      } else i += 1
+    }
+    addToken(start, hi)
+    // subword runs over the untrimmed text: class 0 = \s, 1 = letter,
+    // 2 = digit, 3 = anything else
+    var nSub = 0
+    var prev = 0
+    i = 0
+    while (i < b.length) {
+      val c = b(i)
+      val cls =
+        if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')) 1
+        else if (c >= '0' && c <= '9') 2
+        else if (isJavaSpace(c)) 0
+        else 3
+      if (cls != 0 && cls != prev) nSub += 1
+      prev = cls
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](nTokens, nUnique, nSub))
+  }
+
+  private def isJavaSpace(c: Byte): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  val TokenStatsType: StructType = StructType(Seq(
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("n_unique_tokens", IntegerType, nullable = false),
+    StructField("n_subwords", IntegerType, nullable = false)))
+
   /** One-pass language-marker scores: for each language's marker list,
     * the count of document tokens contained in it (occurrences, matching
     * the composable `size(filter(toks, isin(markers)))` — which
@@ -384,6 +475,18 @@ object TextKernels {
       "termFreqs",
       Seq(bridge.expression(text), bridge.expression(terms)),
       inputTypes = Seq(StringType, ArrayType(StringType)),
+      returnNullable = false))
+
+  /** [[tokenStats]] as a struct column (n_tokens, n_unique_tokens,
+    * n_subwords); select it once and read its fields, so the one pass
+    * runs once per row. */
+  def tokenStatsKernel(text: Column): Column =
+    bridge.column(StaticInvoke(
+      TextKernels.getClass,
+      TokenStatsType,
+      "tokenStats",
+      Seq(bridge.expression(text)),
+      inputTypes = Seq(StringType),
       returnNullable = false))
 
   def repStatsKernel(text: Column): Column =

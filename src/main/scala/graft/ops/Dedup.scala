@@ -42,7 +42,7 @@ object Dedup {
   val Rows = NumPerms / Bands
   /** The est_sim ≥ 0.25 gate counted in equal signature components
     * (est_sim = matches / NumPerms), as the map-side emission's kernel
-    * takes it. */
+    * and the verify stage's gated count take it. */
   private val EstMinMatches = NumPerms / 4
 
   /** Shared MinHash bucket-size gates: a bucket is a candidate source only
@@ -416,11 +416,13 @@ object Dedup {
       .join(attach(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))), Seq("doc_b"))
       // est numerator as one kernel loop — identical count to the
       // zip_with/filter/size HOF chain it replaces, without the
-      // per-element interpreted lambdas or the two intermediate arrays
+      // per-element interpreted lambdas or the two intermediate arrays;
+      // the est_sim >= 0.25 gate (m >= NumPerms / 4, exact) rides in the
+      // same call, exploded so it runs once per pair
       .select(col("doc_a"), col("doc_b"),
-        (graft.functions.GraftFunctions.sigMatchCountKernel(
-          col("sig_a"), col("sig_b")).cast("double") / NumPerms).as("est_sim"))
-      .filter(col("est_sim") >= 0.25)
+        explode(graft.functions.GraftFunctions.sigMatchCountAtLeastKernel(
+          col("sig_a"), col("sig_b"), EstMinMatches)).as("m"))
+      .select(col("doc_a"), col("doc_b"), (col("m").cast("double") / NumPerms).as("est_sim"))
     minhashVerifiedPreEst(withEst, docs, bcastAttach)
   }
 
@@ -441,12 +443,12 @@ object Dedup {
       // one-pass set-space Jaccard kernel == size(array_intersect)/
       // size(array_union) (four hash-set builds + two materialized result
       // arrays per pair in expression form — the measured sf10 wall of
-      // this stage); the >= 0.2 gate below is load-bearing for the
+      // this stage); its >= 0.2 gate rides in the same call, exploded so
+      // the kernel runs once per pair, and is load-bearing for the
       // empty/empty edge (the kernel's 0.0 fails it as Divide's null did)
       .select(col("doc_a"), col("doc_b"), col("est_sim"),
-        graft.functions.GraftFunctions.jaccardLongSetsKernel(
-          col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= 0.2)
+        explode(graft.functions.GraftFunctions.jaccardLongSetsAtLeastKernel(
+          col("sh_a"), col("sh_b"), 0.2)).as("jaccard"))
   }
 
   /** MinHash near-dup CLUSTER REPRESENTATIVES — the emission shape a
@@ -1633,9 +1635,10 @@ object Dedup {
     * Scale design: the "bitset" is rendered relationally as the DISTINCT
     * set-bit table of the snapshot — bounded at [[BloomBits]] rows by
     * construction, hence ALWAYS broadcastable regardless of corpus size —
-    * and probing is a broadcast left join (the batch side never shuffles
-    * for the membership test; the 7-per-doc probe rows collapse map-side
-    * in the partial aggregate before the 1-row-per-doc final shuffle).
+    * and probing is a broadcast left join. The batch side is
+    * range-partitioned on doc_id once; the membership test, the
+    * 7-per-doc probe count and the final ORDER BY all run inside those
+    * partitions, with no per-doc shuffle and no verdict/exact re-join.
     * The exact confirmation is an equi-join on 16-byte fingerprints —
     * never text — and in a production deployment runs only on the
     * `maybe_seen` survivors; here it runs on the full batch because the
@@ -1645,15 +1648,15 @@ object Dedup {
     * may false-positive, NEVER false-negative — any FALSE here is a
     * broken filter and flips the oracle hash red). */
   def bloomDedup(spark: SparkSession, dir: String): DataFrame =
-    // the fingerprint frame feeds FOUR subplans (probe build, bit build,
-    // both sides of the exact confirm) — materialize the normalize+md5
-    // corpus scan ONCE instead of replaying it per consumer (at 100 TB
-    // this is the difference between one corpus pass and four)
+    // the fingerprint frame feeds THREE subplans (bit build, the exact
+    // confirm's distinct snapshot fps, the probed batch) — materialize
+    // the normalize+md5 corpus scan ONCE instead of replaying it per
+    // consumer (at 100 TB this is one corpus pass instead of three)
     bloomDedupFromFps(docFps(spark, dir))
 
   /** The memoized (doc_id, fp, n_chars) fingerprint frame — ONE
     * normalize+md5 corpus pass shared by every fingerprint consumer in
-    * the session ([[bloomDedup]]'s four subplans, [[leakSafeSplit]]). */
+    * the session ([[bloomDedup]]'s three subplans, [[leakSafeSplit]]). */
   private def docFps(spark: SparkSession, dir: String): DataFrame =
     PlanMemo.getOrBuild(spark, dir, "doc_fps") {
       Tables.documents(spark, dir)
@@ -1669,21 +1672,26 @@ object Dedup {
 
   private def bloomDedupFromFps(fps: DataFrame): DataFrame = {
     val snapshot = fps.filter(col("doc_id") % 2 === 0)
-    val batch    = fps.filter(col("doc_id") % 2 === 1)
+    val batch = fps.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("fp"))
+      .repartitionByRange(fps.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("doc_id"))
     val bits = snapshot
       .select(explode(bloomPositions(col("fp"))).as("bit"))
       .distinct()
       .withColumn("hit", lit(1))
-    val verdict = batch
-      .select(col("doc_id"), explode(bloomPositions(col("fp"))).as("bit"))
+    val seen = snapshot.select(col("fp")).distinct().withColumn("dup", lit(1))
+    // everything below runs inside the batch's doc_id range partitions:
+    // the exact attach (join left to the planner — the distinct snapshot
+    // fps grow with the corpus), the probe explode, the bit join (a
+    // broadcast: bounded by BloomBits) and the per-doc count, which the
+    // range partitioning already clusters; the ORDER BY is a local sort
+    batch
+      .join(seen, Seq("fp"), "left")
+      .select(col("doc_id"), col("dup").isNotNull.as("is_dup"),
+        explode(bloomPositions(col("fp"))).as("bit"))
       .join(broadcast(bits), Seq("bit"), "left")
-      .groupBy(col("doc_id"))
+      .groupBy(col("doc_id"), col("is_dup"))
       .agg((count(col("hit")) === BloomHashes).as("maybe_seen"))
-    val exact = batch
-      .join(snapshot.select(col("fp")).distinct().withColumn("dup", lit(1)),
-        Seq("fp"), "left")
-      .select(col("doc_id"), col("dup").isNotNull.as("is_dup"))
-    verdict.join(exact, Seq("doc_id"))
       .select(col("doc_id"), col("maybe_seen"), col("is_dup"),
         (col("maybe_seen") || !col("is_dup")).as("bloom_ok"))
       .orderBy("doc_id")
@@ -1729,10 +1737,12 @@ object Dedup {
     *
     * Emits one row per split with doc/char/distinct-fp counts plus
     * `max_splits_per_fp` — a corpus-wide audit (computed, not assumed:
-    * a groupBy-fp distinct-split aggregate) that MUST be 1; a 2 means
-    * some fingerprint crossed splits and flips every row's hash red.
-    * The audit re-attach is a single-row broadcast crossJoin (documented
-    * in the no-NLJ whitelist). */
+    * the number of splits each fingerprint's documents fall in) that
+    * MUST be 1; a 2 means some fingerprint crossed splits and flips every
+    * row's hash red. The rows exchange ONCE, on fp (per-fp conditional
+    * counts per split); one global aggregate over those groups yields
+    * every split's figures and the audit together, so there is no
+    * countDistinct Expand, no second fp aggregate and no audit join. */
   def leakSafeSplit(spark: SparkSession, dir: String): DataFrame =
     leakSafeSplitFromFps(docFps(spark, dir))
 
@@ -1741,16 +1751,33 @@ object Dedup {
     leakSafeSplitFromFps(docs.select(col("doc_id"), normalizedFp, col("n_chars")))
 
   private def leakSafeSplitFromFps(fps: DataFrame): DataFrame = {
-    val assigned = fps.withColumn("split",
-      when(bucketCol < 80, "train").when(bucketCol < 90, "val").otherwise("test"))
-    val audit = assigned.groupBy(col("fp"))
-      .agg(countDistinct(col("split")).as("ns"))
-      .agg(max(col("ns")).as("max_splits_per_fp"))
-    assigned.groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("fp")).as("n_fps"),
-        sum(col("n_chars")).as("n_chars"))
-      .crossJoin(broadcast(audit))
+    val splits = Seq("train", "val", "test")
+    val split = when(bucketCol < 80, "train").when(bucketCol < 90, "val").otherwise("test")
+    // ONE exchange, on fp: per fingerprint, its documents and chars in
+    // each split
+    val perSplit = splits.flatMap(s => Seq(
+      count(when(split === s, lit(1))).as(s"d_$s"),
+      sum(when(split === s, col("n_chars"))).as(s"c_$s")))
+    val perFp = fps.groupBy(col("fp")).agg(perSplit.head, perSplit.tail: _*)
+    // then one global (single-partition) aggregate: per split the doc
+    // count, char sum and distinct-fp count (non-null fp groups with a
+    // document there — countDistinct's null rule), plus the audit
+    val inSplits = splits.map(s => when(col(s"d_$s") > 0, 1).otherwise(0)).reduce(_ + _)
+    val totals = perFp.agg(
+      max(inSplits).cast("long").as("max_splits_per_fp"),
+      splits.flatMap(s => Seq(
+        sum(col(s"d_$s")).as(s"n_docs_$s"),
+        count(when(col("fp").isNotNull && col(s"d_$s") > 0, lit(1))).as(s"n_fps_$s"),
+        sum(col(s"c_$s")).as(s"n_chars_$s"))): _*)
+    // three split rows off one partition, empty splits dropped: the
+    // ORDER BY is a local sort
+    totals
+      .select(explode(array(splits.map(s => struct(lit(s).as("split"),
+        col(s"n_docs_$s").as("n_docs"), col(s"n_fps_$s").as("n_fps"),
+        col(s"n_chars_$s").as("n_chars"))): _*)).as("r"), col("max_splits_per_fp"))
+      .filter(col("r.n_docs") > 0)
+      .select(col("r.split"), col("r.n_docs"), col("r.n_fps"), col("r.n_chars"),
+        col("max_splits_per_fp"))
       .orderBy("split")
   }
 

@@ -928,7 +928,9 @@ object Graph {
     * lists (groups are small — the [[graft.functions.GraftFunctions
     * .sortedLongPairsKernel]] a<b kernel bounds the quadratic step by the
     * order size), one (a, b) count aggregate, then the CC loop whose
-    * per-round shuffle carries labels only. DuckDB replays the whole
+    * per-round shuffle carries labels only; the (id, label) rows are
+    * range-partitioned on label once, which clusters the rollup and
+    * orders its output without a second exchange. DuckDB replays the whole
     * thing — pairing, multiplicity floor, transitive closure (recursive
     * CTE) — so the operator is hash-verified end to end. */
   def components(spark: SparkSession, dir: String, minOrders: Long = 2): DataFrame = {
@@ -947,7 +949,11 @@ object Graph {
       .agg(count(lit(1)).as("n_orders"))
       .filter(col("n_orders") >= minOrders)
       .select(col("a"), col("b"))
+    // one range exchange on label serves both the rollup's clustering and
+    // the final ORDER BY component (a hash exchange for the group-by then
+    // a range exchange for the sort was two)
     Dedup.connectedComponents(edges, "a", "b")
+      .repartitionByRange(col("label"))
       .groupBy(col("label").as("component"))
       .agg(count(lit(1)).as("n_nodes"),
         sort_array(collect_list(col("id"))).as("members"))

@@ -25,15 +25,19 @@ object Text {
       split(regexp_replace(text, "([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]+)", "$1 "), "\\s+"),
       t => t =!= "")
 
-  /** Per-document token statistics. */
+  /** Per-document token statistics: `size` of [[tokensCol]], of its
+    * `array_distinct` and of [[subwordsCol]], from ONE pass of the
+    * [[graft.functions.TextKernels.tokenStats]] kernel (no regex, no
+    * token arrays). [[Tables.documentsByDocId]] arrives range-partitioned
+    * on doc_id, so the kernel runs once after that spread and the ORDER
+    * BY is a local sort — no second exchange whose sampling job would
+    * replay the projection. */
   def tokenCounts(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(
-        col("doc_id"),
-        length(col("text")).as("n_chars_m"),
-        size(tokensCol(col("text"))).as("n_tokens"),
-        size(array_distinct(tokensCol(col("text")))).as("n_unique_tokens"),
-        size(subwordsCol(col("text"))).as("n_subwords"))
+    Tables.documentsByDocId(spark, dir)
+      .select(col("doc_id"), length(col("text")).as("n_chars_m"),
+        graft.functions.TextKernels.tokenStatsKernel(col("text")).as("ts"))
+      .select(col("doc_id"), col("n_chars_m"), col("ts.n_tokens"),
+        col("ts.n_unique_tokens"), col("ts.n_subwords"))
       .orderBy("doc_id")
 
   /** Heuristic quality score from length/punctuation/letter/stopword ratios —
@@ -44,8 +48,7 @@ object Text {
     val nChars = length(t).cast("double")
     val nLetters = (length(t) - length(regexp_replace(t, "[a-zA-Z]", ""))).cast("double")
     val nPunct = (length(t) - length(regexp_replace(t, "[.,;:!?]", ""))).cast("double")
-    val toks = tokensCol(t)
-    val nToks = size(toks).cast("double")
+    val nToks = col("ts.n_tokens").cast("double")
     val meanTokLen = nChars / greatest(nToks, lit(1.0))
     // ratios stay UNROUNDED: they are integer/integer quotients, and
     // round(int/int, k) is cross-engine flaky when the denominator is
@@ -55,12 +58,14 @@ object Text {
     // is bit-identical in both engines; nothing to round, nothing to
     // disagree about.
     Tables.documents(spark, dir)
+      .select(col("doc_id"), t,
+        graft.functions.TextKernels.tokenStatsKernel(t).as("ts"))
       .select(
         col("doc_id"),
         (nLetters / greatest(nChars, lit(1.0))).as("letter_ratio"),
         (nPunct / greatest(nChars, lit(1.0))).as("punct_ratio"),
         meanTokLen.as("mean_token_len"),
-        size(array_distinct(toks)).cast("double")
+        col("ts.n_unique_tokens").cast("double")
           .divide(greatest(nToks, lit(1.0))).as("ttr"))
       .orderBy("doc_id")
   }

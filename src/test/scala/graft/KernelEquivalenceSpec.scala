@@ -30,6 +30,44 @@ class KernelEquivalenceSpec extends SparkSpec {
     assert(mismatches == 0)
   }
 
+  test("tokenStats kernel == split / array_distinct / subword expression forms") {
+    import spark.implicits._
+    import graft.ops.Text.{subwordsCol, tokensCol}
+    // the real documents plus the edges the byte-level split must match:
+    // Java \s (not Unicode) separators, a space-only trim, kept empty
+    // tokens, and non-ASCII / surrogate-pair characters inside runs
+    val edges = Seq[String](
+      null, "", "   ", " \t\n\r\f\u000B ", "  \tlead tab after trim", "trail tab\t",
+      "a  b\t\tc", "!!!...,,;;", "?!a?!b", "a1b2c3d4 9z8y", "123 abc 123 abc",
+      "héllo wörld ÀÉÎ", "Привет мир", "試験 テキスト", "a😀b 😀😀 x𝄞y 𝄞",
+      "non\u00A0breaking\u2003space", "x\u0085y", "dup dup dup Dup")
+    val docs = Tables.documents(spark, sfDir).select(col("text"))
+      .union(edges.toDF("text"))
+      // invalid UTF-8: two different bad lead bytes decode to the same
+      // U+FFFD token in the expression forms
+      .union(spark.range(1).select(expr("cast(unhex('C320C4') as string)").as("text")))
+    val t = col("text")
+    val both = docs.select(t, TextKernels.tokenStatsKernel(t).as("k"),
+      size(tokensCol(t)).as("n_tokens"),
+      size(array_distinct(tokensCol(t))).as("n_unique_tokens"),
+      size(subwordsCol(t)).as("n_subwords"))
+    val bad = both.filter(
+      !(col("k.n_tokens") <=> col("n_tokens")) ||
+        !(col("k.n_unique_tokens") <=> col("n_unique_tokens")) ||
+        !(col("k.n_subwords") <=> col("n_subwords"))).collect()
+    assert(bad.isEmpty, bad.take(5).mkString("\n"))
+    // the null row yields null fields, like size(null) under ANSI
+    val nul = both.filter(t.isNull).select(col("k"), col("n_tokens")).collect()
+    assert(nul.length == 1 && nul.head.isNullAt(0) && nul.head.isNullAt(1))
+    // the edge rows are really edges: empty tokens are kept and counted
+    val byText = both.filter(t.isin("", "  \tlead tab after trim", "a😀b 😀😀 x𝄞y 𝄞"))
+      .select(t, col("k.n_tokens"), col("k.n_unique_tokens"), col("k.n_subwords")).collect()
+      .map(r => r.getString(0) -> (r.getInt(1), r.getInt(2), r.getInt(3))).toMap
+    assert(byText("") == ((1, 1, 0)))
+    assert(byText("  \tlead tab after trim") == ((5, 5, 4)))
+    assert(byText("a😀b 😀😀 x𝄞y 𝄞") == ((4, 4, 8)))
+  }
+
   test("lshCodesOf kernel == lshBucketsCol expression form on real embeddings") {
     val ref = emb.select(col("vec_id"),
       Vectors.lshCodesKernel(col("embedding")).as("k"),
@@ -191,8 +229,11 @@ class KernelEquivalenceSpec extends SparkSpec {
       .union(sigs.select(col("sig").as("a"), col("sig").as("b")))
     val bad = lagged.select(
       GraftFunctions.sigMatchCountKernel(col("a"), col("b")).as("k"),
+      GraftFunctions.sigMatchCountAtLeastKernel(col("a"), col("b"), 8).as("g"),
       size(filter(zip_with(col("a"), col("b"), (x, y) => x === y), x => x)).as("h"))
-      .filter(col("k") =!= col("h")).count()
+      .filter(col("k") =!= col("h") ||
+        !(col("g") <=> when(col("h") >= 8, array(col("h"))).otherwise(array().cast("array<int>"))))
+      .count()
     assert(bad == 0)
   }
 
@@ -222,18 +263,25 @@ class KernelEquivalenceSpec extends SparkSpec {
     // sort ABOVE every numeric and sail through them. try_divide+coalesce
     // maps that one sanctioned divergence onto the kernel's value;
     // everywhere else equality is raw.
+    // The kernel is reached through its gated form: a >= 0.0 gate passes
+    // every value, and the >= 0.2 gate must keep exactly the rows a
+    // filter on the value keeps.
+    val gated = (min: Double) =>
+      GraftFunctions.jaccardLongSetsAtLeastKernel(col("a"), col("b"), min)
     val bad = lagged.select(
-      GraftFunctions.jaccardLongSetsKernel(col("a"), col("b")).as("k"),
+      gated(0.0).as("k0"), gated(0.2).as("k2"),
       coalesce(try_divide(size(array_intersect(col("a"), col("b"))).cast("double"),
         size(array_union(col("a"), col("b")))), lit(0.0)).as("h"))
-      .filter(!(col("k") <=> col("h"))).count()
+      .filter(size(col("k0")) =!= 1 || !(element_at(col("k0"), 1) <=> col("h")) ||
+        !(col("k2") <=> when(col("h") >= 0.2, array(col("h"))).otherwise(array().cast("array<double>"))))
+      .count()
     assert(bad == 0)
     // pin the empty∕empty value explicitly: 0.0, and it FAILS a >= 0.2 gate
     import spark.implicits._
     val ee = Seq((Array.empty[Long], Array.empty[Long])).toDF("a", "b")
-      .select(GraftFunctions.jaccardLongSetsKernel(col("a"), col("b")).as("j"))
-    assert(ee.collect().head.getDouble(0) == 0.0)
-    assert(ee.filter(col("j") >= 0.2).count() == 0)
+      .select(gated(0.0).as("j0"), gated(0.2).as("j2")).collect().head
+    assert(ee.getSeq[Double](0) == Seq(0.0))
+    assert(ee.getSeq[Double](1).isEmpty)
   }
 
   test("sortedLongIntersect kernel == array_intersect on the real oriented-adjacency feed") {

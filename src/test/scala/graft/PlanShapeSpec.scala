@@ -269,7 +269,6 @@ class PlanShapeSpec extends SparkSpec {
       "pipeline_temp_resample", // two single-row broadcast scalar crossJoins
       "text_tfidf",        // single-row broadcast corpus-size crossJoin
       "text_collocations", // two single-row broadcast total crossJoins
-      "pipeline_split",    // single-row broadcast leakage-audit crossJoin
       "dedup_simhash_near", // single-row broadcast fp-dictionary crossJoin (kernel lookups)
       "agg_topk_sketch",   // single-row broadcast MG-sketch crossJoin
       "pipeline_zorder_plan") // single-row broadcast tile-bounds crossJoin
@@ -461,6 +460,33 @@ class PlanShapeSpec extends SparkSpec {
     assert(shuffleCount(Text.shardManifest(spark, sfDir)) <= 3)
     val plan = executedPlan(Text.shardManifest(spark, sfDir))
     assert(!plan.contains("Join"), plan.take(2000))
+  }
+
+  test("text_tokens / dedup_bloom / graph_components: the final ORDER BY adds no range exchange") {
+    // each exchanges its rows once, on the key its output is ordered by
+    // (Tables.documentsByDocId's doc_id range, the bloom batch's doc_id
+    // range, the label range before the component rollup), so the sort is
+    // local: a rangepartitioning exchange planned by EnsureRequirements
+    // would be a second shuffle, and its sampling job would replay the
+    // projection
+    for ((name, df) <- Seq("text_tokens" -> Text.tokenCounts(spark, sfDir),
+      "dedup_bloom" -> Dedup.bloomDedup(spark, sfDir),
+      "graph_components" -> Graph.components(spark, sfDir))) {
+      val plan = executedPlan(df)
+      assert("rangepartitioning\\([^\\n]*ENSURE_REQUIREMENTS".r.findFirstIn(plan).isEmpty,
+        s"$name:\n${plan.take(3000)}")
+      assert(plan.contains("rangepartitioning"), s"$name:\n${plan.take(3000)}")
+    }
+  }
+
+  test("pipeline_split: one hash exchange on fp, one SinglePartition exchange, no join") {
+    val plan = executedPlan(Dedup.leakSafeSplit(spark, sfDir))
+      .split("== Initial Plan ==").head
+    val exchanges = "Exchange [a-zA-Z]+".r.findAllIn(plan).toSeq
+    assert(exchanges == Seq("Exchange SinglePartition", "Exchange hashpartitioning"),
+      plan.take(3000))
+    assert("hashpartitioning\\(fp#".r.findAllIn(plan).size == 1, plan.take(3000))
+    assert(!plan.contains("Join") && !plan.contains("Expand"), plan.take(3000))
   }
 
   test("graph_components: dense union-find rollup, no joins at all") {

@@ -15,8 +15,8 @@ import graft.ops.{Dedup, Graph}
   * The session is Bench's (cores from `SPARK_GRAFT_CPUS`, default 32), so
   * the plan is the one the bench executes at that data size; `key=value`
   * arguments are session-conf overrides applied before planning. The
-  * query is not run, but size-gated operators run their small count jobs
-  * while the plan is built.
+  * query is not run, but operators that materialize eagerly (memos,
+  * truncates) run those jobs while the plan is built.
   */
 object Explain {
   /** Inner plans that the declared query hides behind an eager truncate
@@ -24,12 +24,14 @@ object Explain {
     * pseudo-names. */
   private val inner: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the un-truncated triangle plan the truncate runs
-    "graph_triangles!plan" -> ((s, d) => Graph.trianglePlanOriented(
-      Graph.orientedEdges(Graph.edges(s, d), Graph.degrees(s, d)))._1),
+    "graph_triangles!plan" -> { (s, d) =>
+      val (degs, nodes, _) = Graph.degreesObserved(s, d)
+      Graph.trianglePlanOriented(Graph.orientedEdges(Graph.edges(s, d), degs, nodes))._1
+    },
     // the nbr_jaccard wedge count crosses into RDD space (run-length pass
     // over a sorted shuffle): its tagged+sorted wedge∪edge subplan
     "graph_nbr_jaccard!wedges" -> ((s, d) => Graph.nbrTaggedSortedParts(
-      Graph.cappedAdjacency(s, d), Graph.edges(s, d))),
+      Graph.cappedAdjacency(s, d), Graph.edges(s, d), Graph.nbrWedgeRows(s, d))),
     // connected components materializes the reps' chain-candidate →
     // verify plan eagerly: the verified chain graph it consumes
     "dedup_minhash_reps!verified" -> ((s, d) =>

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline (beyond-reference;
@@ -89,8 +89,8 @@ object Dedup {
     * the identical pipeline on synthetic corpora with planted near-dups
     * (driver data has none). */
   def minhashPairsDf(documents: DataFrame): DataFrame = {
-    val (docs, sigs) = minhashDocsSigs(documents)
-    val gate = minhashGate(docs)
+    val (docs, sigs, docStats) = minhashDocsSigs(documents)
+    val gate = minhashGate(docs.sparkSession, docStats.getLong(0))
     // all-pairs emission: every C(k,2) pair of each capped bucket. In the
     // map-side window the first-surviving-collision rule ([[minbandPairs]])
     // emits each pair exactly once, already carrying est_sim — no distinct
@@ -99,8 +99,8 @@ object Dedup {
     val verified =
       if (gate.mapSide)
         minhashVerifiedPreEst(minbandPairs(sigs, EstMinMatches), docs, bcastAttach = true)
-      else minhashVerified(distinctCandidates(docs, sigs, chain = false), docs, sigs,
-        bcastAttach = gate.bcastAttach)
+      else minhashVerified(distinctCandidates(sigs, chain = false, packableIds(docStats)),
+        docs, sigs, bcastAttach = gate.bcastAttach)
     verified
       .select(col("doc_a"), col("doc_b"),
         round(col("est_sim"), 4).as("est_sim"), round(col("jaccard"), 4).as("jaccard"))
@@ -142,46 +142,29 @@ object Dedup {
     * first-surviving-collision kernel instead of aggregated). */
   private final case class MinhashGate(bcastAttach: Boolean, mapSide: Boolean)
 
-  /** [[MinhashGate]] for `docs` (any frame with a doc_id column; one
-    * memoized [[gateStats]] job). Used by all three MinHash queries. */
-  private def minhashGate(docs: DataFrame): MinhashGate = {
-    val n = gateStats(docs)._1
-    val conf = docs.sparkSession.conf
+  /** [[MinhashGate]] for a corpus of `n` documents — the count observed
+    * on the docs (or SQL-form signature) materialization, so the gate
+    * runs no job of its own. Used by all three MinHash queries. */
+  private def minhashGate(spark: SparkSession, n: Long): MinhashGate = {
+    val conf = spark.conf
     val bcast = n <= conf.getOption(BcastAttachMaxDocsKey).map(_.toLong).getOrElse(2000000L)
     MinhashGate(bcast, bcast && n >= conf.getOption(MinbandMinDocsKey).map(_.toLong).getOrElse(100000L))
   }
 
-  /** Weakly-memoized (count, min doc_id, max doc_id) per materialized
-    * docs/sigs instance — ONE flat-scan aggregate job feeds
-    * [[minhashGate]] AND the packed-pair id-range gate ([[packableIds]]);
-    * adding min/max to what used to be a bare count() costs no extra
-    * job. */
-  private def gateStats(docs: DataFrame): (Long, Long, Long) =
-    Option(dedupGateStats.get(docs)).getOrElse {
-      val r = docs.agg(count(lit(1)), min(col("doc_id")), max(col("doc_id"))).first()
-      val s = (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-      dedupGateStats.put(docs, s)
-      s
-    }
-
-  /** Weak identity cache for [[gateStats]] (the dedup sibling of
-    * [[gateCounts]]). */
-  private val dedupGateStats =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, (Long, Long, Long)])
+  /** The figures [[minhashDocsSigs]] observes on its docs
+    * materialization: (count, min doc_id, max doc_id) — [[minhashGate]]'s
+    * corpus size and [[packableIds]]' id range. */
+  private val DocStats = Seq(count(lit(1)), min(col("doc_id")), max(col("doc_id")))
 
   /** True iff every doc id fits unsigned 32 bits, so a sorted candidate
     * pair (a < b) packs injectively into ONE long (a·2³² | b) and the
     * candidate distinct shuffles 8-byte keys instead of 16-byte structs
     * (§2.3 narrower shuffle keys). Corpora past 2³² docs (or with
     * negative ids) keep the struct form automatically — the data chooses,
-    * like every other gate here. */
-  private def packableIds(docs: DataFrame): Boolean = {
-    val (_, lo, hi) = gateStats(docs)
-    lo >= 0L && hi <= 4294967295L
-  }
+    * like every other gate here. Reads the observed [[DocStats]] row; an
+    * empty corpus's null min/max read as 0 (packable). */
+  private[graft] def packableIds(docStats: Row): Boolean =
+    longStat(docStats, 1) >= 0L && longStat(docStats, 2) <= 4294967295L
 
   // ---- shared MinHash pipeline stages -----------------------------------
   // minhashPairsDf and minhashClusterRepsDf differ ONLY in how a bucket's
@@ -197,14 +180,17 @@ object Dedup {
     * otherwise) — they feed 2-3 downstream joins and the expensive
     * per-document kernel passes must not re-run per consumer. Unlike a
     * bare .persist() the blocks are released by ContextCleaner as soon as
-    * the result is unreferenced (CacheHygieneSpec pins it). */
-  private[graft] def minhashDocsSigs(documents: DataFrame): (DataFrame, DataFrame) = {
+    * the result is unreferenced (CacheHygieneSpec pins it). The third
+    * value is the [[DocStats]] row observed on the docs materialization —
+    * what [[minhashGate]] and [[packableIds]] read. */
+  private[graft] def minhashDocsSigs(documents: DataFrame): (DataFrame, DataFrame, Row) = {
     import graft.functions.TextKernels
-    val docs = truncate(documents
-      .select(col("doc_id"), TextKernels.shinglesKernel(col("text"), 3).as("shingles")))
+    val (docs, docStats) = truncateObserved(documents
+      .select(col("doc_id"), TextKernels.shinglesKernel(col("text"), 3).as("shingles")),
+      DocStats: _*)
     val sigs = truncate(docs.select(col("doc_id"),
       TextKernels.minhashSigKernel(col("shingles"), NumPerms).as("sig")))
-    (docs, sigs)
+    (docs, sigs, docStats)
   }
 
   /** Banded bucket membership → capped member lists (band, k0, k1, ids).
@@ -336,15 +322,15 @@ object Dedup {
   /** Distinct (doc_a < doc_b) candidates from the capped buckets: every
     * C(k,2) pair of a bucket, or with `chain` only the k−1 consecutive
     * pairs of its sorted member list ([[minhashClusterReps]]). When
-    * [[packableIds]] holds, each pair packs into one long (a·2³² | b,
-    * injective since a < b < 2³²) so the distinct exchange carries 8-byte
-    * keys instead of 16-byte structs — on the above-gate scale path the
-    * distinct is the family's largest remaining shuffle — and unpacks
-    * after; past the unsigned-32 id range the struct form is kept. */
-  private def distinctCandidates(docs: DataFrame, sigs: DataFrame,
-                                 chain: Boolean): DataFrame = {
+    * `packed` ([[packableIds]]) holds, each pair packs into one long
+    * (a·2³² | b, injective since a < b < 2³²) so the distinct exchange
+    * carries 8-byte keys instead of 16-byte structs — on the above-gate
+    * scale path the distinct is the family's largest remaining shuffle —
+    * and unpacks after; past the unsigned-32 id range the struct form is
+    * kept. */
+  private def distinctCandidates(sigs: DataFrame, chain: Boolean,
+                                 packed: Boolean): DataFrame = {
     import graft.functions.GraftFunctions.{sortedLongPairsKernel, sortedLongPairsPackedKernel}
-    val packed = packableIds(docs)
     // `pair` over consecutive members i, i+1 of the sorted list
     def chainOf(pair: String): Column =
       expr(s"transform(sequence(1, size(ids) - 1), i -> $pair)")
@@ -496,12 +482,13 @@ object Dedup {
     * this plan from the query's explain, so `graft.Explain` dumps it as
     * `dedup_minhash_reps!verified`. */
   private[graft] def minhashChainVerified(documents: DataFrame): DataFrame = {
-    val (docs, sigs) = minhashDocsSigs(documents)
+    val (docs, sigs, docStats) = minhashDocsSigs(documents)
     // chain candidates: consecutive pairs of the bucket's SORTED member
     // list (k−1 rows, not C(k,2)); bucketing + caps + gates are the
     // SHARED stages (see minhashBuckets/minhashVerified)
-    val chains = distinctCandidates(docs, sigs, chain = true)
-    minhashVerified(chains, docs, sigs, bcastAttach = minhashGate(docs).bcastAttach)
+    val chains = distinctCandidates(sigs, chain = true, packableIds(docStats))
+    minhashVerified(chains, docs, sigs,
+      bcastAttach = minhashGate(docs.sparkSession, docStats.getLong(0)).bcastAttach)
       .select(col("doc_a"), col("doc_b"))
   }
 
@@ -772,29 +759,6 @@ object Dedup {
   private[graft] def denseMaxNodes(spark: SparkSession): Long =
     spark.conf.getOption(DenseMaxNodesKey).map(_.toLong).getOrElse(50000000L)
 
-  /** True iff `rows` fits the dense/dictionary ceiling — the auto-gate
-    * for the adjacency-fed fast paths. Costs at most one count job per
-    * DataFrame INSTANCE (weakly memoized below): the graph family passes
-    * its MEMOIZED (checkpoint-materialized) row-per-node adjacency — a
-    * stable instance per (session, dir) — so across a family's queries
-    * the flat-scan count runs once, and it is never a recompute of the
-    * aggregate. */
-  private[graft] def withinDenseCeiling(rows: DataFrame): Boolean = {
-    val n = Option(gateCounts.get(rows)).map(_.longValue).getOrElse {
-      val c = rows.count()
-      gateCounts.put(rows, java.lang.Long.valueOf(c))
-      c
-    }
-    n <= denseMaxNodes(rows.sparkSession)
-  }
-
-  /** Weak identity cache for [[withinDenseCeiling]]'s row counts — keys
-    * are the DataFrame instances themselves (the PlanMemo degree table is
-    * a stable instance), so entries vanish with the plans they describe. */
-  private val gateCounts =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, java.lang.Long])
-
   /** Eager materialization + lineage truncation at operator exit points
     * (and inside iterative loops): RELIABLE `checkpoint()` when
     * [[CheckpointDirKey]] names a durable dir — localCheckpoint blocks
@@ -822,6 +786,25 @@ object Dedup {
       case None => df.localCheckpoint()
     }
   }
+
+  /** [[truncate]] with `stats` (aggregate columns) observed on the
+    * materialization job itself (`Dataset.observe`): still ONE job, and
+    * the Row holds the figures in `stats` order — how the size gates read
+    * the frames they gate without a pre-count job of their own. The
+    * reliable path's persist before the checkpoint write keeps each
+    * figure single-counted. No `stats`: plain [[truncate]], empty Row. */
+  private[graft] def truncateObserved(df: DataFrame, stats: Column*): (DataFrame, Row) =
+    if (stats.isEmpty) (truncate(df), Row.empty)
+    else {
+      val obs = org.apache.spark.sql.Observation()
+      val chk = truncate(df.observe(obs, stats.head, stats.tail: _*))
+      (chk, org.apache.spark.sql.graft.bridge.observedRow(obs))
+    }
+
+  /** Long figure `i` of an observed or aggregated stats Row; null (a
+    * sum/min/max over no rows) reads as 0. */
+  private[graft] def longStat(r: Row, i: Int): Long =
+    if (r.isNullAt(i)) 0L else r.getLong(i)
 
   /** Connected components; output = one (id, label) row per node in the
     * edge list, label = MIN id in the component — the operator that turns
@@ -974,9 +957,6 @@ object Dedup {
   private[graft] def connectedComponentsLoop(edges: DataFrame, aCol: String,
                                              bCol: String, maxIter: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
-    val reliableDir = spark.conf.getOption(CheckpointDirKey)
-    reliableDir.foreach(spark.sparkContext.setCheckpointDir)
     // undirected edge list, both directions, PRE-PARTITIONED on dst: the
     // per-round label join below is an equi-join on dst, so hash-placing
     // the (static, reused-every-round) edge side once means Catalyst
@@ -995,36 +975,19 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // Each round ends in ONE job: the round's (id, prev, label) plan is
-    // materialized through an EAGER Dataset checkpoint carrying an
-    // `observe` metric that counts label changes — the convergence probe
-    // rides the materialization for free instead of being a second driver
-    // job per round (job-scheduling overhead is what dominates iterative
-    // loops on a busy cluster/JVM). Checkpointing (local or reliable)
-    // truncates lineage, so every round plans against a flat scan — O(1)
-    // plan depth regardless of iteration count. Unlike an `rdd.map` hop,
-    // observe+checkpoint never deserializes rows out of Tungsten.
-    var roundIdx = 0
+    // materialized through [[truncateObserved]] with a metric that counts
+    // label changes — the convergence probe rides the materialization for
+    // free instead of being a second driver job per round (job-scheduling
+    // overhead is what dominates iterative loops on a busy cluster/JVM).
+    // Checkpointing (local or reliable) truncates lineage, so every round
+    // plans against a flat scan — O(1) plan depth regardless of iteration
+    // count. Unlike an `rdd.map` hop, observe+checkpoint never
+    // deserializes rows out of Tungsten.
     def materializeRound(round: DataFrame): (DataFrame, Long) = {
-      roundIdx += 1
-      val obs = org.apache.spark.sql.Observation(s"cc_changed_$roundIdx")
-      val observed = round.observe(obs,
+      val (chk, stats) = truncateObserved(round,
         sum(when(col("prev") =!= col("label"), 1L)).as("changed"))
-      val chk = reliableDir match {
-        case Some(_) =>
-          // persist first so the checkpoint write replays from cache, not
-          // by recomputing the whole round (it also keeps the observe
-          // accumulator single-counted)
-          observed.persist(StorageLevel.MEMORY_AND_DISK)
-          val c = observed.checkpoint() // eager — the one job
-          observed.unpersist(blocking = false)
-          c
-        case None => observed.localCheckpoint() // eager — the one job
-      }
-      val changed = obs.get.get("changed") match {
-        case Some(v: Long) => v
-        case _ => 0L // sum(when) over zero matches is null
-      }
-      (chk.select(col("id"), col("label")), changed)
+      // sum(when) over zero matches is null: 0 changes
+      (chk.select(col("id"), col("label")), longStat(stats, 0))
     }
 
     // The first propagation round is folded into initialization: with
@@ -1303,8 +1266,9 @@ object Dedup {
     * via the self-join) and — under the broadcast gate — the two sig
     * attaches of [[minhashSqlPairs]]' map-side emission, so the expensive
     * shingle+md5+32-permutation pass must run once, not once per
-    * consumer. */
-  private[graft] def minhashSqlSigs(spark: SparkSession, dir: String): DataFrame = {
+    * consumer. Also returns its row count (one row per ≥3-token doc),
+    * observed on that materialization for [[minhashGate]]. */
+  private[graft] def minhashSqlSigs(spark: SparkSession, dir: String): (DataFrame, Long) = {
     val toksExpr = "split(regexp_replace(lower(trim(text)), '\\\\s+', ' '), ' ')"
     val base = Tables.documents(spark, dir)
       .selectExpr("doc_id", s"$toksExpr AS toks")
@@ -1323,7 +1287,9 @@ object Dedup {
     val sigCols = SqlPerms.map { case (i, a, b) =>
       min((lit(a) * col("h") + lit(b)) % SqlPrime).as(s"m$i")
     }
-    truncate(hashed.groupBy("doc_id").agg(sigCols.head, sigCols.drop(1): _*))
+    val (sigs, stats) = truncateObserved(
+      hashed.groupBy("doc_id").agg(sigCols.head, sigCols.drop(1): _*), count(lit(1)))
+    (sigs, stats.getLong(0))
   }
 
   /** The (doc_id, band, key) band table of [[minhashSqlPairs]]. */
@@ -1352,7 +1318,7 @@ object Dedup {
     * bucket's membership — the robust shape for cap-less semantics
     * (round-14 A/B, docs/BENCH_NOTES). */
   def minhashSqlPairs(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = minhashSqlSigs(spark, dir)
+    val (sigs, nSigs) = minhashSqlSigs(spark, dir)
     val bands = minhashSqlBands(sigs)
     val joined = bands.as("x").join(bands.as("y"),
       col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
@@ -1370,10 +1336,10 @@ object Dedup {
     // output row-for-row identical (the DuckDB oracle replays the
     // join+groupBy shape unchanged). Outside the window the aggregate form
     // runs (the floor cost −11% at sf0.1 in r18 when this query lacked
-    // it). The gate counts the already-truncated sigs (one row per
-    // ≥3-token doc, flat checkpoint-block scan) instead of re-scanning the
-    // raw documents table with its text column.
-    if (minhashGate(sigs).mapSide) {
+    // it). The gate reads the sigs count observed on their own
+    // materialization (one row per ≥3-token doc) — no job of its own,
+    // and no re-scan of the raw documents table with its text column.
+    if (minhashGate(spark, nSigs).mapSide) {
       val sigArr = sigs.select(col("doc_id"),
         array((0 until NumPerms).map(i => col(s"m$i")): _*).as("sig"))
       val cands = joined.select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),

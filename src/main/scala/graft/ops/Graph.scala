@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -130,14 +130,22 @@ object Graph {
     * aggregate, so the per-group state is one counter regardless of
     * degree (contrast a list aggregate, whose buffer grows with the hub).
     * Feeds [[degreeDistribution]], the orientation joins of
-    * [[triangleCounts]], and [[pagerankTop]]'s |V| gate and degree
-    * dictionary. */
+    * [[triangleCounts]], and [[pagerankTop]]'s degree dictionary. */
   def degrees(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.getOrBuild(spark, dir, "graph.degrees") {
+    degreesObserved(spark, dir)._1
+
+  /** The [[degrees]] memo with |V| (its rows) and |E| (Σ deg = the
+    * distinct directed edge count), both observed on the memo's own
+    * materialization — the figures the family's size gates read. */
+  private[graft] def degreesObserved(spark: SparkSession, dir: String): (DataFrame, Long, Long) = {
+    val (degs, stats) = PlanMemo.getOrBuildObserved(spark, dir, "graph.degrees",
+        count(lit(1)), sum(col("deg"))) {
       edges(spark, dir).groupBy(col("src"))
         .agg(count(lit(1)).as("deg"))
         .select(col("src").as("node"), col("deg"))
     }
+    (degs, stats.getLong(0), Dedup.longStat(stats, 1))
+  }
 
   /** Memoized degree-CAPPED adjacency (src, ids): only nodes with degree
     * ≤ maxDeg carry a row, and the cap is enforced INSIDE the aggregation
@@ -151,7 +159,14 @@ object Graph {
     * bucket families. [[edges]] is duplicate-free by construction, which
     * is exactly the CappedCollect input contract. */
   def cappedAdjacency(spark: SparkSession, dir: String, maxDeg: Int = 256): DataFrame =
-    PlanMemo.getOrBuild(spark, dir, s"graph.adjacency.capped.$maxDeg") {
+    cappedAdjacencyObserved(spark, dir, maxDeg)._1
+
+  /** The [[cappedAdjacency]] memo with its [[keptStats]] (Σ d(d+1)/2,
+    * Σ d) observed on the memo's own materialization. */
+  private[graft] def cappedAdjacencyObserved(spark: SparkSession, dir: String,
+                                             maxDeg: Int): (DataFrame, Row) =
+    PlanMemo.getOrBuildObserved(spark, dir, s"graph.adjacency.capped.$maxDeg",
+        keptStats(size(col("ids"))): _*) {
       // pinned at shuffle-partition count (an explicit numPartitions
       // repartition AQE cannot override): the adjacency is tiny BY BYTES,
       // so AQE's size-based coalesce would checkpoint it as ~3 blocks —
@@ -196,7 +211,7 @@ object Graph {
     * aggregation stage on EVERY iteration — at bench-scale dictionaries
     * (32 partitions × ~20k nodes ≈ 5 MB) that is 6 stages per query of
     * pure scheduling overhead. Above the bound the 2-level tree stays:
-    * under the denseMaxNodes gate (10⁷ nodes → 80 MB per partial) a
+    * under the denseMaxNodes gate (5·10⁷ nodes → 400 MB per partial) a
     * wide cluster's partial fan-in must merge on executors first.
     * Summation ORDER differs between the two shapes — same class of
     * variation as the partition-accumulation order itself, absorbed by
@@ -372,9 +387,9 @@ object Graph {
     * Both read the [[edges]] / [[degrees]] memos; no neighbor list is
     * ever aggregated. */
   def pagerankTop(spark: SparkSession, dir: String): DataFrame = {
-    val degs = degrees(spark, dir)
+    val (degs, nodes, _) = degreesObserved(spark, dir)
     val ranks =
-      if (Dedup.withinDenseCeiling(degs)) pageRankDenseEdges(edges(spark, dir), degs)
+      if (nodes <= Dedup.denseMaxNodes(spark)) pageRankDenseEdges(edges(spark, dir), degs)
       else pageRank(edges(spark, dir))
     ranks
       .select(col("node").as("part_id"), round(col("rank"), 4).as("rank"))
@@ -402,27 +417,49 @@ object Graph {
     * memo); the cut is by ROUNDED score with id tie-breaks
     * (cross-engine-stable line). */
   def neighborJaccard(spark: SparkSession, dir: String, maxDeg: Int = 256): DataFrame = {
-    val degs = degrees(spark, dir)
-    Dedup.truncate(neighborJaccardPartsPlan(
-      cappedAdjacency(spark, dir, maxDeg),
-      edges(spark, dir),
-      degs,
-      // Σ deg over the materialized memo = |E| distinct directed — an
-      // O(|V|) flat-scan aggregate instead of an O(|E|) edges.count()
-      edgeTotal = Some(degreeSum(degs))))
+    val nodes = degreesObserved(spark, dir)._2
+    Dedup.truncate(neighborJaccardPartsPlan(cappedAdjacency(spark, dir, maxDeg),
+      edges(spark, dir), nodes, nbrWedgeRows(spark, dir, maxDeg)))
   }
 
-  /** Σ deg over a (node, deg) table = the distinct directed edge count. */
-  private def degreeSum(degs: DataFrame): Long = {
-    val r = degs.agg(sum(col("deg"))).first()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
+  /** Σ d(d+1)/2 and Σ d over the kept adjacency rows' degrees `d` (null
+    * entries skipped): the kept nodes' C(d,2) wedges + d edge tags, and
+    * their edge tags alone — the terms of the [[nbrTaggedSortedParts]]
+    * row estimate. The capped-adjacency memo observes them on its
+    * materialization; the Df-level wrappers aggregate the same columns
+    * ([[adjFigures]]). BIGINT before multiplying: with int arithmetic a
+    * caller-supplied maxDeg ≥ 46341 lets d*(d+1) overflow negative and
+    * nPart silently collapse to the core floor. */
+  private def keptStats(d: Column): Seq[Column] = Seq(
+    sum(d.cast("bigint") * (d + 1) / 2).cast("long"),
+    sum(d.cast("bigint")).cast("long"))
+
+  /** The wedge∪edge row count [[nbrTaggedSortedParts]] sizes nPart from:
+    * the kept rows plus the edge tags of the degree-capped hubs,
+    * |E| − Σ_kept d ([[keptStats]] gives both kept terms). The hub term
+    * is clamped at 0: an inconsistent caller (edgeTotal < Σ_kept d) must
+    * not produce a negative term that silently collapses nPart to the
+    * core floor — that re-creates the exact UNABLE_TO_ACQUIRE_MEMORY
+    * failure the volume-scaled count exists to prevent. */
+  private def wedgeRows(keptRows: Long, keptDeg: Long, edgeTotal: Long): Long =
+    keptRows + math.max(0L, edgeTotal - keptDeg)
+
+  /** [[wedgeRows]] of the driver's nbr-Jaccard at `maxDeg`: the
+    * capped-adjacency memo's observed kept terms and the degree memo's
+    * observed |E|. */
+  private[graft] def nbrWedgeRows(spark: SparkSession, dir: String, maxDeg: Int = 256): Long = {
+    val kept = cappedAdjacencyObserved(spark, dir, maxDeg)._2
+    wedgeRows(Dedup.longStat(kept, 0), Dedup.longStat(kept, 1), degreesObserved(spark, dir)._3)
   }
 
-  /** Σ size(ids) over a duplicate-free (src, ids) adjacency = the
-    * distinct directed edge count (wrapper-path [[degreeSum]]). */
-  private def adjDegreeSum(adj: DataFrame): Long = {
-    val r = adj.agg(sum(size(col("ids")).cast("bigint"))).first()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
+  /** The Df-level wrappers' figures over a full (src, ids) adjacency, in
+    * ONE aggregate: |V| (rows) and the [[wedgeRows]] estimate from
+    * |E| = Σ size(ids) and the [[keptStats]] of the rows within `maxDeg`. */
+  private[graft] def adjFigures(adj: DataFrame, maxDeg: Int): (Long, Long) = {
+    val d = size(col("ids"))
+    val r = adj.agg(count(lit(1)),
+      (sum(d.cast("bigint")) +: keptStats(when(d <= maxDeg, d))): _*).first()
+    (r.getLong(0), wedgeRows(Dedup.longStat(r, 2), Dedup.longStat(r, 3), Dedup.longStat(r, 1)))
   }
 
   /** Core of [[neighborJaccard]] over any directed edge list covering both
@@ -444,15 +481,14 @@ object Graph {
 
   /** The un-truncated [[neighborJaccardAdj]] plan over a FULL adjacency —
     * for plan-shape assertions and the Df-level wrapper; derives the
-    * three parts (kept lists, tag edges, gate) and delegates. */
-  private[graft] def neighborJaccardPlan(adj: DataFrame, maxDeg: Int = 256): DataFrame =
+    * parts (kept lists, tag edges, [[adjFigures]]) and delegates. */
+  private[graft] def neighborJaccardPlan(adj: DataFrame, maxDeg: Int = 256): DataFrame = {
+    val (nodes, estRows) = adjFigures(adj, maxDeg)
     neighborJaccardPartsPlan(
       adj.filter(size(col("ids")) <= maxDeg),
       adj.select(col("src"), explode(col("ids")).as("dst")),
-      adj,
-      // Σ size(ids) over the set-valued adjacency = the distinct edge
-      // count, without re-executing the explode the `edges` arg carries
-      edgeTotal = Some(adjDegreeSum(adj)))
+      nodes, estRows)
+  }
 
   /** Restricted degrees over the retained feature space: sz(u) = number of
     * KEPT intermediates adjacent to u (explode kept adjacency, count by the
@@ -464,24 +500,24 @@ object Graph {
       .select(explode(col("ids")).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("sz"))
 
-  /** NOTE on eagerness: plan CONSTRUCTION runs small eager jobs — the
-    * |V| gate's count, the sizes collect+broadcast (dictionary path),
-    * the kept-adjacency row/degree stats, and the edge total (an O(|V|)
-    * sum the callers supply via `edgeTotal`; the `edges.count()`
-    * fallback is O(|E|)) — so building this DataFrame (explain, plan
-    * dumps, tests) already executes those aggregates; the driver
-    * entry immediately truncate-materializes anyway, so query execution
-    * pays nothing extra. Each call's broadcast lives until the
-    * ContextCleaner collects the unreferenced plan (CacheHygieneSpec
-    * pins that nothing persisted survives).
+  /** NOTE on eagerness: the size figures arrive as arguments — observed
+    * on the memos' materializations for driver calls, one aggregate in
+    * the Df-level wrappers — so the only job plan CONSTRUCTION runs here
+    * is the dictionary path's sizes collect+broadcast (the algorithm's
+    * own driver dictionary): building this DataFrame (explain, plan
+    * dumps, tests) already executes it; the driver entry immediately
+    * truncate-materializes anyway, so query execution pays nothing
+    * extra. Each call's broadcast lives until the ContextCleaner collects
+    * the unreferenced plan (CacheHygieneSpec pins that nothing persisted
+    * survives).
     *
     * Parts contract: `keptAdj` = (src, ids) rows for degree-≤-maxDeg
     * nodes ONLY; `edges` = ALL distinct directed edges (hub edges
     * included — they tag existing pairs in the run-length pass, so a
-    * hub-adjacent candidate pair is still suppressed correctly); `gate`
-    * = a ~|V|-row table whose count gates the broadcast-dictionary path
-    * (the memoized [[degrees]] for driver calls — a stable instance, so
-    * the gate count caches; the full adjacency for wrapper calls).
+    * hub-adjacent candidate pair is still suppressed correctly); `nodes`
+    * = |V|, which gates the broadcast-dictionary path; `estRows` = the
+    * wedge∪edge row estimate ([[wedgeRows]]) that sizes the wedge
+    * shuffle.
     *
     * The gate picks how restricted degrees re-attach to the scored
     * pairs: within [[Dedup.DenseMaxNodesKey]] the dictionary fold into
@@ -490,10 +526,9 @@ object Graph {
     * dictionaries that outgrow broadcastability at extreme graph sizes.
     * Both produce identical output (GraphSpec pins it). */
   private[graft] def neighborJaccardPartsPlan(keptAdj: DataFrame, edges: DataFrame,
-                                              gate: DataFrame,
-                                              edgeTotal: Option[Long] = None): DataFrame = {
+                                              nodes: Long, estRows: Long): DataFrame = {
     val sizes = nbrSizesKept(keptAdj)
-    if (Dedup.withinDenseCeiling(gate)) {
+    if (nodes <= Dedup.denseMaxNodes(keptAdj.sparkSession)) {
       // Dictionary path: the ~|V|-row sizes table becomes two
       // sorted primitive arrays broadcast into the run-length pass, which
       // scores each surviving run IN PLACE and keeps a per-partition
@@ -514,11 +549,11 @@ object Graph {
       val spark = keptAdj.sparkSession
       val pairs = sizes.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       val dict = spark.sparkContext.broadcast((pairs.map(_._1), pairs.map(_._2)))
-      rleWedgeTopK(nbrTaggedSortedParts(keptAdj, edges, edgeTotal), dict, 50)
+      rleWedgeTopK(nbrTaggedSortedParts(keptAdj, edges, estRows), dict, 50)
         .orderBy(desc("nbr_jaccard"), col("part_a"), col("part_b"))
         .limit(50) // merge of the ≤ nPart·50 partition survivors
     } else {
-      val commons = rleWedgeCount(nbrTaggedSortedParts(keptAdj, edges, edgeTotal))
+      val commons = rleWedgeCount(nbrTaggedSortedParts(keptAdj, edges, estRows))
         .select(shiftrightunsigned(col("uv"), 32).as("u"),
           col("uv").bitwiseAND(lit(4294967295L)).as("v"), col("common"))
       commons
@@ -538,7 +573,7 @@ object Graph {
     nbrTaggedSortedParts(
       adj.filter(size(col("ids")) <= maxDeg),
       adj.select(col("src"), explode(col("ids")).as("dst")),
-      Some(adjDegreeSum(adj)))
+      adjFigures(adj, maxDeg)._2)
 
   /** The tagged, shuffled, sorted wedge∪edge stream that feeds
     * [[rleWedgeCount]] — exposed separately because the run-length hop
@@ -550,10 +585,11 @@ object Graph {
     *
     * `keptAdj` rows are pre-capped (no size filter runs here since round
     * 15 — the cap lives inside the adjacency aggregation); `edges` is the
-    * full distinct directed edge list, tagged w=0. */
+    * full distinct directed edge list, tagged w=0; `estRows` is the
+    * [[wedgeRows]] estimate of the stream's row count. */
   private[graft] def nbrTaggedSortedParts(keptAdj: DataFrame,
                                           edges: DataFrame,
-                                          edgeTotal: Option[Long] = None): DataFrame = {
+                                          estRows: Long): DataFrame = {
     import graft.functions.GraftFunctions.sortedLongPairsPackedKernel
     // per-intermediate pair explosion via the PACKED JVM pair kernel: one
     // static call per adjacency row emits its C(d,2) pairs as single
@@ -577,33 +613,13 @@ object Graph {
     // stage died with UNABLE_TO_ACQUIRE_MEMORY (round-12 finding). The
     // row count is exactly predictable before the shuffle — Σ C(d,2)
     // wedges over the kept adjacency + one edge tag per distinct
-    // directed edge, two cheap jobs on memoized inputs — so partition
-    // the COMPUTE a row fans out to: ≤ ~8M sort rows (~300 MB sorter
-    // footprint) per partition, floor at the core count, capped at 4096
-    // (at 10⁹ rows that is ~125 partitions; at sf0.1/sf1 the floor
-    // keeps the historical 32-partition plans bit-identical).
-    val spark = keptAdj.sparkSession
-    val cores = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // kept nodes contribute C(d,2) wedges + d edge tags = d(d+1)/2 rows;
-    // degree-capped hubs still ship their edge tags — counted via the
-    // edge total (hub tags = |E| − Σ_kept d). BIGINT before multiplying:
-    // with int arithmetic a caller-supplied maxDeg ≥ 46341 lets d*(d+1)
-    // overflow negative and nPart silently collapse to the core floor.
-    val kr = keptAdj.select(
-      sum(expr("CAST(size(ids) AS BIGINT) * (size(ids) + 1) / 2")).cast("long"),
-      sum(size(col("ids")).cast("bigint")).cast("long")).first()
-    val keptRows = if (kr.isNullAt(0)) 0L else kr.getLong(0)
-    val keptDeg = if (kr.isNullAt(1)) 0L else kr.getLong(1)
-    // hub tags = |E| − Σ_kept d; callers pass the edge total as an
-    // O(|V|) degree sum over tables they already hold — the count()
-    // fallback (direct parts-level callers) is O(|E|). Clamp the hub
-    // term at 0: an inconsistent caller (edgeTotal < keptDeg on the
-    // private parts API) must not produce a negative term that silently
-    // collapses nPart to the core floor — that re-creates the exact
-    // UNABLE_TO_ACQUIRE_MEMORY failure this volume-scaled count exists
-    // to prevent.
-    val estRows =
-      keptRows + math.max(0L, edgeTotal.getOrElse(edges.count()) - keptDeg)
+    // directed edge (`estRows`, from figures observed on the memoized
+    // inputs) — so partition the COMPUTE a row fans out to: ≤ ~8M sort
+    // rows (~300 MB sorter footprint) per partition, floor at the core
+    // count, capped at 4096 (at 10⁹ rows that is ~125 partitions; at
+    // sf0.1/sf1 the floor keeps the historical 32-partition plans
+    // bit-identical).
+    val cores = keptAdj.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val nPart = math.max(cores,
       math.min(4096L, (estRows + WedgeRowsPerPartition - 1) / WedgeRowsPerPartition).toInt)
     wedges.union(und)
@@ -795,16 +811,18 @@ object Graph {
     * ORIENTED adjacency, whose width the orientation theorem bounds at
     * √(2m) regardless of input skew — a structural guarantee where the
     * LSH families need a configured cap. */
-  def triangleCounts(spark: SparkSession, dir: String): DataFrame =
-    triangleCountsEdges(edges(spark, dir), degrees(spark, dir))
+  def triangleCounts(spark: SparkSession, dir: String): DataFrame = {
+    val (degs, nodes, _) = degreesObserved(spark, dir)
+    triangleCountsEdges(edges(spark, dir), degs, nodes)
+  }
 
   /** [[triangleCounts]] over an explicit (distinct directed edges, degree
-    * table) pair — the planted mega-hub spec runs here. Two broadcast-size
-    * joins attach endpoint degrees for the (degree, id) orientation; the
-    * tail is shared with the adjacency form. */
-  private[graft] def triangleCountsEdges(edges: DataFrame,
-                                         degrees: DataFrame): DataFrame = {
-    val oriented = orientedEdges(edges, degrees)
+    * table, |V|) triple — the planted mega-hub spec runs here. Two
+    * broadcast-size joins attach endpoint degrees for the (degree, id)
+    * orientation; the tail is shared with the adjacency form. */
+  private[graft] def triangleCountsEdges(edges: DataFrame, degrees: DataFrame,
+                                         nodes: Long): DataFrame = {
+    val oriented = orientedEdges(edges, degrees, nodes)
     triangleCountsOriented(oriented)
   }
 
@@ -818,9 +836,8 @@ object Graph {
     * 10⁷ nodes ≈ 0.5 GB hashed relation — comfortable executor headroom;
     * above it the sort-merge shape is the correct scale plan and is kept
     * automatically (the data chooses, like [[graft.ops.Dedup
-    * .BcastAttachMaxDocsKey]]). The gate count is a pre-count, not
-    * fail-fast, because every caller passes the checkpoint-materialized
-    * [[degrees]] memo — counting it is a flat block scan. */
+    * .BcastAttachMaxDocsKey]]). The gate reads |V| as observed on the
+    * [[degrees]] memo's materialization, so it runs no job of its own. */
   val BcastDegreesMaxNodesKey = "spark.graft.graph.bcastDegreesMaxNodes"
 
   private def bcastDegreesMaxNodes(spark: SparkSession): Long =
@@ -828,10 +845,12 @@ object Graph {
 
   /** Degree-oriented edges u→v where (deg, id) of u < (deg, id) of v —
     * pure joins + filter, no aggregate of any kind (spec-pinned); the
-    * degree side broadcasts below [[BcastDegreesMaxNodesKey]]. */
-  private[graft] def orientedEdges(edges: DataFrame, degrees: DataFrame): DataFrame = {
+    * degree side (`nodes` rows) broadcasts below
+    * [[BcastDegreesMaxNodesKey]]. */
+  private[graft] def orientedEdges(edges: DataFrame, degrees: DataFrame,
+                                   nodes: Long): DataFrame = {
     val degs =
-      if (degrees.count() <= bcastDegreesMaxNodes(degrees.sparkSession)) broadcast(degrees)
+      if (nodes <= bcastDegreesMaxNodes(degrees.sparkSession)) broadcast(degrees)
       else degrees
     edges.select(col("src").as("u"), col("dst").as("v"))
       .join(degs.select(col("node").as("u"), col("deg").as("du")), Seq("u"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** One checkpoint-materialized DataFrame per (session, sf-dir, key) —
   * the cross-query sharing point for operator families that start from
@@ -13,14 +13,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Entries hold [[Dedup.truncate]]d results (reliable checkpoint when
   * `spark.graft.checkpointDir` is configured, localCheckpoint otherwise),
   * so a memoized value is flat block/file scans, never live lineage.
+  * [[getOrBuildObserved]] entries also hold the statistics observed on
+  * that materialization ([[Dedup.truncateObserved]]) — the figures the
+  * size gates read, at no job of their own.
   *
   * SELF-HEALING: an entry whose local-checkpoint blocks were removed by a
   * caller's unpersist-all (or a lost executor before any reliable dir is
-  * configured) fails validation and is rebuilt instead of poisoning every
-  * later consumer with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. */
+  * configured) fails validation and is rebuilt — and re-observed —
+  * instead of poisoning every later consumer with
+  * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. */
 private[graft] object PlanMemo {
   private val entries =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), (DataFrame, Row)]
 
   private def valid(spark: SparkSession, df: DataFrame): Boolean =
     org.apache.spark.sql.graft.bridge.materializedRdd(df).forall { r =>
@@ -38,20 +42,31 @@ private[graft] object PlanMemo {
                 (build: => DataFrame): DataFrame =
     getOrBuildReleasable(spark, dir, key)((build, () => ()))
 
+  /** [[getOrBuild]] plus `stats` observed on the entry's materialization
+    * job: the Row holds them in `stats` order, and is stored, and rebuilt
+    * on self-heal, with the entry. A key must always be read with the
+    * same `stats`. */
+  def getOrBuildObserved(spark: SparkSession, dir: String, key: String, stats: Column*)
+                        (build: => DataFrame): (DataFrame, Row) =
+    entry(spark, dir, key, stats)((build, () => ()))
+
   /** [[getOrBuild]] for builders that carry an internal cache: `build`
     * returns (plan, release); the release thunk runs AFTER the truncation
     * has materialized (the cache must outlive the checkpoint write, and
     * must not outlive it by more — CacheHygieneSpec pins no leaks). */
   def getOrBuildReleasable(spark: SparkSession, dir: String, key: String)
-                          (build: => (DataFrame, () => Unit)): DataFrame = {
-    entries.get((spark, dir, key)).filter(valid(spark, _)).getOrElse {
+                          (build: => (DataFrame, () => Unit)): DataFrame =
+    entry(spark, dir, key, Nil)(build)._1
+
+  private def entry(spark: SparkSession, dir: String, key: String, stats: Seq[Column])
+                   (build: => (DataFrame, () => Unit)): (DataFrame, Row) =
+    entries.get((spark, dir, key)).filter(e => valid(spark, e._1)).getOrElse {
       val (plan, release) = build
-      val built = Dedup.truncate(plan)
+      val built = Dedup.truncateObserved(plan, stats: _*)
       release()
       entries((spark, dir, key)) = built
       built
     }
-  }
 
   /** Drop all memo entries (long-lived sessions / tests). ContextCleaner
     * reclaims the blocks once the DataFrames are unreferenced. */
@@ -62,6 +77,6 @@ private[graft] object PlanMemo {
     * intermediates, which exist precisely to persist across their
     * family's queries. */
   def rddIds: Set[Int] =
-    entries.values.flatMap(df =>
-      org.apache.spark.sql.graft.bridge.materializedRdd(df).map(_.id)).toSet
+    entries.values.flatMap { case (df, _) =>
+      org.apache.spark.sql.graft.bridge.materializedRdd(df).map(_.id) }.toSet
 }

@@ -435,8 +435,8 @@ object DedupStream {
     * per matching band and is transitively dense inside clusters). The
     * reduction is EXACT — the emitted delta sequence is identical with
     * it on or off (see localForest's doc for the argument; StreamingSpec
-    * pins it on a redundancy-heavy corpus) — so it is on by default;
-    * `prereduce = false` is the reference path that spec compares against.
+    * pins it against a forest-less reference on a redundancy-heavy
+    * corpus).
     *
     * Operational note: with `ttl` set the query runs in processing-time
     * mode and the TTL'd state schedules maintenance work, so replay
@@ -445,8 +445,7 @@ object DedupStream {
     * never observe the no-new-data quiescent point). The unbounded path
     * (`ttl = None`) has no clock machinery and settles under either. */
   def repsRollupStream(spark: SparkSession, edges: DataFrame,
-                       ttl: Option[java.time.Duration] = None,
-                       prereduce: Boolean = true): DataFrame = {
+                       ttl: Option[java.time.Duration] = None): DataFrame = {
     import spark.implicits._
     // The stateful stage below has exactly ONE non-empty key (the 0L
     // group), and transformWithState opens/commits a state-store instance
@@ -499,12 +498,9 @@ object DedupStream {
     // the stage's floor at 0.61 s vs 14.13 s measured), while the
     // forest pass wants full parallelism. Pinning here decouples the
     // two so callers narrow the conf without narrowing the reduction.
-    val input =
-      if (prereduce) base
-        .repartition(spark.sparkContext.defaultParallelism, col("rep"))
-        .mapPartitions(it => RollupCore.localForest(it.toArray))
-      else base
-    input
+    base
+      .repartition(spark.sparkContext.defaultParallelism, col("rep"))
+      .mapPartitions(it => RollupCore.localForest(it.toArray))
       .groupByKey(_ => 0L)
       .transformWithState(new RepsRollupProcessor(ttl), timeMode,
         OutputMode.Append())

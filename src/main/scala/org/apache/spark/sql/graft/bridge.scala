@@ -26,6 +26,12 @@ object bridge {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       }
 
+  /** The metrics Row of an [[org.apache.spark.sql.Observation]] whose
+    * query has run, in the order its expressions were given
+    * (`Observation.getRow` is `private[sql]`). */
+  def observedRow(obs: org.apache.spark.sql.Observation): org.apache.spark.sql.Row =
+    obs.getRow
+
   /** The `RDD[InternalRow]` of a DataFrame's executed physical plan —
     * the allocation-free handoff for per-partition streaming kernels
     * (rows arrive as UnsafeRow; primitive accessors never box). */

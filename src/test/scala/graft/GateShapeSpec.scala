@@ -86,13 +86,14 @@ class GateShapeSpec extends SparkSpec {
     val edges = und.union(und.select(col("dst").as("src"), col("src").as("dst")))
     val degrees = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
+    val nodes = degrees.count()
     withConfs(noAuto, Graph.BcastDegreesMaxNodesKey -> huge) {
-      val p = planOf(Graph.orientedEdges(edges, degrees))
+      val p = planOf(Graph.orientedEdges(edges, degrees, nodes))
       assert(p.contains("BroadcastHashJoin"), "below-ceiling orientation must broadcast degrees")
       assert(!p.contains("SortMergeJoin"))
     }
     withConfs(noAuto, Graph.BcastDegreesMaxNodesKey -> "0") {
-      val p = planOf(Graph.orientedEdges(edges, degrees))
+      val p = planOf(Graph.orientedEdges(edges, degrees, nodes))
       assert(p.contains("SortMergeJoin"), "above-ceiling orientation must keep the sort-merge scale shape")
       assert(!p.contains("BroadcastHashJoin"))
     }

@@ -59,8 +59,10 @@ class GraphHubSpec extends SparkSpec {
     "full-adjacency post-filter path, planted pair tops") {
     val maxDeg = 8
     val degs = hubDegrees(hubEdges)
+    // the estimate only sizes the wedge shuffle: this graph's ~2·10⁵
+    // rows plan the core-count floor at any estimate below 8M
     val parts = graft.ops.Dedup.truncate(Graph.neighborJaccardPartsPlan(
-      Graph.cappedAdjacencyDf(hubEdges, maxDeg), hubEdges, degs))
+      Graph.cappedAdjacencyDf(hubEdges, maxDeg), hubEdges, nodes = degs.count(), estRows = 0L))
       .collect().map(_.toSeq).toSeq
     val legacy = Graph.neighborJaccardDf(hubEdges, maxDeg)
       .collect().map(_.toSeq).toSeq
@@ -78,7 +80,8 @@ class GraphHubSpec extends SparkSpec {
     "out-degree obeys the sqrt(2m) bound at the hub; counts exact") {
     val degs = hubDegrees(hubEdges)
     // orientation is pure joins + filter — no aggregate of any kind
-    val oriented = Graph.orientedEdges(hubEdges, degs)
+    val nodes = degs.count()
+    val oriented = Graph.orientedEdges(hubEdges, degs, nodes)
     val oplan = oriented.queryExecution.executedPlan.toString
     assert(!oplan.contains("Aggregate"), oplan.take(2000))
     assert(!oplan.contains("collect_"), oplan.take(2000))
@@ -94,7 +97,7 @@ class GraphHubSpec extends SparkSpec {
       "hub must have oriented out-degree 0 in a star")
     // exact counts vs brute force (planted: 7 triangles — {1,2} × C(3,2)
     // bridge pairs + the bridge trio itself; the hub closes none)
-    val got = Graph.triangleCountsEdges(hubEdges, degs).collect()
+    val got = Graph.triangleCountsEdges(hubEdges, degs, nodes).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val expected = Seq((B, 5L), (B + 1, 5L), (B + 2, 5L), (1L, 3L), (2L, 3L))
     assert(got == expected, s"got=$got expected=$expected")

@@ -290,8 +290,8 @@ class KernelEquivalenceSpec extends SparkSpec {
     // co-purchase adjacency, lists sorted + duplicate-free (the kernel's
     // input contract), joined per oriented edge — plus empty/subset/
     // disjoint/identical edges the graph may not produce at this sf
-    val oriented = graft.ops.Graph.orientedEdges(
-      graft.ops.Graph.edges(spark, sfDir), graft.ops.Graph.degrees(spark, sfDir))
+    val (degs, nodes, _) = graft.ops.Graph.degreesObserved(spark, sfDir)
+    val oriented = graft.ops.Graph.orientedEdges(graft.ops.Graph.edges(spark, sfDir), degs, nodes)
     val oadj = oriented.groupBy(col("u"))
       .agg(sort_array(collect_list(col("v"))).as("on"))
     val pairs = oadj

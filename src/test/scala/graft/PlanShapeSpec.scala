@@ -167,8 +167,8 @@ class PlanShapeSpec extends SparkSpec {
 
     // and the driver-path wedge feed consumes the MEMOIZED capped
     // adjacency — a flat scan, no size filter, no list aggregate
-    val inner = Graph.nbrTaggedSortedParts(
-      Graph.cappedAdjacency(spark, sfDir), Graph.edges(spark, sfDir))
+    val inner = Graph.nbrTaggedSortedParts(Graph.cappedAdjacency(spark, sfDir),
+      Graph.edges(spark, sfDir), Graph.nbrWedgeRows(spark, sfDir))
     val ip = inner.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(ip.contains("sortedLongPairsPacked"), ip.take(3000))
     assert(!ip.contains("collect_"), ip.take(3000))

@@ -1,8 +1,9 @@
 package graft
 
 import graft.streaming.EventStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 class StreamingSpec extends SparkSpec {
 
@@ -548,8 +549,9 @@ class StreamingSpec extends SparkSpec {
   test("rollup pre-reduction is exact in the wired stream: deltas match prereduce=false") {
     // the two-level-CC stage (RollupCore.localForest via mapPartitions)
     // must not change WHAT the serial stage emits — only how many edges
-    // reach it. Replay a redundancy-heavy edge corpus through both
-    // paths and require the identical delta multiset.
+    // reach it. Replay a redundancy-heavy edge corpus through the
+    // operator and through a forest-less reference (the raw feed straight
+    // into the serial processor) and require the identical delta multiset.
     import graft.streaming.DedupStream
     val spark2 = spark.newSession()
     spark2.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -564,16 +566,20 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graftprereduce")
     edges.toDF("rep", "member").repartition(6)
       .write.mode("overwrite").parquet(dir.toString)
-    def run(prereduce: Boolean, table: String): Seq[(Long, Long)] = {
+    def run(rollup: DataFrame => DataFrame, table: String): Seq[(Long, Long)] = {
       val stream = spark2.readStream.schema("rep LONG, member LONG")
         .parquet(dir.toString)
-      EventStream.runToCompletion(
-        DedupStream.repsRollupStream(spark2, stream, prereduce = prereduce),
-        table, OutputMode.Append())
+      EventStream.runToCompletion(rollup(stream), table, OutputMode.Append())
       spark2.table(table).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
-    val reduced = run(prereduce = true, "prereduce_on")
-    val raw = run(prereduce = false, "prereduce_off")
+    val reduced = run(DedupStream.repsRollupStream(spark2, _), "prereduce_on")
+    // the operator above already set spark2's shuffle width to 1, so the
+    // reference's single-key state stage runs as the operator's does
+    val raw = run(_.select(col("rep"), col("member")).as[(Long, Long)]
+      .groupByKey(_ => 0L)
+      .transformWithState(new DedupStream.RepsRollupProcessor(None), TimeMode.None(),
+        OutputMode.Append())
+      .toDF("doc_id", "rep_id"), "prereduce_off")
     assert(reduced.sorted == raw.sorted,
       s"pre-reduction changed the delta multiset: ${reduced.sorted} vs ${raw.sorted}")
     // sanity that the stage actually cuts the serial input on this feed

@@ -30,37 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Co-purchase edge list: DISTINCT directed pairs of parts appearing on
-    * high-quantity lines of the same order (both directions; self-loops
-    * excluded). Built as groupBy(order) → in-group pair kernel — ONE
-    * shuffle instead of a self-join's two, with the quantity filter pushed
-    * into the parquet scan. Group size is bounded (≤ 7 lineitems per
-    * order), so the pair expansion is bounded per key — the same
-    * blocked-pair discipline as the dedup candidate generators. */
-  def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
-    val once = coPurchaseOnce(spark, dir)
-    once.union(once.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  /** Canonical (src < dst) distinct co-purchase pairs — one row per
-    * undirected edge. The dedup shuffle runs HERE, on m canonical rows:
-    * [[coPurchaseEdges]] then mirrors the already-distinct halves (a
-    * canonical set unioned with its swap is distinct by construction), so
-    * nothing ever distincts the doubled edge list. */
-  def coPurchaseOnce(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.GraftFunctions.pairsCol
-    val li = Tables.lineitem(spark, dir)
-      .filter(col("l_quantity") >= 25)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    li.groupBy(col("ok"))
-      .agg(array_distinct(collect_list(col("pk"))).as("pks"))
-      .filter(size(col("pks")) >= 2)
-      .select(explode(pairsCol(col("pks"))).as("p"))
-      .select(least(col("p.a"), col("p.b")).as("src"),
-        greatest(col("p.a"), col("p.b")).as("dst"))
-      .distinct()
-  }
-
   /** Target sort rows per partition of the wedge∪edge shuffle
     * ([[nbrTaggedSortedParts]]): ~8M rows ≈ 300 MB of external-sorter
     * footprint — small enough that a full complement of concurrent
@@ -106,25 +75,26 @@ object Graph {
     * reads the blocks directly, run-caching its per-src dictionary
     * lookup off the preserved sort order. */
   def edges(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.getOrBuild(spark, dir, "graph.edges") {
-      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      distinctEdgesDf(coPurchaseDirected(spark, dir), n)
-    }
+    PlanMemo.getOrBuild(spark, dir, "graph.edges")(
+      distinctEdgesDf(coPurchaseDirected(spark, dir)))
 
   /** The [[edges]] memo's build body over any duplicate-bearing directed
     * feed: one explicit hash exchange on src, one in-partition (src, dst)
     * sort, then a lag-window duplicate drop that REUSES that exact
     * partitioning + ordering — Catalyst inserts no second exchange or
     * sort for the window (PlanShapeSpec pins one exchange, one sort). */
-  private[graft] def distinctEdgesDf(directed: DataFrame, n: Int): DataFrame = {
+  private[graft] def distinctEdgesDf(directed: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("src")).orderBy(col("dst"))
     directed
-      .repartition(n, col("src"))
+      .repartition(shufflePartitions(directed.sparkSession), col("src"))
       .sortWithinPartitions("src", "dst")
       .withColumn("prev", lag(col("dst"), 1).over(w))
       .filter(col("prev").isNull || col("prev") =!= col("dst"))
       .select(col("src"), col("dst"))
   }
+
+  private def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Memoized degree table (node, deg) over [[edges]] — a COUNT
     * aggregate, so the per-group state is one counter regardless of
@@ -137,15 +107,21 @@ object Graph {
   /** The [[degrees]] memo with |V| (its rows) and |E| (Σ deg = the
     * distinct directed edge count), both observed on the memo's own
     * materialization — the figures the family's size gates read. */
-  private[graft] def degreesObserved(spark: SparkSession, dir: String): (DataFrame, Long, Long) = {
-    val (degs, stats) = PlanMemo.getOrBuildObserved(spark, dir, "graph.degrees",
-        count(lit(1)), sum(col("deg"))) {
-      edges(spark, dir).groupBy(col("src"))
-        .agg(count(lit(1)).as("deg"))
-        .select(col("src").as("node"), col("deg"))
-    }
-    (degs, stats.getLong(0), Dedup.longStat(stats, 1))
-  }
+  private[graft] def degreesObserved(spark: SparkSession, dir: String): (DataFrame, Long, Long) =
+    degreeFigures(PlanMemo.getOrBuildObserved(spark, dir, "graph.degrees", degreeStats: _*)(
+      degreesDf(edges(spark, dir))))
+
+  /** The [[degrees]] memo's build body over a distinct directed edge list. */
+  private def degreesDf(edges: DataFrame): DataFrame =
+    edges.groupBy(col("src"))
+      .agg(count(lit(1)).as("deg"))
+      .select(col("src").as("node"), col("deg"))
+
+  /** |V| (rows) and |E| (Σ deg), observed on a [[degreesDf]] materialization. */
+  private def degreeStats: Seq[Column] = Seq(count(lit(1)), sum(col("deg")))
+
+  private def degreeFigures(observed: (DataFrame, Row)): (DataFrame, Long, Long) =
+    (observed._1, observed._2.getLong(0), Dedup.longStat(observed._2, 1))
 
   /** Memoized degree-CAPPED adjacency (src, ids): only nodes with degree
     * ≤ maxDeg carry a row, and the cap is enforced INSIDE the aggregation
@@ -165,30 +141,20 @@ object Graph {
     * Σ d) observed on the memo's own materialization. */
   private[graft] def cappedAdjacencyObserved(spark: SparkSession, dir: String,
                                              maxDeg: Int): (DataFrame, Row) =
-    PlanMemo.getOrBuildObserved(spark, dir, s"graph.adjacency.capped.$maxDeg",
-        keptStats(size(col("ids"))): _*) {
-      // pinned at shuffle-partition count (an explicit numPartitions
-      // repartition AQE cannot override): the adjacency is tiny BY BYTES,
-      // so AQE's size-based coalesce would checkpoint it as ~3 blocks —
-      // and the C(d,2) pair kernel of [[neighborJaccard]] inherits block
-      // count as task count, capping a quadratic compute stage at 3 of 32
-      // cores. Partition the COMPUTE a row fans out to, not its bytes.
-      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      cappedAdjacencyDf(edges(spark, dir), maxDeg).repartition(n, col("src"))
-    }
+    PlanMemo.getOrBuildObserved(spark, dir, s"graph.adjacency.capped.$maxDeg", keptStats: _*)(
+      cappedAdjacencyDf(edges(spark, dir), maxDeg))
 
-  /** Df-level [[cappedAdjacency]] builder over any duplicate-free directed
-    * edge list (plan pins + planted mega-hub specs run here). */
+  /** The [[cappedAdjacency]] memo's build body over any duplicate-free
+    * directed edge list. Pinned at shuffle-partition count (an explicit
+    * numPartitions repartition AQE cannot override): the adjacency is
+    * tiny BY BYTES, so AQE's size-based coalesce would checkpoint it as
+    * ~3 blocks — and the C(d,2) pair kernel of [[neighborJaccard]]
+    * inherits block count as task count, capping a quadratic compute
+    * stage at 3 of 32 cores. Partition the COMPUTE a row fans out to, not
+    * its bytes. */
   private[graft] def cappedAdjacencyDf(edges: DataFrame, maxDeg: Int): DataFrame =
     Dedup.cappedBuckets(edges, Seq("src"), "dst", lo = 1, hi = maxDeg)
-
-  /** The (src, ids) collect_set adjacency over a raw directed feed
-    * (duplicates absorbed) — the Df-level helper behind
-    * [[triangleCountsDf]] / [[neighborJaccardDf]], which accept arbitrary
-    * duplicate-bearing edge lists. Driver paths never come through here;
-    * they read the memoized [[edges]]-derived artifacts. */
-  private def aggAdjacency(directed: DataFrame): DataFrame =
-    directed.groupBy(col("src")).agg(collect_set(col("dst")).as("ids"))
+      .repartition(shufflePartitions(edges.sparkSession), col("src"))
 
   /** Simplified PageRank (uniform teleport, unnormalized: r' = (1−d) +
     * d·Σ_in r/outdeg — the textbook power-iteration form) over the nodes
@@ -313,9 +279,8 @@ object Graph {
     // serialize 8 B/node into EVERY task binary instead of once per
     // executor over the torrent
     val finalB = sc.broadcast(ranks)
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     spark.createDataFrame(
-      sc.parallelize(nodes.indices, math.min(n, math.max(1, nV)))
+      sc.parallelize(nodes.indices, math.min(shufflePartitions(spark), math.max(1, nV)))
         .map(j => (nodesB.value(j), finalB.value(j))))
       .toDF("node", "rank")
   }
@@ -422,92 +387,63 @@ object Graph {
       edges(spark, dir), nodes, nbrWedgeRows(spark, dir, maxDeg)))
   }
 
-  /** Σ d(d+1)/2 and Σ d over the kept adjacency rows' degrees `d` (null
-    * entries skipped): the kept nodes' C(d,2) wedges + d edge tags, and
-    * their edge tags alone — the terms of the [[nbrTaggedSortedParts]]
-    * row estimate. The capped-adjacency memo observes them on its
-    * materialization; the Df-level wrappers aggregate the same columns
-    * ([[adjFigures]]). BIGINT before multiplying: with int arithmetic a
-    * caller-supplied maxDeg ≥ 46341 lets d*(d+1) overflow negative and
-    * nPart silently collapse to the core floor. */
-  private def keptStats(d: Column): Seq[Column] = Seq(
-    sum(d.cast("bigint") * (d + 1) / 2).cast("long"),
-    sum(d.cast("bigint")).cast("long"))
+  /** [[neighborJaccard]] over any directed edge list covering both
+    * directions of each undirected edge (self-loop-free; duplicate rows
+    * allowed — [[distinctEdgesDf]] drops them). Builds the driver's three
+    * memo artifacts over `directed` with the memos' own build functions
+    * and observed figures (distinct edges, degree table, capped adjacency
+    * — each eagerly materialized, not memoized) and runs the same parts
+    * plan, so its output equals the driver query's on the same graph. */
+  def neighborJaccardDf(directed: DataFrame, maxDeg: Int = 256): DataFrame = {
+    val edges = Dedup.truncate(distinctEdgesDf(directed))
+    val (_, nodes, edgeTotal) = degreeFigures(Dedup.truncateObserved(degreesDf(edges), degreeStats: _*))
+    val (capped, kept) = Dedup.truncateObserved(cappedAdjacencyDf(edges, maxDeg), keptStats: _*)
+    Dedup.truncate(neighborJaccardPartsPlan(capped, edges, nodes, wedgeRows(kept, edgeTotal)))
+  }
+
+  /** Σ d(d+1)/2 and Σ d over the kept adjacency rows' degrees `d`: the
+    * kept nodes' C(d,2) wedges + d edge tags, and their edge tags alone —
+    * the terms of the [[nbrTaggedSortedParts]] row estimate, observed on
+    * the capped adjacency's materialization. BIGINT before multiplying:
+    * with int arithmetic a caller-supplied maxDeg ≥ 46341 lets d*(d+1)
+    * overflow negative and nPart silently collapse to the core floor. */
+  private def keptStats: Seq[Column] = {
+    val d = size(col("ids"))
+    Seq(sum(d.cast("bigint") * (d + 1) / 2).cast("long"), sum(d.cast("bigint")).cast("long"))
+  }
 
   /** The wedge∪edge row count [[nbrTaggedSortedParts]] sizes nPart from:
     * the kept rows plus the edge tags of the degree-capped hubs,
-    * |E| − Σ_kept d ([[keptStats]] gives both kept terms). The hub term
+    * |E| − Σ_kept d (`kept` holds the two [[keptStats]]). The hub term
     * is clamped at 0: an inconsistent caller (edgeTotal < Σ_kept d) must
     * not produce a negative term that silently collapses nPart to the
     * core floor — that re-creates the exact UNABLE_TO_ACQUIRE_MEMORY
     * failure the volume-scaled count exists to prevent. */
-  private def wedgeRows(keptRows: Long, keptDeg: Long, edgeTotal: Long): Long =
-    keptRows + math.max(0L, edgeTotal - keptDeg)
+  private def wedgeRows(kept: Row, edgeTotal: Long): Long =
+    Dedup.longStat(kept, 0) + math.max(0L, edgeTotal - Dedup.longStat(kept, 1))
 
   /** [[wedgeRows]] of the driver's nbr-Jaccard at `maxDeg`: the
     * capped-adjacency memo's observed kept terms and the degree memo's
     * observed |E|. */
-  private[graft] def nbrWedgeRows(spark: SparkSession, dir: String, maxDeg: Int = 256): Long = {
-    val kept = cappedAdjacencyObserved(spark, dir, maxDeg)._2
-    wedgeRows(Dedup.longStat(kept, 0), Dedup.longStat(kept, 1), degreesObserved(spark, dir)._3)
-  }
-
-  /** The Df-level wrappers' figures over a full (src, ids) adjacency, in
-    * ONE aggregate: |V| (rows) and the [[wedgeRows]] estimate from
-    * |E| = Σ size(ids) and the [[keptStats]] of the rows within `maxDeg`. */
-  private[graft] def adjFigures(adj: DataFrame, maxDeg: Int): (Long, Long) = {
-    val d = size(col("ids"))
-    val r = adj.agg(count(lit(1)),
-      (sum(d.cast("bigint")) +: keptStats(when(d <= maxDeg, d))): _*).first()
-    (r.getLong(0), wedgeRows(Dedup.longStat(r, 2), Dedup.longStat(r, 3), Dedup.longStat(r, 1)))
-  }
-
-  /** Core of [[neighborJaccard]] over any directed edge list covering both
-    * directions of each undirected edge (self-loop-free; duplicate rows
-    * allowed — they collapse inside the adjacency aggregate). Builds and
-    * eagerly materializes its own adjacency; driver queries go through the
-    * memoized capped artifacts instead. */
-  def neighborJaccardDf(directed: DataFrame, maxDeg: Int = 256): DataFrame =
-    neighborJaccardAdj(Dedup.truncate(aggAdjacency(directed)), maxDeg)
-
-  /** [[neighborJaccard]] over a MATERIALIZED FULL (src, ids) adjacency —
-    * the wrapper form for Df-level callers and parity specs: the kept
-    * lists, the tag edges and the gate all derive from `adj`. Driver
-    * queries use the parts form directly with the capped memo. */
-  def neighborJaccardAdj(adj: DataFrame, maxDeg: Int = 256): DataFrame =
-    Dedup.truncate(neighborJaccardPlan(adj, maxDeg))
-    // ^ EAGER: materializes at construction so downstream consumers plan
-    //   against a flat scan (PlanShapeSpec pins the pre-truncate shape)
-
-  /** The un-truncated [[neighborJaccardAdj]] plan over a FULL adjacency —
-    * for plan-shape assertions and the Df-level wrapper; derives the
-    * parts (kept lists, tag edges, [[adjFigures]]) and delegates. */
-  private[graft] def neighborJaccardPlan(adj: DataFrame, maxDeg: Int = 256): DataFrame = {
-    val (nodes, estRows) = adjFigures(adj, maxDeg)
-    neighborJaccardPartsPlan(
-      adj.filter(size(col("ids")) <= maxDeg),
-      adj.select(col("src"), explode(col("ids")).as("dst")),
-      nodes, estRows)
-  }
+  private[graft] def nbrWedgeRows(spark: SparkSession, dir: String, maxDeg: Int = 256): Long =
+    wedgeRows(cappedAdjacencyObserved(spark, dir, maxDeg)._2, degreesObserved(spark, dir)._3)
 
   /** Restricted degrees over the retained feature space: sz(u) = number of
     * KEPT intermediates adjacent to u (explode kept adjacency, count by the
     * exploded neighbor — Σ_kept d_x rows partial-aggregated map-side).
-    * `keptAdj` rows are already degree-capped (memoized capped adjacency,
-    * or the wrapper's size filter). */
+    * `keptAdj` rows are already degree-capped (a capped adjacency). */
   private[graft] def nbrSizesKept(keptAdj: DataFrame): DataFrame =
     keptAdj
       .select(explode(col("ids")).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("sz"))
 
-  /** NOTE on eagerness: the size figures arrive as arguments — observed
-    * on the memos' materializations for driver calls, one aggregate in
-    * the Df-level wrappers — so the only job plan CONSTRUCTION runs here
-    * is the dictionary path's sizes collect+broadcast (the algorithm's
-    * own driver dictionary): building this DataFrame (explain, plan
-    * dumps, tests) already executes it; the driver entry immediately
-    * truncate-materializes anyway, so query execution pays nothing
-    * extra. Each call's broadcast lives until the ContextCleaner collects
+  /** NOTE on eagerness: the size figures arrive as arguments, observed
+    * on the degree and capped-adjacency materializations, so the only job
+    * plan CONSTRUCTION runs here is the dictionary path's sizes
+    * collect+broadcast (the algorithm's own driver dictionary): building
+    * this DataFrame (explain, plan dumps, tests) already executes it; the
+    * driver entry immediately truncate-materializes anyway, so query
+    * execution pays nothing extra. Each call's broadcast lives until the ContextCleaner collects
     * the unreferenced plan (CacheHygieneSpec pins that nothing persisted
     * survives).
     *
@@ -567,14 +503,6 @@ object Graph {
     }
   }
 
-  /** [[nbrTaggedSortedParts]] over a full adjacency — probe/plan-dump
-    * convenience (derives the kept lists and the tag edges from `adj`). */
-  private[graft] def nbrTaggedSorted(adj: DataFrame, maxDeg: Int = 256): DataFrame =
-    nbrTaggedSortedParts(
-      adj.filter(size(col("ids")) <= maxDeg),
-      adj.select(col("src"), explode(col("ids")).as("dst")),
-      adjFigures(adj, maxDeg)._2)
-
   /** The tagged, shuffled, sorted wedge∪edge stream that feeds
     * [[rleWedgeCount]] — exposed separately because the run-length hop
     * crosses into RDD space, so this subplan runs as its own query
@@ -619,7 +547,7 @@ object Graph {
     // count, capped at 4096 (at 10⁹ rows that is ~125 partitions; at
     // sf0.1/sf1 the floor keeps the historical 32-partition plans
     // bit-identical).
-    val cores = keptAdj.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val cores = shufflePartitions(keptAdj.sparkSession)
     val nPart = math.max(cores,
       math.min(4096L, (estRows + WedgeRowsPerPartition - 1) / WedgeRowsPerPartition).toInt)
     wedges.union(und)
@@ -627,16 +555,6 @@ object Graph {
       .sortWithinPartitions("uv")
   }
 
-  /** Streaming run-length count over a (uv: long, w: int) DataFrame that
-    * is hash-partitioned and sorted on `uv`: each run of equal keys is
-    * one candidate pair; emits (uv, count of w==1 rows) and SUPPRESSES
-    * any run containing a w==0 row (a tagged existing edge). Runs at the
-    * InternalRow level with one reused mutable output row — zero per-row
-    * allocation, because this hop streams ~10⁸ rows per partition and
-    * per-row boxing (an encoder/Tuple2 path measured up to 5× slower
-    * under a dirty heap) would make the stage GC-bound. O(1) state per
-    * partition regardless of group count — the property that lets the
-    * pair space grow 100× without a memory cliff. */
   /** [[rleWedgeCount]] fused with scoring and a bounded top-k: the same
     * streaming run-length pass, but each surviving run (uv, common) is
     * scored IMMEDIATELY against the broadcast restricted-degree dictionary
@@ -744,6 +662,16 @@ object Graph {
         StructField("nbr_jaccard", DoubleType, nullable = false))))
   }
 
+  /** Streaming run-length count over a (uv: long, w: int) DataFrame that
+    * is hash-partitioned and sorted on `uv`: each run of equal keys is
+    * one candidate pair; emits (uv, count of w==1 rows) and SUPPRESSES
+    * any run containing a w==0 row (a tagged existing edge). Runs at the
+    * InternalRow level with one reused mutable output row — zero per-row
+    * allocation, because this hop streams ~10⁸ rows per partition and
+    * per-row boxing (an encoder/Tuple2 path measured up to 5× slower
+    * under a dirty heap) would make the stage GC-bound. O(1) state per
+    * partition regardless of group count — the property that lets the
+    * pair space grow 100× without a memory cliff. */
   private def rleWedgeCount(taggedSorted: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
@@ -819,11 +747,31 @@ object Graph {
   /** [[triangleCounts]] over an explicit (distinct directed edges, degree
     * table, |V|) triple — the planted mega-hub spec runs here. Two
     * broadcast-size joins attach endpoint degrees for the (degree, id)
-    * orientation; the tail is shared with the adjacency form. */
+    * orientation; [[trianglePlanOriented]] counts over the oriented
+    * edges. */
   private[graft] def triangleCountsEdges(edges: DataFrame, degrees: DataFrame,
                                          nodes: Long): DataFrame = {
-    val oriented = orientedEdges(edges, degrees, nodes)
-    triangleCountsOriented(oriented)
+    val (plan, oadj) = trianglePlanOriented(orientedEdges(edges, degrees, nodes))
+    // materialize the 25-row result eagerly (Dedup.truncate — reliable
+    // checkpoint when configured) so the cached inputs can be released
+    // before returning — no leaked cache blocks for long-lived library
+    // sessions (CacheHygieneSpec pins this)
+    val out = Dedup.truncate(plan)
+    oadj.unpersist(blocking = false)
+    out
+  }
+
+  /** [[triangleCounts]] over any directed edge list covering both
+    * directions of each undirected edge (self-loop-free; duplicate rows
+    * allowed — [[distinctEdgesDf]] drops them). Builds the driver's
+    * distinct-edge and degree artifacts over `directed` with the memos'
+    * own build functions (eagerly materialized, |V| observed, not
+    * memoized) and runs [[triangleCountsEdges]], so its output equals the
+    * driver query's on the same graph. */
+  def triangleCountsDf(directed: DataFrame): DataFrame = {
+    val edges = Dedup.truncate(distinctEdgesDf(directed))
+    val (degs, nodes, _) = degreeFigures(Dedup.truncateObserved(degreesDf(edges), degreeStats: _*))
+    triangleCountsEdges(edges, degs, nodes)
   }
 
   /** Session conf key: node-count ceiling under which [[orientedEdges]]
@@ -859,30 +807,11 @@ object Graph {
       .select(col("u"), col("v"))
   }
 
-  /** Core of [[triangleCounts]] over any directed edge list covering both
-    * directions of each undirected edge (self-loop-free; duplicate rows
-    * allowed — they collapse inside the adjacency aggregate). Builds and
-    * eagerly materializes its own adjacency; driver queries go through the
-    * memoized edge/degree artifacts instead. */
-  def triangleCountsDf(directed: DataFrame): DataFrame =
-    triangleCountsAdj(Dedup.truncate(aggAdjacency(directed)))
-
-  /** [[triangleCounts]] over a MATERIALIZED FULL (src, ids) adjacency
-    * (a truncate()d aggregate — consumed by both the explode side and the
-    * degree join side, so the input must be a flat block scan). Degree =
-    * list size, free — no separate degree shuffle. */
-  def triangleCountsAdj(adjIn: DataFrame): DataFrame = {
-    val adj = adjIn.select(col("src").as("node"), col("ids").as("nbrs"),
-      size(col("ids")).cast("long").as("deg"))
-    val oriented = adj
-      .select(col("node").as("u"), col("deg").as("du"), explode(col("nbrs")).as("v"))
-      .join(adj.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
-      .filter(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")))
-      .select(col("u"), col("v"))
-    triangleCountsOriented(oriented)
-  }
-
-  /** Shared tail of the triangle count: ONE aggregate builds the ORIENTED
+  /** The un-truncated triangle count over oriented edges, plus the
+    * persisted oriented adjacency the caller must unpersist after
+    * materializing — split out so plan evidence (graft.Explain) can show
+    * the join/kernel shape that the eager truncate otherwise collapses
+    * into an ExistingRDD leaf. ONE aggregate builds the ORIENTED
     * adjacency (width ≤ √(2m) by the orientation bound), and the closing
     * join intersects oriented out-lists per oriented edge — every common
     * w closes u→v, u→w, v→w exactly once. Intersection cost per edge is
@@ -892,22 +821,6 @@ object Graph {
     * adjacency sides are O(m) total payload: AQE broadcasts them at bench
     * scale, and beyond broadcast size they degrade to ordinary shuffled
     * equi-joins. */
-  private def triangleCountsOriented(oriented: DataFrame): DataFrame = {
-    val (plan, oadj) = trianglePlanOriented(oriented)
-    // materialize the 25-row result eagerly (Dedup.truncate — reliable
-    // checkpoint when configured) so the cached inputs can be released
-    // before returning — no leaked cache blocks for long-lived library
-    // sessions (CacheHygieneSpec pins this)
-    val out = Dedup.truncate(plan)
-    oadj.unpersist(blocking = false)
-    out
-  }
-
-  /** The un-truncated plan behind [[triangleCountsOriented]], plus the
-    * persisted adjacency handle the caller must unpersist after
-    * materializing — split out so plan evidence (graft.Explain) can show
-    * the join/kernel shape that the eager truncate otherwise collapses
-    * into an ExistingRDD leaf. */
   private[graft] def trianglePlanOriented(oriented: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel
     // oriented adjacency: consumed by the explode side AND the close join.

@@ -446,27 +446,30 @@ object DedupStream {
     * (`ttl = None`) has no clock machinery and settles under either. */
   def repsRollupStream(spark: SparkSession, edges: DataFrame,
                        ttl: Option[java.time.Duration] = None): DataFrame = {
-    import spark.implicits._
     // The stateful stage below has exactly ONE non-empty key (the 0L
     // group), and transformWithState opens/commits a state-store instance
     // per shuffle partition per micro-batch — at a 32-wide conf that is
     // 31 pure-overhead RocksDB open/commit cycles per trigger (round-17
     // A/B: 0.61 s vs 14.13 s stage floor). The width is THIS operator's
     // semantics, so the operator pins it instead of relying on every
-    // harness/consumer to know the magic conf (r18 verdict item): the
-    // session's shuffle width is set to 1 here, which is why the
-    // pre-reduce pass above pins its own repartition to
-    // defaultParallelism explicitly. NOTE this mutates the passed
-    // session's conf — run the rollup in a dedicated session
-    // (spark.newSession()), as every in-repo consumer does; the width is
-    // also pinned into the checkpoint at first run, like any streaming
-    // shuffle width.
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    // harness/consumer to know the magic conf (r18 verdict item). Spark
+    // reads the stateful width from the session conf when the query
+    // STARTS, so no plan-level repartition can pin it: the returned frame
+    // is bound to a clone of the caller's session (runtime conf such as
+    // the state-store provider carried over) whose shuffle width is 1,
+    // and the caller's own conf is left untouched. NOTE a query started
+    // from the returned frame runs in that clone, so a memory sink's
+    // table registers there: read it through the frame's
+    // `sparkSession`. The width is also pinned into the checkpoint at
+    // first run, like any streaming shuffle width.
+    val session = org.apache.spark.sql.graft.bridge.cloneSession(spark)
+    session.conf.set("spark.sql.shuffle.partitions", "1")
+    import session.implicits._
     val timeMode = ttl match {
       case Some(_) => TimeMode.ProcessingTime()
       case None    => TimeMode.None()
     }
-    val base = edges
+    val base = org.apache.spark.sql.graft.bridge.rebind(session, edges)
       .select(col("rep").cast("long"), col("member").cast("long"))
       .as[(Long, Long)]
     // hash-distribute by rep BEFORE the local forest: a pair's ≤-Bands
@@ -490,14 +493,9 @@ object DedupStream {
     // exactness is partitioning-independent, so salting is safe and
     // only changes WHICH redundant edges drop.
     // Width is pinned to defaultParallelism (total cores), NOT the
-    // session's shuffle-partition conf: the downstream stateful stage
-    // has ONE non-empty key, so its session should run with a SMALL
-    // `spark.sql.shuffle.partitions` (ideally 1 — transformWithState
-    // opens/commits a state-store instance per shuffle partition per
-    // micro-batch, 32 commits for one key otherwise; round-17 A/B put
-    // the stage's floor at 0.61 s vs 14.13 s measured), while the
-    // forest pass wants full parallelism. Pinning here decouples the
-    // two so callers narrow the conf without narrowing the reduction.
+    // session's shuffle-partition conf: the session runs at width 1 for
+    // the single-key stateful stage (above), while the forest pass wants
+    // full parallelism.
     base
       .repartition(spark.sparkContext.defaultParallelism, col("rep"))
       .mapPartitions(it => RollupCore.localForest(it.toArray))

@@ -32,6 +32,22 @@ object bridge {
   def observedRow(obs: org.apache.spark.sql.Observation): org.apache.spark.sql.Row =
     obs.getRow
 
+  /** A clone of `spark` (`classic.SparkSession.cloneSession`): same
+    * SparkContext and shared state, and a COPY of its runtime conf —
+    * `newSession` would start from the static conf and drop what the
+    * caller set (a state-store provider, say). Conf set on the clone
+    * does not reach `spark`. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** `df`'s logical plan as a DataFrame of `spark` — queries built on it,
+    * streaming ones included, run under `spark`'s conf. */
+  def rebind(spark: org.apache.spark.sql.SparkSession, df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.logical)
+
   /** The `RDD[InternalRow]` of a DataFrame's executed physical plan —
     * the allocation-free handoff for per-partition streaming kernels
     * (rows arrive as UnsafeRow; primitive accessors never box). */

@@ -55,8 +55,8 @@ class GraphHubSpec extends SparkSpec {
     assert(rows.length == HubDeg.toInt + 3)
   }
 
-  test("neighbor jaccard: parts path over the capped adjacency ≡ legacy " +
-    "full-adjacency post-filter path, planted pair tops") {
+  test("neighbor jaccard: Df entry ≡ hand-wired parts call over the capped " +
+    "adjacency, planted pair tops") {
     val maxDeg = 8
     val degs = hubDegrees(hubEdges)
     // the estimate only sizes the wedge shuffle: this graph's ~2·10⁵
@@ -64,11 +64,10 @@ class GraphHubSpec extends SparkSpec {
     val parts = graft.ops.Dedup.truncate(Graph.neighborJaccardPartsPlan(
       Graph.cappedAdjacencyDf(hubEdges, maxDeg), hubEdges, nodes = degs.count(), estRows = 0L))
       .collect().map(_.toSeq).toSeq
-    val legacy = Graph.neighborJaccardDf(hubEdges, maxDeg)
+    val df = Graph.neighborJaccardDf(hubEdges, maxDeg)
       .collect().map(_.toSeq).toSeq
     assert(parts.nonEmpty)
-    assert(parts == legacy,
-      s"parts=${parts.take(3)} legacy=${legacy.take(3)}")
+    assert(parts == df, s"parts=${parts.take(3)} df=${df.take(3)}")
     // nodes 1 and 2 share all three bridges, are non-adjacent, and the
     // hub (their fourth neighbor) is degree-excluded as an intermediate:
     // restricted sz(1) = sz(2) = 3, common = 3 → J = 1.0 at the top

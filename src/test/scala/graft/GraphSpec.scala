@@ -5,10 +5,14 @@ import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
 
-  /** Full (src, ids) adjacency over the [[Graph.edges]] memo, materialized
-    * so consumers plan against a flat scan. */
-  private def fullAdjacency = graft.ops.Dedup.truncate(
-    Graph.edges(spark, sfDir).groupBy(col("src")).agg(collect_list(col("dst")).as("ids")))
+  /** The driver nbr-Jaccard parts plan over the memos (un-truncated, so
+    * its executed plan shows the score attach the gate picked). */
+  private def nbrJaccardPartsPlan = Graph.neighborJaccardPartsPlan(
+    Graph.cappedAdjacency(spark, sfDir), Graph.edges(spark, sfDir),
+    Graph.degreesObserved(spark, sfDir)._2, Graph.nbrWedgeRows(spark, sfDir))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq
 
   test("pagerank conserves total rank mass (Σ rank = |V|)") {
     // every node in the undirected co-purchase graph has outdeg >= 1 and
@@ -16,7 +20,7 @@ class GraphSpec extends SparkSpec {
     // preserves Σ rank = |V| exactly at every iteration — a strong whole-
     // pipeline invariant (any dropped edge, double-counted contribution,
     // or dangling node breaks it)
-    val pr = Graph.pageRank(Graph.coPurchaseEdges(spark, sfDir))
+    val pr = Graph.pageRank(Graph.edges(spark, sfDir))
     val n = pr.count()
     assert(n > 0)
     val total = pr.agg(sum("rank")).collect()(0).getDouble(0)
@@ -38,7 +42,7 @@ class GraphSpec extends SparkSpec {
   test("triangle counts match a brute-force enumeration exactly") {
     // sf0.001 graph is small enough to enumerate every triangle directly;
     // the distributed degree-oriented count must agree integer-for-integer
-    val edges = Graph.coPurchaseEdges(spark, sfDir).collect()
+    val edges = Graph.edges(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst")))
     val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val nodes = adj.keys.toArray.sorted
@@ -75,14 +79,13 @@ class GraphSpec extends SparkSpec {
     // the broadcast-dictionary kernel path (default) and the equi-join
     // fallback (past the denseMaxNodes ceiling) must be row-identical —
     // same pairs, same scores, same cut
-    val adj = fullAdjacency
-    val dict = Graph.neighborJaccardAdj(adj).collect().toSeq
+    val dict = rows(Graph.neighborJaccard(spark, sfDir))
     spark.conf.set(graft.ops.Dedup.DenseMaxNodesKey, "2")
     val joins =
-      try Graph.neighborJaccardAdj(adj).collect().toSeq
+      try rows(Graph.neighborJaccard(spark, sfDir))
       finally spark.conf.unset(graft.ops.Dedup.DenseMaxNodesKey)
     assert(dict.nonEmpty)
-    assert(dict.map(_.toSeq) == joins.map(_.toSeq))
+    assert(dict == joins)
   }
 
   test("pagerank: dense broadcast-vector path ≡ declarative loop on real data") {
@@ -109,8 +112,7 @@ class GraphSpec extends SparkSpec {
 
   test("auto-gate: above denseMaxNodes, pagerank and nbr-jaccard take the " +
     "partition-scaling paths — no flag") {
-    val adj = fullAdjacency // |V| ≫ 2 at any sf
-    spark.conf.set(graft.ops.Dedup.DenseMaxNodesKey, "2")
+    spark.conf.set(graft.ops.Dedup.DenseMaxNodesKey, "2") // |V| ≫ 2 at any sf
     try {
       // pagerank: the loop's final ranks come off a checkpointed table
       // (ExistingRDD leaf), never the dense rollup's object scan
@@ -121,24 +123,44 @@ class GraphSpec extends SparkSpec {
       assert(pr.limit(1).collect().nonEmpty)
       // nbr-jaccard: the degree dictionary is out of bounds, so the score
       // attach must come back as the two-equi-join fallback
-      val nj = Graph.neighborJaccardPlan(adj)
-      val njPlan = nj.queryExecution.executedPlan.toString
+      val njPlan = nbrJaccardPartsPlan.queryExecution.executedPlan.toString
       assert(njPlan.contains("Join"), njPlan.take(2000))
     } finally spark.conf.unset(graft.ops.Dedup.DenseMaxNodesKey)
     // defaults restored: the dense/dictionary fast paths re-engage
     val prPlan = Graph.pagerankTop(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(prPlan.contains("SerializeFromObject"), prPlan.take(2000))
-    val njPlan = Graph.neighborJaccardPlan(adj)
-      .queryExecution.executedPlan.toString
+    val njPlan = nbrJaccardPartsPlan.queryExecution.executedPlan.toString
     assert(!njPlan.contains("Join"), njPlan.take(2000))
   }
 
   test("co-purchase edges are symmetric and self-loop-free") {
-    val e = Graph.coPurchaseEdges(spark, sfDir).collect()
+    val e = Graph.edges(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"))).toSet
     assert(e.nonEmpty)
     assert(e.forall { case (s, d) => s != d })
     assert(e.forall { case (s, d) => e.contains((d, s)) })
+  }
+
+  test("Df entries ≡ driver queries, also over a duplicate-bearing edge list") {
+    // the Df-level entries run the memos' build functions over the
+    // caller's edges, so over the memoized edge list — and over that list
+    // unioned with itself (the Df contract allows duplicate rows) — they
+    // must return the driver queries' rows in order, on both nbr-Jaccard
+    // score attaches
+    val edges = Graph.edges(spark, sfDir)
+    val triangles = rows(Graph.triangleCounts(spark, sfDir))
+    val dict = rows(Graph.neighborJaccard(spark, sfDir))
+    assert(triangles.nonEmpty && dict.nonEmpty)
+    for (in <- Seq(edges, edges.union(edges))) {
+      assert(rows(Graph.triangleCountsDf(in)) == triangles)
+      assert(rows(Graph.neighborJaccardDf(in)) == dict)
+    }
+    spark.conf.set(graft.ops.Dedup.DenseMaxNodesKey, "2")
+    try {
+      val joins = rows(Graph.neighborJaccard(spark, sfDir))
+      for (in <- Seq(edges, edges.union(edges)))
+        assert(rows(Graph.neighborJaccardDf(in)) == joins)
+    } finally spark.conf.unset(graft.ops.Dedup.DenseMaxNodesKey)
   }
 }

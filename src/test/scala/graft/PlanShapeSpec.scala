@@ -18,14 +18,6 @@ class PlanShapeSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
-  /** Full (src, ids) adjacency over the [[Graph.edges]] memo, materialized
-    * so consumers plan against a flat scan. */
-  private def fullAdjacency: org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, collect_list}
-    Dedup.truncate(
-      Graph.edges(spark, sfDir).groupBy(col("src")).agg(collect_list(col("dst")).as("ids")))
-  }
-
   test("j1_join_inner: AQE selects broadcast join with no hint in the code") {
     val plan = executedPlan(Relational.joinInner(spark, sfDir))
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
@@ -147,11 +139,7 @@ class PlanShapeSpec extends SparkSpec {
     // the window-lag dedup must reuse the repartition's partitioning and
     // the sortWithinPartitions' ordering — a second exchange or sort here
     // means Catalyst stopped recognizing them and the memo build doubled
-    val directed = fullAdjacency
-      .select(org.apache.spark.sql.functions.col("src"),
-        org.apache.spark.sql.functions.explode(
-          org.apache.spark.sql.functions.col("ids")).as("dst"))
-    val eb = Graph.distinctEdgesDf(directed, 4)
+    val eb = Graph.distinctEdgesDf(Graph.edges(spark, sfDir))
     assert(shuffleCount(eb) == 1, eb.queryExecution.executedPlan.toString.take(3000))
     val ep = eb.queryExecution.executedPlan.toString
     assert("Sort \\[".r.findAllIn(ep).size == 1, ep.take(3000))
@@ -176,8 +164,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("graph_nbr_jaccard: cap before pair kernel, one-shuffle RLE top-k, no joins at all") {
-    val adj = fullAdjacency
-    val df = Graph.neighborJaccardPlan(adj)
+    // the driver's parts plan over the memos (what the driver truncates)
+    val df = Graph.neighborJaccardPartsPlan(Graph.cappedAdjacency(spark, sfDir),
+      Graph.edges(spark, sfDir), Graph.degreesObserved(spark, sfDir)._2,
+      Graph.nbrWedgeRows(spark, sfDir))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     // the fused run-length top-k crossed into RDD space, so the OUTER
@@ -195,11 +185,16 @@ class PlanShapeSpec extends SparkSpec {
     // kernel over the degree-capped adjacency, tagged edge union, ONE
     // hash exchange on the packed key, in-partition sort — the sort-based
     // aggregation shape (no hash aggregate anywhere on the pair stream)
-    val inner = Graph.nbrTaggedSorted(adj)
+    val inner = Graph.nbrTaggedSortedParts(Graph.cappedAdjacency(spark, sfDir),
+      Graph.edges(spark, sfDir), Graph.nbrWedgeRows(spark, sfDir))
     inner.collect()
     val ip = inner.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(ip.contains("sortedLongPairsPacked"), ip.take(3000))
-    assert(ip.contains("<= 256"), ip.take(3000))
+    // the cap ran before the kernel: the kernel reads the capped memo's
+    // flat scan, whose lists are all within the cap
+    assert(ip.contains("ExistingRDD"), ip.take(3000))
+    import org.apache.spark.sql.functions.{col, max, size}
+    assert(Graph.cappedAdjacency(spark, sfDir).agg(max(size(col("ids")))).first().getInt(0) <= 256)
     assert(ip.contains("Union"), ip.take(3000))
     assert(ip.contains("hashpartitioning(uv"), ip.take(3000))
     assert(ip.contains("Sort [uv"), ip.take(3000))

@@ -469,11 +469,12 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(edgeDir.toString)
     val edgeStream = spark2.readStream.schema("rep LONG, member LONG")
       .parquet(edgeDir.toString)
-    EventStream.runToCompletion(
-      DedupStream.repsRollupStream(spark2, edgeStream), "reps_rollup_test",
-      OutputMode.Append())
+    // the rollup runs in its own width-1 clone of spark2, where the
+    // memory sink registers its table
+    val rollup = DedupStream.repsRollupStream(spark2, edgeStream)
+    EventStream.runToCompletion(rollup, "reps_rollup_test", OutputMode.Append())
     val streamedAssignments = DedupStream
-      .assignmentsFromDeltas(spark2.table("reps_rollup_test"))
+      .assignmentsFromDeltas(rollup.sparkSession.table("reps_rollup_test"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamedAssignments == assigned.toSet,
       s"in-stream rollup $streamedAssignments != batch repsAssignments ${assigned.toSet}")
@@ -569,12 +570,14 @@ class StreamingSpec extends SparkSpec {
     def run(rollup: DataFrame => DataFrame, table: String): Seq[(Long, Long)] = {
       val stream = spark2.readStream.schema("rep LONG, member LONG")
         .parquet(dir.toString)
-      EventStream.runToCompletion(rollup(stream), table, OutputMode.Append())
-      spark2.table(table).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val df = rollup(stream)
+      EventStream.runToCompletion(df, table, OutputMode.Append())
+      df.sparkSession.table(table).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
     val reduced = run(DedupStream.repsRollupStream(spark2, _), "prereduce_on")
-    // the operator above already set spark2's shuffle width to 1, so the
-    // reference's single-key state stage runs as the operator's does
+    // the reference's single-key state stage runs at the operator's
+    // width of 1
+    spark2.conf.set("spark.sql.shuffle.partitions", "1")
     val raw = run(_.select(col("rep"), col("member")).as[(Long, Long)]
       .groupByKey(_ => 0L)
       .transformWithState(new DedupStream.RepsRollupProcessor(None), TimeMode.None(),
@@ -586,6 +589,38 @@ class StreamingSpec extends SparkSpec {
     val keptCount = graft.streaming.RollupCore.localForest(edges.toArray).size
     assert(keptCount * 2 < edges.size,
       s"expected a big cut on a dense feed: $keptCount of ${edges.size}")
+  }
+
+  test("reps rollup leaves the caller's session conf alone and runs its state stage 1 wide") {
+    import graft.streaming.DedupStream
+    import java.nio.file.{Files => JFiles}
+    val spark2 = spark.newSession()
+    spark2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark2.conf.set("spark.sql.shuffle.partitions", "4")
+    import spark2.implicits._
+    // deploy 1 of the checkpointed-restart case: one file, one batch
+    val watch = JFiles.createTempDirectory("graftrollupconf")
+    Seq((5L, 6L), (5L, 7L), (10L, 11L)).toDF("rep", "member").coalesce(1)
+      .write.mode("overwrite").parquet(watch.toString)
+    val stream = spark2.readStream.schema("rep LONG, member LONG").parquet(watch.toString)
+    val rollup = DedupStream.repsRollupStream(spark2, stream)
+    assert(spark2.conf.get("spark.sql.shuffle.partitions") == "4", "conf changed by build")
+    val out = JFiles.createTempDirectory("graftrollupconfout").toString
+    val q = rollup.writeStream.format("parquet").option("path", out)
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", JFiles.createTempDirectory("graftrollupconfck").toString)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark2.conf.get("spark.sql.shuffle.partitions") == "4", "conf changed by run")
+    val got = spark2.read.parquet(out).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val expected = Seq((5L, 5L), (6L, 6L), (6L, 5L), (7L, 7L), (7L, 5L),
+      (10L, 10L), (11L, 11L), (11L, 10L))
+    assert(got.sorted == expected.sorted, s"delta multiset: ${got.sorted}")
+    val stateOps = q.recentProgress.filter(_.numInputRows > 0).flatMap(_.stateOperators)
+    assert(stateOps.nonEmpty, "no state operator progress")
+    assert(stateOps.forall(_.numShufflePartitions == 1L),
+      s"state partitions: ${stateOps.map(_.numShufflePartitions).toSeq}")
   }
 
   test("rollup TTL mode (repair path live) matches the unbounded run when nothing expires") {

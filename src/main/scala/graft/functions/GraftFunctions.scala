@@ -4,34 +4,20 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 
-/** Column-level helpers shared by the dedup/similarity operators. The HOF
-  * compositions stay inside WholeStageCodegen and never fall back to UDFs;
-  * the JVM kernel exists for the one case where the HOF's per-element
-  * interpreted lambdas are the measured bottleneck (large arrays).
+/** Column-level JVM kernels shared by the dedup/similarity operators:
+  * static calls inside WholeStageCodegen (never UDFs), each for a case
+  * where a higher-order-function composition's per-element interpreted
+  * lambdas were the measured bottleneck (large arrays).
   */
 object GraftFunctions {
 
-  /** All unordered pairs (a, b) with a before b in array order, from a
-    * (pre-sorted, distinct) id array: the candidate-pair explosion used
-    * after LSH bucketing. Emitting pairs from a grouped id list keeps the
-    * shuffle narrow — two ids per row instead of two full feature arrays.
-    * Bucket-size caps must be applied by the caller BEFORE this (the output
-    * is quadratic in the bucket size). Fine for the SHORT lists it is used
-    * on (order groups ≤ 7, capped LSH buckets); for long adjacency rows
-    * use [[sortedLongPairsKernel]] — transform/slice lambdas evaluate
-    * interpreted per element, measured ~2× slower at ~10⁷ pairs. */
-  def pairsCol(ids: Column): Column =
-    flatten(transform(ids, (x, i) =>
-      transform(slice(ids, i + 2, size(ids)), y => struct(x.as("a"), y.as("b")))))
-
-  /** Kernel form of [[pairsCol]] for long-array pair explosion: sorts and
-    * DEDUPS a copy of the int64 ids, then emits all C(n,2) distinct pairs
-    * (a < b) in one JVM call per row (StaticInvoke — a direct static call
-    * inside codegen, zero per-element closure overhead). Null elements
+  /** Long-array pair explosion: sorts and DEDUPS a copy of the int64
+    * ids, then emits all C(n,2) distinct pairs (a < b) in one JVM call
+    * per row (StaticInvoke — a direct static call inside codegen, zero
+    * per-element closure overhead). Null elements
     * are dropped; duplicate ids collapse (a raw collect_list input can
     * never produce an (x, x) self-pair). Callers therefore pass
     * collect_set/collect_list output directly — no sort_array needed.

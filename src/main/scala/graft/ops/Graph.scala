@@ -38,21 +38,161 @@ object Graph {
     * (the count only grows past the core floor around 2.5×10⁸ wedges). */
   private val WedgeRowsPerPartition = 8000000L
 
-  /** Directed co-purchase pairs, BOTH directions in one explode pass,
-    * duplicate rows across orders allowed — the raw feed the [[edges]]
-    * memo dedups once for the whole family. */
-  private def coPurchaseDirected(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.GraftFunctions.pairsCol
-    val li = Tables.lineitem(spark, dir)
-      .filter(col("l_quantity") >= 25)
+  /** Directed co-purchase pairs, BOTH directions from one
+    * [[coPurchasePairs]] walk, duplicate rows across orders allowed — the
+    * raw feed the [[edges]] memo dedups once for the whole family. */
+  private def coPurchaseDirected(spark: SparkSession, dir: String): DataFrame =
+    coPurchasePairs(Tables.lineitem(spark, dir), bothDirections = true)
+      .select(col("a").as("src"), col("b").as("dst"))
+
+  /** The high-quantity (`l_quantity >= 25`) lineitem rows as (ok, pk),
+    * hash-partitioned on the order key and sorted (ok, pk) inside each
+    * partition: every order is one contiguous run of ascending part keys,
+    * the input [[coPurchasePairs]] walks. Null part keys are dropped here
+    * (they pair with nothing); a null order key is a key like any other,
+    * so its rows form ONE run — the grouping a `groupBy(ok)` gives them. */
+  private[graft] def orderPartsSorted(lineitem: DataFrame): DataFrame =
+    lineitem
+      .filter(col("l_quantity") >= 25 && col("l_partkey").isNotNull)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    li.groupBy(col("ok"))
-      .agg(array_distinct(collect_list(col("pk"))).as("pks"))
-      .filter(size(col("pks")) >= 2)
-      .select(pairsCol(col("pks")).as("ps"))
-      .select(explode(concat(col("ps"),
-        transform(col("ps"), p => struct(p.getField("b").as("a"), p.getField("a").as("b"))))).as("p"))
-      .select(col("p.a").as("src"), col("p.b").as("dst"))
+      .repartition(shufflePartitions(lineitem.sparkSession), col("ok"))
+      .sortWithinPartitions("ok", "pk")
+
+  /** Each order's distinct co-purchased part pairs (a, b), a < b, once
+    * per order (and (b, a) as well under `bothDirections`): a run walk
+    * over [[orderPartsSorted]] that holds one order's distinct parts as
+    * its only state and emits their C(n,2) pairs through one reused
+    * output row. No list aggregate buffers an order, and no per-pair
+    * object is allocated; the pair rows still carry order multiplicity,
+    * so counting equal rows counts DISTINCT orders. */
+  private[graft] def coPurchasePairs(lineitem: DataFrame,
+                                     bothDirections: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+    import org.apache.spark.sql.types._
+    val session = lineitem.sparkSession
+    val rdd = org.apache.spark.sql.graft.bridge.toInternalRdd(orderPartsSorted(lineitem))
+      .mapPartitions { it =>
+        new Iterator[InternalRow] {
+          private val out = new SpecificInternalRow(Seq(LongType, LongType))
+          private var parts = new Array[Long](16)
+          private var n = 0 // distinct parts of the order being emitted
+          // next pair: (parts(i), parts(j)), reversed first when `flip`
+          private var i = 0
+          private var j = 1
+          private var flip = false
+          // the row after the current order, copied out of the (reused) input row
+          private var started = false
+          private var ahead = false
+          private var aheadNull = false
+          private var aheadOk = 0L
+          private var aheadPk = 0L
+          private def readAhead(): Unit = {
+            ahead = it.hasNext
+            if (ahead) {
+              val r = it.next()
+              aheadNull = r.isNullAt(0)
+              aheadOk = if (aheadNull) 0L else r.getLong(0)
+              aheadPk = r.getLong(1)
+            }
+          }
+          private def nextOrder(): Boolean = {
+            if (!started) { readAhead(); started = true }
+            if (!ahead) return false
+            val okNull = aheadNull
+            val ok = aheadOk
+            n = 0
+            while (ahead && aheadNull == okNull && aheadOk == ok) {
+              if (n == 0 || parts(n - 1) != aheadPk) {
+                if (n == parts.length) parts = java.util.Arrays.copyOf(parts, 2 * n)
+                parts(n) = aheadPk
+                n += 1
+              }
+              readAhead()
+            }
+            i = 0; j = 1; flip = false
+            true
+          }
+          def hasNext: Boolean = {
+            while (i >= n - 1) if (!nextOrder()) return false
+            true
+          }
+          def next(): InternalRow = {
+            if (!hasNext) throw new NoSuchElementException
+            if (flip) {
+              out.setLong(0, parts(j)); out.setLong(1, parts(i)); flip = false
+            } else {
+              out.setLong(0, parts(i)); out.setLong(1, parts(j)); flip = bothDirections
+            }
+            if (!flip) {
+              j += 1
+              if (j == n) { i += 1; j = i + 1 }
+            }
+            out
+          }
+        }
+      }
+    org.apache.spark.sql.graft.bridge.fromInternalRdd(session, rdd,
+      StructType(Seq(StructField("a", LongType, nullable = false),
+        StructField("b", LongType, nullable = false))))
+  }
+
+  /** A (a, b) pair stream hash-partitioned on (a, b) and sorted (a, b)
+    * inside each partition: equal pairs form one run, the input
+    * [[repeatedPairs]] counts. */
+  private[graft] def pairsSorted(pairs: DataFrame): DataFrame =
+    pairs.repartition(shufflePartitions(pairs.sparkSession), col("a"), col("b"))
+      .sortWithinPartitions("a", "b")
+
+  /** The distinct non-null long pairs (a, b) that occur at least
+    * `minCount` times in `pairs`: a run-length count over [[pairsSorted]]
+    * — one counter of state, one reused output row, no hash aggregate.
+    * A sort plus run walk beats a hash aggregate here because the pair
+    * stream barely reduces (most pairs occur once), so a partial
+    * aggregate only pays for its map. */
+  private[graft] def repeatedPairs(pairs: DataFrame, minCount: Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+    import org.apache.spark.sql.types._
+    val session = pairs.sparkSession
+    val rdd = org.apache.spark.sql.graft.bridge.toInternalRdd(pairsSorted(pairs))
+      .mapPartitions { it =>
+        new Iterator[InternalRow] {
+          private val out = new SpecificInternalRow(Seq(LongType, LongType))
+          private var started = false
+          private var ahead = false
+          private var aheadA = 0L
+          private var aheadB = 0L
+          private def readAhead(): Unit = {
+            ahead = it.hasNext
+            if (ahead) { val r = it.next(); aheadA = r.getLong(0); aheadB = r.getLong(1) }
+          }
+          // the next kept pair, written to `out` only when the consumer asks
+          private var ready = false
+          private var keptA = 0L
+          private var keptB = 0L
+          def hasNext: Boolean = {
+            if (!started) { readAhead(); started = true }
+            while (!ready && ahead) {
+              val a = aheadA
+              val b = aheadB
+              var c = 0L
+              while (ahead && aheadA == a && aheadB == b) { c += 1; readAhead() }
+              if (c >= minCount) { keptA = a; keptB = b; ready = true }
+            }
+            ready
+          }
+          def next(): InternalRow = {
+            if (!hasNext) throw new NoSuchElementException
+            ready = false
+            out.setLong(0, keptA); out.setLong(1, keptB)
+            out
+          }
+        }
+      }
+    org.apache.spark.sql.graft.bridge.fromInternalRdd(session, rdd,
+      StructType(Seq(StructField("a", LongType, nullable = false),
+        StructField("b", LongType, nullable = false))))
   }
 
   /** Memoized DISTINCT directed edge list (src, dst) — the graph family's
@@ -371,9 +511,9 @@ object Graph {
     * family, with "document" = node and "feature" = neighbor — common
     * counts come from per-intermediate pair expansion via the
     * [[graft.functions.GraftFunctions.sortedLongPairs]] JVM kernel (one
-    * static call per adjacency row; the HOF pairsCol evaluates its
-    * lambdas interpreted, measured ~2× slower on these ~maxDeg-element
-    * rows, and a self-join on w emits twice the rows), with intermediates
+    * static call per adjacency row; a transform/slice pair explosion
+    * evaluates its lambdas interpreted, measured ~2× slower on these
+    * ~maxDeg-element rows, and a self-join on w emits twice the rows), with intermediates
     * above `maxDeg` excluded INSIDE the adjacency aggregation itself
     * ([[cappedAdjacency]] — a hub's d² wedge explosion is the scale
     * killer; excluding it mirrors MaxDf, and since round 15 its
@@ -856,31 +996,18 @@ object Graph {
     * O(log diameter) rounds); output = one row per non-singleton
     * component (label = min part id) with size and members.
     *
-    * Scale shape: per-order pair explosion from the order-grouped part
-    * lists (groups are small — the [[graft.functions.GraftFunctions
-    * .sortedLongPairsKernel]] a<b kernel bounds the quadratic step by the
-    * order size), one (a, b) count aggregate, then the CC loop whose
-    * per-round shuffle carries labels only; the (id, label) rows are
-    * range-partitioned on label once, which clusters the rollup and
-    * orders its output without a second exchange. DuckDB replays the whole
-    * thing — pairing, multiplicity floor, transitive closure (recursive
-    * CTE) — so the operator is hash-verified end to end. */
+    * Scale shape: per-order pairs from a run walk over the order-sorted
+    * lineitem rows ([[coPurchasePairs]]: one order's parts of state), a
+    * run-length multiplicity count over the (a, b)-sorted pair stream
+    * ([[repeatedPairs]]) — two hash exchanges, each followed by one sort,
+    * and no aggregate — then the CC loop whose per-round shuffle carries
+    * labels only; the (id, label) rows are range-partitioned on label
+    * once, which clusters the rollup and orders its output without a
+    * second exchange. DuckDB replays the whole thing — pairing,
+    * multiplicity floor, transitive closure (recursive CTE) — so the
+    * operator is hash-verified end to end. */
   def components(spark: SparkSession, dir: String, minOrders: Long = 2): DataFrame = {
-    import graft.functions.GraftFunctions.sortedLongPairsKernel
-    val li = Tables.lineitem(spark, dir)
-      .filter(col("l_quantity") >= 25)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    // kernel sorts + dedups the order's part list, so each unordered pair
-    // appears at most once per order — count(*) IS the distinct-order
-    // multiplicity, no countDistinct shuffle
-    val edges = li.groupBy(col("ok"))
-      .agg(collect_list(col("pk")).as("pks"))
-      .filter(size(col("pks")) >= 2)
-      .select(explode(sortedLongPairsKernel(col("pks"))).as("p"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(count(lit(1)).as("n_orders"))
-      .filter(col("n_orders") >= minOrders)
-      .select(col("a"), col("b"))
+    val edges = repeatedPairs(coPurchasePairs(Tables.lineitem(spark, dir)), minOrders)
     // one range exchange on label serves both the rollup's clustering and
     // the final ORDER BY component (a hash exchange for the group-by then
     // a range exchange for the sort was two)

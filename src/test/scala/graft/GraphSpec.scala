@@ -14,6 +14,23 @@ class GraphSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq
 
+  private def longPairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  /** The list-aggregate pair build the run walk replaced: group each
+    * order's high-quantity parts with collect_list, then explode the
+    * sortedLongPairs kernel (sorts, dedups, drops nulls) — one (a < b)
+    * row per order and pair. */
+  private def listPairs(lineitem: org.apache.spark.sql.DataFrame) = {
+    import graft.functions.GraftFunctions.sortedLongPairsKernel
+    lineitem.filter(col("l_quantity") >= 25)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .groupBy(col("ok")).agg(collect_list(col("pk")).as("pks"))
+      .filter(size(col("pks")) >= 2)
+      .select(explode(sortedLongPairsKernel(col("pks"))).as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+  }
+
   test("pagerank conserves total rank mass (Σ rank = |V|)") {
     // every node in the undirected co-purchase graph has outdeg >= 1 and
     // every dst is also a src, so the update r' = 0.15 + 0.85·Σ r/outdeg
@@ -162,5 +179,71 @@ class GraphSpec extends SparkSpec {
       for (in <- Seq(edges, edges.union(edges)))
         assert(rows(Graph.neighborJaccardDf(in)) == joins)
     } finally spark.conf.unset(graft.ops.Dedup.DenseMaxNodesKey)
+  }
+
+  test("co-purchase pairs: run walk ≡ collect_list + sortedLongPairs reference") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val li = graft.Tables.lineitem(spark, sfDir)
+    val real = longPairs(listPairs(li))
+    assert(real.nonEmpty)
+    assert(longPairs(Graph.coPurchasePairs(li)) == real)
+    val both = (real ++ real.map(_.swap)).sorted
+    assert(longPairs(Graph.coPurchasePairs(li, bothDirections = true)) == both)
+    // the edges memo is the distinct both-directions set
+    assert(longPairs(Graph.edges(spark, sfDir)) == both.distinct)
+
+    // hand-built edge cases, spread over several input partitions
+    val schema = StructType(Seq(StructField("l_orderkey", LongType),
+      StructField("l_partkey", LongType), StructField("l_quantity", DoubleType)))
+    def li3(ok: java.lang.Long, pk: java.lang.Long, q: Double) = Row(ok, pk, q)
+    val hand = Seq(
+      li3(null, 1L, 30), li3(null, 2L, 30), li3(null, 3L, 26),   // null order key: ONE order
+      li3(10L, null, 30), li3(10L, 6L, 30), li3(10L, 5L, 30),    // null part key dropped
+      li3(11L, 5L, 30), li3(11L, 5L, 30), li3(11L, 6L, 40), li3(11L, 6L, 30), // duplicates
+      li3(12L, 9L, 30), li3(13L, 9L, 30), li3(13L, 9L, 30),      // single-part orders
+      li3(14L, 1L, 30), li3(14L, 2L, 10)) ++                     // low quantity filtered
+      scala.util.Random.shuffle((100L until 150L).toList).map(pk => li3(20L, pk, 25)) // 50 parts
+    val handDf = spark.createDataFrame(spark.sparkContext.parallelize(hand, 5), schema)
+    val ref = longPairs(listPairs(handDf))
+    assert(ref.count(_._1 < 4) == 3) // the null-key order's C(3,2)
+    assert(ref.count(_ == ((5L, 6L))) == 2)
+    assert(ref.count(_._1 >= 100) == 50 * 49 / 2)
+    assert(ref.size == 3 + 2 + 1225)
+    assert(longPairs(Graph.coPurchasePairs(handDf)) == ref)
+    assert(longPairs(Graph.coPurchasePairs(handDf, bothDirections = true)) ==
+      (ref ++ ref.map(_.swap)).sorted)
+  }
+
+  test("repeated pairs: run-length count ≡ groupBy(a, b).count filter, runs across partitions") {
+    import spark.implicits._
+    // duplicates of a pair land in different input partitions, so every
+    // run is assembled by the (a, b) exchange
+    val rnd = new scala.util.Random(7)
+    val stream = Seq.fill(5000)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+    val pairs = spark.sparkContext.parallelize(stream, 7).toDF("a", "b")
+    val sizes = for (m <- Seq(1L, 2L, 3L)) yield {
+      val expected = longPairs(pairs.groupBy(col("a"), col("b")).count()
+        .filter(col("count") >= m).select(col("a"), col("b")))
+      assert(longPairs(Graph.repeatedPairs(pairs, m)) == expected, s"minCount $m")
+      expected.size
+    }
+    assert(sizes(0) > sizes(1) && sizes(1) > sizes(2) && sizes(2) > 0, sizes)
+  }
+
+  test("components ≡ the list-aggregate reference under minOrders 1, 2 and 3") {
+    import graft.ops.Dedup
+    for (m <- Seq(1L, 2L, 3L)) {
+      val edges = listPairs(graft.Tables.lineitem(spark, sfDir))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_orders"))
+        .filter(col("n_orders") >= m).select(col("a"), col("b"))
+      val expected = rows(Dedup.connectedComponents(edges, "a", "b")
+        .groupBy(col("label").as("component"))
+        .agg(count(lit(1)).as("n_nodes"), sort_array(collect_list(col("id"))).as("members"))
+        .select(col("component"), col("n_nodes"), concat_ws(",", col("members")).as("members"))
+        .orderBy("component"))
+      if (m <= 2) assert(expected.nonEmpty, s"minOrders $m")
+      assert(rows(Graph.components(spark, sfDir, m)) == expected, s"minOrders $m")
+    }
   }
 }

@@ -497,6 +497,39 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("SerializeFromObject"), plan.take(2000))
   }
 
+  test("graph_components edge build: hash exchanges on ok then (a, b), one sort each, no aggregate") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{InputAdapter, SortExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case i: InputAdapter => unwrap(i.child)
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case other => other
+    }
+    // the build crosses into RDD space twice (the pair walk, then the
+    // multiplicity count), so its stages are three query executions: the
+    // order-sorted feed, the (a, b)-sorted pair stream, and the count's scan
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val li = Tables.lineitem(spark, sfDir)
+      val pairs = Graph.coPurchasePairs(li)
+      val stages = Seq(Graph.orderPartsSorted(li), Graph.pairsSorted(pairs),
+        Graph.repeatedPairs(pairs, 2)).map(_.queryExecution.executedPlan)
+      val text = stages.map(_.toString).mkString("\n")
+      assert(!text.contains("Aggregate"), text.take(4000)) // no (Object)HashAggregate at all
+      val exchanges = stages.flatMap(_.collect { case e: ShuffleExchangeExec => e })
+      val keys = exchanges.map(_.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        case other => fail(s"not a hash exchange: $other")
+      })
+      assert(keys == Seq(Seq("ok"), Seq("a", "b")), text.take(4000))
+      val sorts = stages.flatMap(_.collect { case s: SortExec => s })
+      assert(sorts.size == 2, text.take(4000))
+      assert(sorts.map(s => unwrap(s.child)) == exchanges, text.take(4000))
+      assert(stages(2).toString.contains("Scan ExistingRDD"), stages(2).toString)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("cc loop path: checkpoint-truncated labels, equi-joins only") {
     import spark.implicits._
     // the partition-scaling fallback must still end on a materialized

@@ -153,26 +153,39 @@ class TextDedupSpec extends SparkSpec {
     assert(trainFrac > 0.8 && trainFrac < 0.98, s"train fraction $trainFrac")
   }
 
-  test("pairsCol emits all C(n,2) ordered pairs") {
+  /** Driver-side reference: every C(n,2) pair (a, b), a < b, of the
+    * distinct non-null ids. */
+  private def pairsReference(ids: Seq[java.lang.Long]): Seq[(Long, Long)] =
+    ids.filter(_ != null).map(_.longValue).distinct.sorted
+      .combinations(2).map { case Seq(a, b) => (a, b) }.toSeq
+
+  test("sortedLongPairs kernel emits all C(n,2) ordered pairs") {
     import spark.implicits._
-    import graft.functions.GraftFunctions.pairsCol
-    val df = Seq(Tuple1(Seq(1L, 2L, 3L, 4L))).toDF("ids")
-    val pairs = df.select(explode(pairsCol(col("ids"))).as("p"))
-      .select("p.a", "p.b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)))
+    import graft.functions.GraftFunctions.sortedLongPairsKernel
+    val lists = Seq(Seq(1L, 2L, 3L, 4L), Seq.empty[Long], Seq(7L), (1L to 20L).map(_ * 37 % 101))
+    val df = lists.zipWithIndex.map { case (ids, k) => (k, ids) }.toDF("k", "ids")
+    val got = df.select(col("k"), explode(sortedLongPairsKernel(col("ids"))).as("p"))
+      .select("k", "p.a", "p.b").collect().toSeq
+      .groupBy(_.getInt(0)).map { case (k, rs) => k -> rs.map(r => (r.getLong(1), r.getLong(2))).sorted }
+    assert(got(0).toSet == Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)))
+    lists.zipWithIndex.foreach { case (ids, k) =>
+      assert(got.getOrElse(k, Seq.empty) == pairsReference(ids.map(Long.box)), s"list $k")
+    }
   }
 
-  test("sortedLongPairs kernel == pairsCol on sorted input; sorts, dedups, drops nulls") {
+  test("sortedLongPairs kernel == driver-side C(n,2) reference; sorts, dedups, drops nulls") {
     import spark.implicits._
     import graft.functions.GraftFunctions.sortedLongPairsKernel
     // unsorted with a null AND a duplicate: kernel sorts a copy, drops the
     // null, and collapses the duplicate — no (3,3) self-pair can escape
-    val df = Seq(Tuple1(Seq[java.lang.Long](4L, 1L, null, 3L, 2L, 3L))).toDF("ids")
+    val ids = Seq[java.lang.Long](4L, 1L, null, 3L, 2L, 3L)
+    val df = Seq(Tuple1(ids)).toDF("ids")
     val rows = df.select(explode(sortedLongPairsKernel(col("ids"))).as("p"))
       .select("p.a", "p.b").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rows.length == 6) // exactly C(4,2) — duplicate emitted no extras
     val pairs = rows.toSet
     assert(pairs == Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)))
+    assert(rows.sorted.toSeq == pairsReference(ids))
     // every pair canonical (a < b) — in particular no self-pairs
     pairs.foreach { case (a, b) => assert(a < b) }
   }

@@ -2,6 +2,7 @@ package graft
 
 import graft.ops._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
 
 class TextDedupSpec extends SparkSpec {
 
@@ -173,9 +174,21 @@ class TextDedupSpec extends SparkSpec {
     }
   }
 
-  test("sortedLongPairs kernel == driver-side C(n,2) reference; sorts, dedups, drops nulls") {
+  /** Column-level reference: all pairs (a, b) with a before b in array
+    * order, by higher-order functions (the pre-kernel composition). On a
+    * sorted distinct array it must agree with the kernel exactly. */
+  private def pairsCol(ids: Column): Column =
+    flatten(transform(ids, (x, i) =>
+      transform(slice(ids, i + 2, size(ids)), y => struct(x.as("a"), y.as("b")))))
+
+  test("sortedLongPairs kernel == pairsCol on sorted input; sorts, dedups, drops nulls") {
     import spark.implicits._
     import graft.functions.GraftFunctions.sortedLongPairsKernel
+    // on sorted distinct input the kernel and the HOF composition agree
+    val sorted = Seq(Tuple1((1L to 20L).map(_ * 37 % 101).sorted)).toDF("ids")
+    def pairsOf(c: Column) = sorted.select(explode(c).as("p"))
+      .select("p.a", "p.b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairsOf(sortedLongPairsKernel(col("ids"))) == pairsOf(pairsCol(col("ids"))))
     // unsorted with a null AND a duplicate: kernel sorts a copy, drops the
     // null, and collapses the duplicate — no (3,3) self-pair can escape
     val ids = Seq[java.lang.Long](4L, 1L, null, 3L, 2L, 3L)
